@@ -29,6 +29,29 @@ object Sessions {
     */
   val ObjectHashFallbackGroups = 262144
 
+  /** Capacity of Spark's JVM-wide generated-class cache (set in
+    * `builder`; Spark's default is 100 entries). Every miss is a Janino
+    * compile plus a freshly loaded class that HotSpot JITs from scratch.
+    * The cache keys on the generated source and the compiling thread's
+    * class loader, so most operators take two entries (driver thread and
+    * task thread). At the default each pass evicted what the next one
+    * needed: a warm benchmark pass recompiled 140–160 classes.
+    *
+    * The bound covers the `SparkEntry.queries` surface, not the data: one
+    * pass of all 128 queries compiles 1,640 entries at sf0.001 and 1,630
+    * at sf0.1 (`CodegenMetrics.METRIC_COMPILATION_TIME` count in a fresh
+    * JVM); 4096 leaves 2.5× headroom for new queries and AQE plan
+    * variants. Cost, measured after that pass at sf0.001 and two full GCs
+    * against a 100-entry run of the same pass: +47 MB heap (each key
+    * holds its full generated source) and +15 MB metaspace and class
+    * space, about 37 KB per entry, so ≈150 MB if the cache ever fills.
+    *
+    * Static conf: Spark sizes the cache once per JVM, from `SQLConf.get`
+    * when `CodeGenerator` is first loaded, so it must be set here on the
+    * builder — `spark.conf.set` after start has no effect.
+    */
+  val CodegenCacheEntries = 4096
+
   /** Configured builder; callers add master-specific overrides then
     * `getOrCreate()`.
     */
@@ -40,6 +63,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         ObjectHashFallbackGroups.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     // A/B experiment knob: "key=value;key=value" applied last, so config
     // hypotheses (AQE on/off, thresholds) can be measured without code
     // edits. Unset in normal operation — the committed defaults above are

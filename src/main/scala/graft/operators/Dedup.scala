@@ -856,6 +856,21 @@ object Dedup {
     */
   private[graft] val PropagateUnionFindMaxEdges = 4000000L
 
+  /** Whether the union-find fast path may run: the symmetrized edge count
+    * plus `nVerts` self-edges ≤ PropagateUnionFindMaxEdges. `countSym`
+    * (a Spark job) runs only when the vertex count cannot decide alone:
+    * a graph with nVerts² ≤ bound has at most nVerts² - nVerts
+    * symmetrized edges and always fits; nVerts > bound never fits. The
+    * arithmetic cannot overflow — nVerts is ≤ bound before it is squared,
+    * and the edge test subtracts rather than adds.
+    */
+  private[graft] def unionFindFits(nVerts: Long, countSym: () => Long): Boolean = {
+    val max = PropagateUnionFindMaxEdges
+    if (nVerts > max) false
+    else if (nVerts * nVerts <= max) true
+    else countSym() <= max - nVerts
+  }
+
   private[graft] def propagateMinLabels(verts: DataFrame, sym0: DataFrame): DataFrame = {
     // localCheckpoint (eager) both materializes the round's labels AND
     // truncates lineage — without it each round's plan stacks on the last
@@ -877,10 +892,8 @@ object Dedup {
     // of set/restore keeps concurrent queries on the caller's session
     // planning under their own conf.
     val base = sym0.sparkSession
-    val sess = org.apache.spark.sql.GraftBridge.cloneSession(base)
     val vertsD = org.apache.spark.sql.GraftBridge.inSession(
-      verts.distinct().withColumn("component_id", col("doc_id")), sess)
-    val sym = org.apache.spark.sql.GraftBridge.inSession(sym0, sess)
+      verts.distinct().withColumn("component_id", col("doc_id")), base)
     val nVerts = vertsD.count()
     // r22 SMALL-GRAPH FAST PATH: below UnionFindMaxEdges the whole edge
     // list fits one aggregation buffer, so a single-group run of the
@@ -895,13 +908,13 @@ object Dedup {
     // optimization, not a scalability claim. Job trims: nVerts² ≤ bound
     // makes the edge count provably safe without the sym.count() job,
     // and the fast path reads the tiny vertex relation twice instead of
-    // paying the loop's seed checkpoint.
-    val nSym =
-      if (nVerts * nVerts <= PropagateUnionFindMaxEdges) 0L
-      else if (nVerts <= PropagateUnionFindMaxEdges) sym.count()
-      else Long.MaxValue
-    if (nSym + nVerts <= PropagateUnionFindMaxEdges) {
-      val out = sym.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    // paying the loop's seed checkpoint. The fast path sets no conf, so
+    // it runs in the caller's session, not the loop's clone: each cloned
+    // session gets its own executor class loader, Spark's codegen cache
+    // keys on that loader, and a clone per call recompiled every class
+    // its jobs ran (20 per warm q112 pass at sf0.1).
+    if (unionFindFits(nVerts, () => sym0.count())) {
+      val out = sym0.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .union(vertsD.select(col("doc_id").as("a"), col("doc_id").as("b")))
         .agg(graft.functions.ComponentsAggregator
           .minLabelComponents(col("a"), col("b")).as("ls"))
@@ -909,13 +922,16 @@ object Dedup {
         .select(col("l._1").as("doc_id"), col("l._2").as("component_id"))
         .localCheckpoint()
       if (sys.env.contains("GRAFT_PROP_DEBUG"))
-        println(s"[prop] union-find fast path: $nVerts verts, $nSym sym edges")
-      return org.apache.spark.sql.GraftBridge.inSession(out, base)
+        println(s"[prop] union-find fast path: $nVerts verts")
+      return out
     }
+    val sess = org.apache.spark.sql.GraftBridge.cloneSession(base)
+    val sym = org.apache.spark.sql.GraftBridge.inSession(sym0, sess)
     val loopParts = math.max(1L, (nVerts + 499999L) / 500000L).toString
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     sess.conf.set("spark.sql.shuffle.partitions", loopParts)
-    var labels = vertsD.localCheckpoint()
+    var labels = org.apache.spark.sql.GraftBridge.inSession(vertsD, sess)
+      .localCheckpoint()
     var converged = false
     var rounds = 0
     val maxRounds = 50 // component diameter bound; near-dup clusters are tiny

@@ -713,4 +713,23 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === aqeBefore)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === partsBefore)
   }
+
+  test("unionFindFits: the 4M-edge gate at its edges, overflow-safe far above") {
+    val max = Dedup.PropagateUnionFindMaxEdges
+    val noCount = () => fail("vertex count alone decides; sym.count() must not run")
+    assert(Dedup.unionFindFits(0L, noCount))
+    // nVerts² ≤ bound: no edge count needed
+    assert(Dedup.unionFindFits(2000L, noCount))
+    // between √bound and bound the edge count decides, at sum == bound
+    assert(Dedup.unionFindFits(2001L, () => max - 2001L))
+    assert(!Dedup.unionFindFits(2001L, () => max - 2000L))
+    assert(Dedup.unionFindFits(max, () => 0L))
+    assert(!Dedup.unionFindFits(max, () => 1L))
+    // above the bound: never, and never counted — nVerts² and nSym + nVerts
+    // used to wrap negative here and admit any large graph
+    assert(!Dedup.unionFindFits(max + 1L, noCount))
+    assert(!Dedup.unionFindFits(3100000000L, noCount))
+    assert(!Dedup.unionFindFits(Long.MaxValue / 2, noCount))
+    assert(!Dedup.unionFindFits(Long.MaxValue, noCount))
+  }
 }
