@@ -9,24 +9,41 @@ import org.apache.spark.sql.SparkSession
   */
 object Caches {
 
+  /** Every per-(session, dir) cache map, by the name the audit tools print. */
   private def maps = Seq(
-    operators.TokenPipeline.cache, operators.TokenPipeline.dictCache,
-    operators.TokenPipeline.statsCache,
-    operators.Dedup.cache, operators.Dedup.dfCache, operators.Dedup.sigCache,
-    operators.Dedup.clusterCache, operators.Dedup.repsCache,
-    operators.Dedup.fpCache, operators.Dedup.cappedCache,
-    operators.Dedup.pairsCache, operators.Dedup.simhashSigCache,
-    operators.Dedup.embRepCache, operators.Dedup.embPairsCache,
-    operators.Similarity.idxCache, operators.Similarity.knnMemo,
-    operators.Sketches.bitsCache, operators.Sketches.bloomMemo,
-    operators.Sketches.benchBitsCache, operators.Sketches.multiBloomMemo,
-    operators.Sketches.multiBenchFpMemo, operators.Sketches.cmsGridCache,
-    operators.Sketches.evalShCache,
-    operators.TextAnalysis.srcTokCache, operators.TextAnalysis.rawTokCache,
-    operators.TextAnalysis.splitCache, operators.TextAnalysis.rawCountsCache,
-    operators.TextAnalysis.tfidfCache, operators.TextAnalysis.dsirCache,
-    operators.TextAnalysis.dsirWtCache, operators.TextAnalysis.bigramCache,
-    operators.TextAnalysis.verdictCache, operators.Packing.placementCache)
+    "TokenPipeline.cache" -> operators.TokenPipeline.cache,
+    "TokenPipeline.dictCache" -> operators.TokenPipeline.dictCache,
+    "TokenPipeline.statsCache" -> operators.TokenPipeline.statsCache,
+    "Dedup.cache" -> operators.Dedup.cache,
+    "Dedup.dfCache" -> operators.Dedup.dfCache,
+    "Dedup.sigCache" -> operators.Dedup.sigCache,
+    "Dedup.clusterCache" -> operators.Dedup.clusterCache,
+    "Dedup.repsCache" -> operators.Dedup.repsCache,
+    "Dedup.fpCache" -> operators.Dedup.fpCache,
+    "Dedup.cappedCache" -> operators.Dedup.cappedCache,
+    "Dedup.pairsCache" -> operators.Dedup.pairsCache,
+    "Dedup.simhashSigCache" -> operators.Dedup.simhashSigCache,
+    "Dedup.embRepCache" -> operators.Dedup.embRepCache,
+    "Dedup.embPairsCache" -> operators.Dedup.embPairsCache,
+    "Similarity.idxCache" -> operators.Similarity.idxCache,
+    "Similarity.knnMemo" -> operators.Similarity.knnMemo,
+    "Sketches.bitsCache" -> operators.Sketches.bitsCache,
+    "Sketches.bloomMemo" -> operators.Sketches.bloomMemo,
+    "Sketches.benchBitsCache" -> operators.Sketches.benchBitsCache,
+    "Sketches.multiBloomMemo" -> operators.Sketches.multiBloomMemo,
+    "Sketches.multiBenchFpMemo" -> operators.Sketches.multiBenchFpMemo,
+    "Sketches.cmsGridCache" -> operators.Sketches.cmsGridCache,
+    "Sketches.evalShCache" -> operators.Sketches.evalShCache,
+    "TextAnalysis.srcTokCache" -> operators.TextAnalysis.srcTokCache,
+    "TextAnalysis.rawTokCache" -> operators.TextAnalysis.rawTokCache,
+    "TextAnalysis.splitCache" -> operators.TextAnalysis.splitCache,
+    "TextAnalysis.rawCountsCache" -> operators.TextAnalysis.rawCountsCache,
+    "TextAnalysis.tfidfCache" -> operators.TextAnalysis.tfidfCache,
+    "TextAnalysis.dsirCache" -> operators.TextAnalysis.dsirCache,
+    "TextAnalysis.dsirWtCache" -> operators.TextAnalysis.dsirWtCache,
+    "TextAnalysis.bigramCache" -> operators.TextAnalysis.bigramCache,
+    "TextAnalysis.verdictCache" -> operators.TextAnalysis.verdictCache,
+    "Packing.placementCache" -> operators.Packing.placementCache)
 
   /** The RESULT-MEMO subset of [[maps]] (detection/search outputs evicted
     * per bench pass by [[clearResultMemos]]); everything else in maps is
@@ -48,9 +65,50 @@ object Caches {
     */
   def indexKeys(spark: SparkSession, dir: String): Set[String] = {
     val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + dir
-    maps.filterNot(m => resultMaps.exists(_ eq m))
+    maps.map(_._2).filterNot(m => resultMaps.exists(_ eq m))
       .flatMap(_.keys.filter(k => k == key || k.startsWith(key + "#")))
       .toSet
+  }
+
+  /** Broadcasts each cached artifact of (`spark`, `dir`) keeps alive, as
+    * ("Object.map[#param]", count), for artifacts that are present. A
+    * persisted relation keeps its physical plan while it stays cached, AQE's
+    * final plan included, so every broadcast exchange or broadcast query
+    * stage in that plan pins its hash relation: at least one Tungsten page
+    * each, which the storage counters (`getRDDStorageInfo`) do not see.
+    * Entries the cache manager does not hold (checkpoint-backed relations)
+    * are read from their own executed plan. Another artifact scanned inside
+    * a plan is counted under its own name, not again. Read-only: it walks
+    * existing plans and runs no job.
+    */
+  def retainedBroadcasts(spark: SparkSession, dir: String): Seq[(String, Int)] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      BroadcastQueryStageExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case s: BroadcastQueryStageExec => 1 + s.plan.children.map(count).sum
+      case s: QueryStageExec => count(s.plan)
+      case b: BroadcastExchangeLike => 1 + b.children.map(count).sum
+      case _: InMemoryTableScanExec => 0
+      case _ => (p.children ++ p.subqueries).map(count).sum
+    }
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + dir
+    for {
+      (name, m) <- maps
+      (k, df) <- m.toSeq.sortBy(_._1)
+      if k == key || k.startsWith(key + "#")
+    } yield {
+      val plan = cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .map(_.cachedRepresentation.cacheBuilder.cachedPlan)
+        .getOrElse(df.queryExecution.executedPlan)
+      (name + k.stripPrefix(key), count(plan))
+    }
   }
 
   /** Unpersist and drop every cached relation belonging to `spark`
@@ -128,7 +186,7 @@ object Caches {
     // without this the next storedPlacement call re-adopts placement built
     // from the dir's OLD contents (review r18)
     operators.Packing.deleteStoredPlacementFor(key)
-    maps.foreach { m =>
+    maps.foreach { case (_, m) =>
       // exact dir entries plus parameterized ones keyed "…#dir#<param>"
       // (cappedShingles) — both go stale when the dir's contents change
       m.keys.filter(k => k == key || k.startsWith(key + "#"))
@@ -144,7 +202,7 @@ object Caches {
     val prefix = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#"
     operators.Packing.placementCache.keys.filter(_.startsWith(prefix))
       .foreach(operators.Packing.deleteStoredPlacementFor)
-    maps.foreach { m =>
+    maps.foreach { case (_, m) =>
       m.keys.filter(_.startsWith(prefix)).foreach { k =>
         m.remove(k).foreach(free)
       }
@@ -160,7 +218,7 @@ object Caches {
     operators.Packing.placementCache.keys
       .foreach(k => try operators.Packing.deleteStoredPlacementFor(k)
         catch { case _: Throwable => () })
-    maps.foreach { m =>
+    maps.foreach { case (_, m) =>
       m.keys.foreach(k => m.remove(k).foreach(df =>
         try free(df) catch { case _: Throwable => () }))
     }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * per (session, dir) — the round-6 cache-budget check. For each cache-
   * building query, materializes it and prints the storage DELTA (new
   * cached RDDs and their memory/disk bytes), so each relation's cost is
-  * attributed. Results go in BASELINE-notes.md.
+  * attributed, beside the broadcasts each newly cached artifact's plan
+  * retains (`Caches.retainedBroadcasts`): each pins at least one Tungsten
+  * page of heap that the storage delta does not show.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.dev.CacheAudit
   */
@@ -18,8 +20,10 @@ object CacheAudit {
     import graft.operators._
 
     var seen = Set.empty[Int]
+    var seenArtifacts = Set.empty[String]
     var totalMem = 0L
     var totalDisk = 0L
+    var totalBroadcasts = 0
     def step(label: String)(f: => Long): Unit = {
       f
       val infos = spark.sparkContext.getRDDStorageInfo.filterNot(i => seen(i.id))
@@ -27,11 +31,19 @@ object CacheAudit {
       val mem = infos.map(_.memSize).sum
       val disk = infos.map(_.diskSize).sum
       totalMem += mem; totalDisk += disk
-      println(f"CACHEAUDIT $label%-28s mem=${mem / 1024}%8d KiB disk=${disk / 1024}%6d KiB rdds=${infos.length}")
+      val added = graft.Caches.retainedBroadcasts(spark, sfDir)
+        .filterNot { case (name, _) => seenArtifacts(name) }
+      val broadcasts = added.map(_._2).sum
+      seenArtifacts ++= added.map(_._1)
+      totalBroadcasts += broadcasts
+      println(f"CACHEAUDIT $label%-28s mem=${mem / 1024}%8d KiB disk=${disk / 1024}%6d KiB " +
+        f"rdds=${infos.length}%2d broadcasts=$broadcasts%2d " +
+        added.map { case (n, b) => s"$n=$b" }.mkString("[", " ", "]"))
     }
 
     step("docTokenCounts (hub)")(TokenPipeline.docTokenCounts(spark, sfDir).count())
     step("tokenDictionary")(TokenPipeline.tokenDictionary(spark, sfDir).count())
+    step("docAggregates")(TokenPipeline.docAggregates(spark, sfDir).count())
     step("shingles")(Dedup.shingles(spark, sfDir).count())
     step("minhashSignatures")(Dedup.minhashSignatures(spark, sfDir).count())
     step("fingerprints (via q21)")(Dedup.exactDedup(spark, sfDir).count())
@@ -40,6 +52,7 @@ object CacheAudit {
     step("srcTokens (via q63)")(TextAnalysis.sourceOverlap(spark, sfDir).count())
     step("rawTokens (via q70)")(TextAnalysis.collocations(spark, sfDir).count())
     println(f"CACHEAUDIT TOTAL mem=${totalMem / 1024} KiB disk=${totalDisk / 1024} KiB " +
+      s"broadcasts=$totalBroadcasts " +
       f"(storage pool ≈ ${spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 1024 / 1024} MiB)")
     spark.stop()
   }

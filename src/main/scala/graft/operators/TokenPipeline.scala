@@ -17,9 +17,14 @@ import graft.functions.TextFns
   * The reference's global mutable stores (allTokensMap, tokenRefs — a
   * channel-serialized map, concurrentMap.go:31–122) become shuffles; its
   * O(docs × vocab) dense vector sweep (main.go:225–231) becomes an O(nnz)
-  * join. Both membership filters broadcast (the dictionary is ~236k words
-  * in the reference — comfortably broadcastable; were it not, the same
-  * code degrades gracefully to a shuffled semi-join).
+  * join. The membership filters take one of two forms. Literal word lists
+  * (the cached hub, docTokenCounts) are `isin` predicates, which Spark
+  * plans as InSet (a codegen'd hash-set lookup; In below ten values).
+  * DataFrame word lists (docTokenCountsWith, up to the reference's
+  * ~236k-word dictionary) are broadcast semi/anti joins. The hub must not
+  * broadcast: a persisted artifact keeps its physical plan, so a broadcast
+  * inside it pins a hash relation of at least one Tungsten page for the
+  * artifact's lifetime.
   */
 object TokenPipeline {
 
@@ -38,11 +43,6 @@ object TokenPipeline {
     "scan", "slow", "small", "sort", "spark", "stream", "table", "value",
     "vector", "window", "the", "a")
 
-  def wordDf(spark: SparkSession, words: Seq[String]): DataFrame = {
-    import spark.implicits._
-    words.toDF("token")
-  }
-
   /** Exploded (doc_id, token) before any membership filtering. */
   def rawTokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(TextFns.tokenize(col("text"))).as("token"))
@@ -54,7 +54,9 @@ object TokenPipeline {
     * Sources.readWordList or any other source). Both are broadcast: a
     * 236k-word list is a few MB. Were the dictionary ever too big to
     * broadcast, removing the hint degrades gracefully to a shuffled
-    * semi-join with no semantic change.
+    * semi-join with no semantic change. Do not persist the result: the
+    * cached plan would keep both broadcast hash relations alive (see
+    * docTokenCounts for the literal-list form that caches safely).
     */
   def docTokenCountsWith(docs: DataFrame, dictionary: DataFrame,
       stopWords: DataFrame): DataFrame =
@@ -81,11 +83,20 @@ object TokenPipeline {
     * anti-join (O12); qty = occurrences in doc (O14). Cached per (session,
     * dir). Uses the literal word lists (the synthetic corpus's vocabulary);
     * production callers use docTokenCountsWith / docTokenCountsFromFiles.
+    *
+    * Membership is tested with `isin` (planned as InSet/In), not the
+    * broadcast joins of docTokenCountsWith. The persisted relation keeps its
+    * physical plan for its whole lifetime, and a string-keyed broadcast hash
+    * relation allocates at least one Tungsten page (about 32 MB at -Xmx4g,
+    * local[4]) however few words it holds. Rows are identical: exploded
+    * tokens are never null, and for a non-null key an equi semi-join is IN
+    * and an equi anti-join is NOT IN.
     */
   def docTokenCounts(spark: SparkSession, dir: String): DataFrame =
     cache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-      docTokenCountsWith(Tables.documents(spark, dir),
-        wordDf(spark, Dictionary), wordDf(spark, StopWords))
+      rawTokens(Tables.documents(spark, dir))
+        .filter(col("token").isin(Dictionary: _*) && !col("token").isin(StopWords: _*))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("qty"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     })
 

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 /** Reference-scale word-list files, generated deterministically.
   *
@@ -24,7 +25,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * Files land under /tmp (stable absolute path — the oracle SQL embeds
   * it) and are written atomically (temp + move) so a concurrent Verify /
   * Bench / test can never observe a half-written list; an existing file
-  * with the right line count is reused.
+  * with the right line count is reused. A file is line-counted once per
+  * JVM: later calls re-count only when its size or mtime has changed.
   */
 object WordListFixtures {
   /** Reference `en` dictionary line count. */
@@ -35,19 +37,31 @@ object WordListFixtures {
   val DictPath = "/tmp/graft-wordlists/dict_en.txt"
   val StopPath = "/tmp/graft-wordlists/stop_en.txt"
 
+  /** (size, mtime) of each file this JVM has written or line-counted, by
+    * path. q101 calls ensure() once per build; re-counting 236k lines each
+    * time costs more than the check is worth while the file is unchanged.
+    * Guarded by ensure()'s lock.
+    */
+  private val verified = scala.collection.mutable.Map.empty[Path, (Long, FileTime)]
+
+  private def stamp(p: Path): (Long, FileTime) = (Files.size(p), Files.getLastModifiedTime(p))
+
   private def writeAtomic(target: Path, lines: Seq[String]): Unit = {
     Files.createDirectories(target.getParent)
     val tmp = Files.createTempFile(target.getParent, target.getFileName.toString, ".tmp")
     Files.write(tmp, String.join("\n", lines: _*).getBytes("UTF-8"))
     Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
+    verified(target) = stamp(target)
   }
 
   private def upToDate(target: Path, lines: Int): Boolean =
-    Files.exists(target) && {
+    Files.exists(target) && (verified.get(target).contains(stamp(target)) || {
       val src = scala.io.Source.fromFile(target.toFile, "UTF-8")
-      try src.getLines().size == lines finally src.close()
-    }
+      val ok = try src.getLines().size == lines finally src.close()
+      if (ok) verified(target) = stamp(target)
+      ok
+    })
 
   /** Generate (if absent) and return (dictPath, stopPath). */
   def ensure(): (String, String) = synchronized {

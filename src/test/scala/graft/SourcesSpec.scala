@@ -251,6 +251,21 @@ class SourcesSpec extends AnyFunSuite {
     assert(missing.getMessage.contains("does not exist"))
   }
 
+  test("WordListFixtures.ensure regenerates a word list truncated after it was verified") {
+    import graft.sources.WordListFixtures
+    def lines(p: String) =
+      { val s = scala.io.Source.fromFile(p); try s.getLines().size finally s.close() }
+    val (_, stop) = WordListFixtures.ensure()
+    assert(lines(stop) === WordListFixtures.StopLines)
+    val path = java.nio.file.Paths.get(stop)
+    val bytes = java.nio.file.Files.readAllBytes(path)
+    java.nio.file.Files.write(path, bytes.take(bytes.length / 2))
+    assert(lines(stop) < WordListFixtures.StopLines)
+    WordListFixtures.ensure()
+    assert(lines(stop) === WordListFixtures.StopLines)
+    assert(java.nio.file.Files.readAllBytes(path).sameElements(bytes))
+  }
+
   test("word-list text source lowercases like the reference dictionary load") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_words")
     java.nio.file.Files.writeString(tmp.resolve("en.txt"), "Alpha\nBETA\ngamma\n")

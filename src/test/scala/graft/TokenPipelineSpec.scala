@@ -101,6 +101,33 @@ class TokenPipelineSpec extends AnyFunSuite {
       .count() === 0)
   }
 
+  test("etl INDEX artifacts retain no broadcast in their cached plans") {
+    // a persisted artifact keeps its physical plan; a broadcast inside it
+    // would pin a hash relation (at least one Tungsten page) for as long
+    // as the artifact stays cached
+    TokenPipeline.docTokenCounts(spark, sf).count()
+    TokenPipeline.tokenDictionary(spark, sf).count()
+    TokenPipeline.docAggregates(spark, sf).count()
+    val held = Caches.retainedBroadcasts(spark, sf).toMap
+    Seq("TokenPipeline.cache", "TokenPipeline.dictCache", "TokenPipeline.statsCache")
+      .foreach(n => assert(held.get(n) === Some(0), s"$n: ${held.get(n)} broadcasts"))
+    // the helper does see pinned broadcasts: the DataFrame-list form,
+    // persisted under a throwaway key, holds one per membership join
+    val probe = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + sf + "#probe"
+    val pinned = TokenPipeline.docTokenCountsWith(Tables.documents(spark, sf),
+      TokenPipeline.Dictionary.toDF("token"), TokenPipeline.StopWords.toDF("token"))
+      .persist()
+    try {
+      pinned.count()
+      TokenPipeline.cache.put(probe, pinned)
+      assert(Caches.retainedBroadcasts(spark, sf).toMap.get("TokenPipeline.cache#probe")
+        === Some(2))
+    } finally {
+      TokenPipeline.cache.remove(probe)
+      pinned.unpersist()
+    }
+  }
+
   test("tokenVectorString renders tokenVectorMap entry-for-entry") {
     val fromMap = TokenPipeline.tokenVectorMap(spark, sf)
       .select($"doc_id",
