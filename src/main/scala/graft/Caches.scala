@@ -211,6 +211,7 @@ object Caches {
       .foreach(operators.Dedup.repFlagCache.remove)
     operators.TextAnalysis.mergeMemo.keys.filter(_.startsWith(prefix))
       .foreach(operators.TextAnalysis.mergeMemo.remove)
+    Tables.schemaMemo.keys.filter(_.startsWith(prefix)).foreach(Tables.schemaMemo.remove)
   }
 
   /** Drop every entry in every cache (test/teardown hammer). */
@@ -224,5 +225,6 @@ object Caches {
     }
     operators.Dedup.repFlagCache.clear()
     operators.TextAnalysis.mergeMemo.clear()
+    Tables.schemaMemo.clear()
   }
 }

@@ -1,17 +1,56 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated test data
-  * (see /root/repo/TESTDATA.md). One loader per table; schemas are
-  * whatever the parquet footers declare — we never infer beyond that.
+  * (see TESTDATA.md). One loader per table; schemas are whatever the
+  * parquet footers declare — we never infer beyond that.
   *
   * At 100 TB these would be partitioned/bucketed external tables; the
   * loaders stay the single choke point where that changes.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Footer-inferred schemas by (session, path, file stamp, reader confs).
+    * Inference is a one-task Spark job (`mergeSchemasInParallel`) per
+    * `spark.read.parquet`; a memo hit reads with the schema supplied and
+    * launches none. The stamp lists the table's files (name, length,
+    * mtime), so a table rewritten in place — new part files — misses and
+    * is inferred afresh. Only these read-only inputs go through here:
+    * program-written stores read elsewhere infer on every read.
+    */
+  private[graft] val schemaMemo = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
+  /** The parquet reader confs that change what inference returns. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (name, length, mtime) of every file at `path`; "" when it does not
+    * exist, so the read itself reports the missing path as before.
+    */
+  private def fileStamp(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try fs.listStatus(p).toSeq
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").sorted.mkString(",")
+    catch { case _: java.io.FileNotFoundException => "" }
+  }
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = Seq(org.apache.spark.sql.GraftBridge.sessionKey(spark), path,
+      fileStamp(spark, path), SchemaConfs.map(c => spark.conf.getOption(c)).mkString(","))
+      .mkString("#")
+    schemaMemo.get(key) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemaMemo.putIfAbsent(key, df.schema)
+        df
+    }
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame    = load(spark, dir, "orders")

@@ -4,8 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar text functions of the reference pipeline, as pure Catalyst
-  * column expressions (no UDFs — everything stays inside whole-stage
-  * codegen).
+  * column expressions (no UDFs). `cleanText`, `tokenize`, `countSubstr`
+  * and `parentPath` compile inside whole-stage codegen. `pagePath` and
+  * `shingleArray` use `transform`, whose ArrayTransform is a
+  * CodegenFallback in Spark 4.1 (as are ArraySort and ArrayFilter): the
+  * stage still compiles, but that expression is evaluated interpreted,
+  * row by row.
   *
   * Reference semantics (jbohanon/capstone-etl):
   *  - clean:       /root/reference/main.go:285–297 — keep only [a-zA-Z0-9 ]
@@ -24,11 +28,12 @@ object TextFns {
 
   /** Lowercase + split on spaces, dropping empty tokens. Equivalent to Go
     * strings.Fields(strings.ToLower(s)) on single-space text; splitting on
-    * a literal space then filtering empties also matches runs of spaces,
+    * a literal space then removing empties also matches runs of spaces,
     * and mirrors the DuckDB oracle (string_split + filter) exactly.
+    * `array_remove` is codegen'd, unlike a `filter` lambda.
     */
   def tokenize(c: Column): Column =
-    filter(split(lower(cleanText(c)), " "), t => length(t) > 0)
+    array_remove(split(lower(cleanText(c)), " "), "")
 
   /** Number of (non-overlapping) occurrences of a literal substring
     * (reference main.go:192: strings.Count(body_html, "href=\"h")).

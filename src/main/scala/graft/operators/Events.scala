@@ -15,6 +15,11 @@ import graft.Tables
   * on integer epoch-micros so there is no float or timezone dependence.
   * Window boundaries surface as formatted strings.
   *
+  * Money: every sum of `value` goes through Relational's integer-unit
+  * kernel (dsum2 / moneyUnits + fromUnits): exact, bit-identical to a
+  * DECIMAL(18,2) sum while |Σ units| < 2^53, and an ANSI overflow error
+  * past ±2^63 units instead of a wrapped total.
+  *
   * Scale: tumbling windows are a single hash aggregate on (window, type);
   * sessionization shuffles once on user_id and runs two narrow window
   * functions within each partition — both linear at 100 TB.
@@ -178,8 +183,9 @@ object Events {
     * user's event count and exact value sum over [ts − 1h, ts] — the
     * feature-engineering "activity in the last hour" column. A RANGE frame
     * on integer epoch-micros (not ROWS: peers at the same timestamp must
-    * all be in-frame, which both engines define identically); the sum is
-    * decimal-snapped so partial aggregation order can't wobble low bits.
+    * all be in-frame, which both engines define identically); the sum runs
+    * in exact integer units (Relational.moneyUnits) so the frame evaluation
+    * order can't wobble low bits.
     * Partitioned by user — each user's frame scan is independent, the
     * 100 TB shuffle key is user_id.
     */
@@ -191,8 +197,8 @@ object Events {
       .withColumn("ts_us", unix_micros(col("ts")))
       .select(col("user_id"), col("event_id"), col("ts_us"), col("value"))
       .withColumn("n_1h", count(lit(1)).over(w))
-      .withColumn("sum_1h", sum(col("value").cast("decimal(18,2)")).over(w)
-        .cast("double"))
+      .withColumn("sum_1h",
+        Relational.fromUnits(sum(Relational.moneyUnits(col("value"), 2)).over(w), 2))
       .select("user_id", "event_id", "ts_us", "n_1h", "sum_1h")
       .orderBy("user_id", "event_id")
   }
@@ -200,7 +206,8 @@ object Events {
   /** Exact per-group median (q69) without an engine median() — engines
     * disagree on interpolation, so both sides CONSTRUCT it: rank by
     * (value, event_id), pick the middle row (odd n) or the two middle
-    * rows (even n), average them through DECIMAL. One ranking window +
+    * rows (even n), average them through an exact integer-unit sum
+    * (Relational.dsum2). One ranking window +
     * one aggregate, partitioned by event_type.
     */
   def valueMedian(spark: SparkSession, dir: String): DataFrame = {
@@ -219,7 +226,7 @@ object Events {
         col("rn") * 2 === col("n") + 2)
       .groupBy("event_type")
       .agg(max("n").cast("long").as("n_events"),
-        (sum(col("value").cast("decimal(18,2)")).cast("double") / count(lit(1)))
+        (Relational.dsum2(col("value")) / count(lit(1)))
           .as("median_value"))
       .orderBy("event_type")
   }

@@ -62,7 +62,6 @@ object Hierarchy {
       .groupBy("parent_id")
       .agg(
         count(lit(1)).as("count_children"),
-        array_join(
-          transform(sort_array(collect_list(col("doc_id"))), x => x.cast("string")),
-          ",").as("child_ids"))
+        array_join(sort_array(collect_list(col("doc_id"))).cast("array<string>"), ",")
+          .as("child_ids"))
 }

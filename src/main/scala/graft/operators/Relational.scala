@@ -11,26 +11,78 @@ import graft.Tables
   * TPC-H-ish tables.
   *
   * Float determinism rule (SURVEY §7.5): any SUM over money-like doubles is
-  * computed over DECIMAL (exact, order-independent) and only then cast back
-  * to DOUBLE — a shuffled partial/final aggregate would otherwise produce
-  * run-dependent low bits and flake the oracle hash-compare.
+  * computed exactly (order-independent) and only then turned back into a
+  * DOUBLE — a shuffled partial/final aggregate would otherwise produce
+  * run-dependent low bits and flake the oracle hash-compare. The exact sum
+  * runs in integer units (`moneyUnits` → LONG sum → `fromUnits`), not
+  * over a per-row DECIMAL cast: it is bit-identical to the DECIMAL form
+  * (and to the oracle's) while |units| < 2^53, converts through DECIMAL
+  * above that, and a LONG overflow raises under ANSI mode (Spark 4's
+  * default) instead of wrapping.
   */
 object Relational {
 
+  /** Exact integer units of an s-decimal money double, per row:
+    * floor(x·10^s + 0.5) as LONG, NULL for NULL. Codegen'd arithmetic only:
+    * a double→DECIMAL cast runs `Double.toString` plus a BigDecimal parse
+    * per row, and Spark's `round()` on a double builds a BigDecimal too. For |x·10^s| < 2^50 the double product lies within a
+    * few ulps of the exact unit count, so the result equals the cast's
+    * HALF_UP rounding of x's shortest decimal form to s places; anything
+    * larger (or NaN/±Inf) raises rather than lose exactness.
+    */
+  def moneyUnits(c: Column, scale: Int): Column = {
+    val y = c * math.pow(10, scale) + 0.5
+    when(!(abs(y) < UnitsRowBound), raise_error(lit(
+      s"money value outside the exact integer-unit domain |x·10^$scale| < 2^50")))
+      .otherwise(floor(y))
+  }
+
+  /** A LONG unit sum back to the s-decimal double, once per output row.
+    * While |units| < 2^53 both operands of `units / 10^s` are exact
+    * doubles, so the IEEE quotient is the correctly rounded value of the
+    * exact decimal — the same double `Decimal.toDouble` yields. Above
+    * that bound the conversion goes through one exact DECIMAL multiply.
+    */
+  def fromUnits(units: Column, scale: Int): Column =
+    when(abs(units) < ExactDoubleUnits, units.cast("double") / math.pow(10, scale))
+      .otherwise((units.cast("decimal(19,0)") *
+        lit(java.math.BigDecimal.ONE.movePointLeft(scale))).cast("double"))
+
+  /** Exact order-independent sum of an s-decimal money column, as double:
+    * per-row integer units, a LONG sum (ANSI: overflow beyond ±2^63
+    * raises), one conversion per output row. Bit-identical to
+    * `sum(c.cast("decimal(18,s)")).cast("double")` on the documented
+    * domains. A window sum spells out the same three steps, with `.over`
+    * on the `sum`.
+    */
+  private def dsum(c: Column, scale: Int): Column =
+    fromUnits(sum(moneyUnits(c, scale)), scale)
+
   /** Exact order-independent sum of a 2-decimal double column, as double.
     * Contract: inputs must be exactly-2-decimal amounts (all money columns
-    * in this data are). For a double whose shortest decimal form has MORE
-    * digits, Spark's double→DECIMAL cast (string-based, HALF_UP) and
-    * DuckDB's (scaled-binary rounding) can disagree at an x.xx5 boundary —
-    * don't feed free-form doubles through this.
+    * in this data are — `MoneySpec` checks them) with
+    * |x| < 2^50 / 100; the LONG unit sum stays exact and bit-identical to
+    * the DECIMAL form while |Σ units| < 2^53 (≈ 9.0e13 in money) and
+    * converts through DECIMAL above it; a sum past ±2^63 units raises.
+    * For a double whose shortest decimal form has MORE digits, Spark's
+    * double→DECIMAL cast (string-based, HALF_UP) and DuckDB's
+    * (scaled-binary rounding) can disagree at an x.xx5 boundary — don't
+    * feed free-form doubles through this.
     */
-  def dsum2(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
+  def dsum2(c: Column): Column = dsum(c, 2)
 
   /** Exact sum of a ≤4-decimal product, as double. The per-row product is
     * done in double (bit-identical in any IEEE-754 engine), then snapped to
-    * its exact 4-decimal value before summing.
+    * its exact 4-decimal unit count before summing (|x| < 2^50 / 10^4 per
+    * row; exact double result while |Σ units| < 2^53, DECIMAL above).
     */
-  def dsum4(c: Column): Column = sum(c.cast("decimal(18,4)")).cast("double")
+  def dsum4(c: Column): Column = dsum(c, 4)
+
+  /** Per-row |x·10^s| bound of [[moneyUnits]]. */
+  private val UnitsRowBound: Double = math.pow(2, 50)
+
+  /** Unit sums below this convert to double by one exact division. */
+  private val ExactDoubleUnits: Long = 1L << 53
 
   /** orders ⋈ customer ⋈ nation with broadcast dims — shared by the
     * nation-grained queries.
@@ -82,8 +134,8 @@ object Relational {
       .orderBy("o_custkey", "rn")
   }
 
-  /** Running (cumulative) sum window; DECIMAL accumulator so the result is
-    * independent of the engine's frame-evaluation strategy.
+  /** Running (cumulative) sum window; exact integer-unit accumulator so
+    * the result is independent of the engine's frame-evaluation strategy.
     */
   def runningCustomerSpend(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy("o_custkey")
@@ -91,7 +143,7 @@ object Relational {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.orders(spark, dir)
       .withColumn("running_spend",
-        sum(col("o_totalprice").cast("decimal(18,2)")).over(w).cast("double"))
+        fromUnits(sum(moneyUnits(col("o_totalprice"), 2)).over(w), 2))
       .select("o_custkey", "o_orderkey", "running_spend")
       .orderBy("o_custkey", "o_orderkey")
   }
@@ -117,14 +169,14 @@ object Relational {
     // aggregate; the grid is ≤ |flags|·|statuses| rows, the Expand now
     // multiplies ~6 rows, and the base aggregate is a plain codegen'd
     // two-key hash aggregate with map-side partials. sum-of-partial-sums
-    // over DECIMAL is exact (integer arithmetic, no overflow below 1e36),
-    // so n_rows/sum_price are bit-identical to the direct rollup.
+    // over integer units is exact (LONG, ANSI overflow check), so
+    // n_rows/sum_price are bit-identical to the direct rollup.
     Tables.lineitem(spark, dir)
       .groupBy("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n0"),
-        sum(col("l_extendedprice").cast("decimal(18,2)")).as("s0"))
+        sum(moneyUnits(col("l_extendedprice"), 2)).as("u0"))
       .rollup("l_returnflag", "l_linestatus")
-      .agg(sum("n0").as("n_rows"), sum("s0").cast("double").as("sum_price"))
+      .agg(sum("n0").as("n_rows"), fromUnits(sum("u0"), 2).as("sum_price"))
       .select(
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
@@ -137,9 +189,9 @@ object Relational {
     Tables.lineitem(spark, dir)
       .groupBy("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n0"),
-        sum(col("l_quantity").cast("decimal(18,2)")).as("s0"))
+        sum(moneyUnits(col("l_quantity"), 2)).as("u0"))
       .cube("l_returnflag", "l_linestatus")
-      .agg(sum("n0").as("n_rows"), sum("s0").cast("double").as("sum_qty"))
+      .agg(sum("n0").as("n_rows"), fromUnits(sum("u0"), 2).as("sum_qty"))
       .select(
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),

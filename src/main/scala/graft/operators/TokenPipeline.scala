@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -168,6 +168,14 @@ object TokenPipeline {
       .select("token_id", "token", "doc_id", "qty")
       .orderBy("token_id", "doc_id")
 
+  /** Aggregate: the group's rendered strings `s` ordered by `key`, which
+    * must be unique within the group so `s` never decides the order.
+    * `sort_array` over structs and the array field read are codegen'd;
+    * `transform(array_sort(…))` is not (both are CodegenFallback).
+    */
+  private def rendered(key: Column, s: Column): Column =
+    sort_array(collect_list(struct(key.as("k"), s.as("s")))).getField("s")
+
   /** Posting lists as deterministic strings: token → "doc:qty,doc:qty,…"
     * sorted by doc_id (reference order is Go-map-nondeterministic,
     * main.go:156 — sorted order is our canonical contract, SURVEY §7.5).
@@ -177,11 +185,8 @@ object TokenPipeline {
       .groupBy("token")
       .agg(
         count(lit(1)).as("n_refs"),
-        array_join(
-          transform(
-            array_sort(collect_list(struct(col("doc_id"), col("qty")))),
-            e => concat(e.getField("doc_id").cast("string"), lit(":"),
-                        e.getField("qty").cast("string"))),
+        array_join(rendered(col("doc_id"),
+          concat(col("doc_id").cast("string"), lit(":"), col("qty").cast("string"))),
           ",").as("refs"))
       .orderBy("token")
 
@@ -257,9 +262,8 @@ object TokenPipeline {
         .as("count_external_links"))
     val tokens = docTokenCounts(spark, dir)
       .groupBy("doc_id")
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("token"), col("qty")))),
-          e => concat(e.getField("token"), lit(":"), e.getField("qty").cast("string"))),
+      .agg(array_join(rendered(col("token"),
+          concat(col("token"), lit(":"), col("qty").cast("string"))),
         ",").as("tokens"))
     stats
       .join(links.select("doc_id", "page_loc", "parent_id"), Seq("doc_id"))
@@ -284,17 +288,20 @@ object TokenPipeline {
   def topDocsPerToken(spark: SparkSession, dir: String): DataFrame = {
     // native CollectTopK on struct(-qty, doc_id): smallest-k ascending ==
     // (qty desc, doc_id asc) — see topTerms for the native-vs-UDAF note
+    val k = 3
     val topk = org.apache.spark.sql.GraftBridge.collectTopK(
-      struct((-col("qty")).as("nq"), col("doc_id")), 3, reverse = true)
+      struct((-col("qty")).as("nq"), col("doc_id")), k, reverse = true)
+    // render the ≤ k kept entries position by position: try_element_at
+    // past the end is NULL, which concat_ws skips (a `transform` lambda
+    // would leave whole-stage codegen)
+    val entries = (1 to k).map { i =>
+      val e = try_element_at(col("top"), lit(i))
+      concat(e.getField("doc_id").cast("string"), lit(":"), (-e.getField("nq")).cast("string"))
+    }
     docTokenCounts(spark, dir)
       .groupBy("token")
       .agg(topk.as("top"))
-      .select(col("token"),
-        array_join(
-          transform(col("top"),
-            e => concat(e.getField("doc_id").cast("string"), lit(":"),
-                        (-e.getField("nq")).cast("string"))),
-          ",").as("top_docs"))
+      .select(col("token"), concat_ws(",", entries: _*).as("top_docs"))
       .orderBy("token")
   }
 
@@ -308,7 +315,7 @@ object TokenPipeline {
     sparseVectorsRaw(spark, dir)
       .groupBy("doc_id")
       .agg(
-        map_from_entries(array_sort(collect_list(struct(col("token_id"), col("qty")))))
+        map_from_entries(sort_array(collect_list(struct(col("token_id"), col("qty")))))
           .as("compressed_token_vector"),
         round(sqrt(sum(col("qty") * col("qty"))), 6).as("euclidian_norm"))
       .orderBy("doc_id")
@@ -323,10 +330,8 @@ object TokenPipeline {
     sparseVectorsRaw(spark, dir)
       .groupBy("doc_id")
       .agg(
-        array_join(
-          transform(array_sort(collect_list(struct(col("token_id"), col("qty")))),
-            e => concat(e.getField("token_id").cast("string"), lit(":"),
-                        e.getField("qty").cast("string"))),
+        array_join(rendered(col("token_id"),
+          concat(col("token_id").cast("string"), lit(":"), col("qty").cast("string"))),
           ",").as("compressed_token_vector"),
         round(sqrt(sum(col("qty") * col("qty"))), 6).as("euclidian_norm"))
       .orderBy("doc_id")

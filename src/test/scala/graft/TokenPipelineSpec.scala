@@ -195,4 +195,24 @@ class TokenPipelineSpec extends AnyFunSuite {
         .otherwise($"parent_id" =!= ($"doc_id" / 10).cast("long"))).count()
     assert(bad === 0)
   }
+
+  test("etl renderings, tokenize and child ids compile without CodegenFallback") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    // aggregate functions (collect_list, top-k) are not whole-stage
+    // expressions; everything else in the analyzed plan must generate code
+    def fallbacks(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case f: CodegenFallback if !f.isInstanceOf[AggregateFunction] =>
+          f.getClass.getSimpleName
+      })).toSet
+    assert(fallbacks(TokenPipeline.postings(spark, sf)) === Set.empty)          // q15
+    assert(fallbacks(TokenPipeline.tokenVectorString(spark, sf)) === Set.empty) // q17
+    assert(fallbacks(TokenPipeline.topDocsPerToken(spark, sf)) === Set.empty)   // q51
+    assert(fallbacks(Hierarchy.childAggFrom(
+      Seq((11L, 1L), (12L, 1L)).toDF("doc_id", "parent_id"))) === Set.empty)
+    // the control: the lambda form this replaced does fall back
+    assert(fallbacks(Seq("a").toDF("t").select(transform(array(col("t")), x => upper(x))))
+      .contains("ArrayTransform"))
+  }
 }
