@@ -53,18 +53,18 @@ object Bench {
         warmupFailed.incrementAndGet()
         System.err.println(s"[bench] warmup step failed: ${e.getMessage}")
       }
-    // Waves run their steps CONCURRENTLY (Spark's scheduler interleaves
-    // jobs from multiple threads; local[32] has the slack), sequenced so
-    // every step's cache dependencies were filled by an earlier wave and
-    // no two concurrent steps touch the same cache key — TrieMap
-    // getOrElseUpdate may evaluate a racing thunk twice and the loser's
-    // persisted relation would leak.
-    // per-wave durations are recorded and emitted ("warmup_waves_cs") so a
-    // contended driver host's warmup inflation is attributable per wave —
-    // BENCH_r12's warmup ran 69.5 s vs 18.1–19.6 s on quiet runs and the
-    // only instrument was the undifferentiated total (VERDICT r12 item 3)
+    // A wave runs its steps CONCURRENTLY (Spark's scheduler interleaves
+    // jobs from multiple threads; local[32] has the slack). Artifact fills
+    // are single-flight per key, so steps may share or depend on keys in
+    // any order: a step that needs an artifact another step is building
+    // waits for that build.
+    // per-leg durations are recorded and emitted ("warmup_waves_cs": the
+    // INDEX fill, then the sweep) so a contended driver host's warmup
+    // inflation is attributable per leg — BENCH_r12's warmup ran 69.5 s vs
+    // 18.1–19.6 s on quiet runs and the only instrument was the
+    // undifferentiated total (VERDICT r12 item 3)
     val waveDurations = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def wave(steps: (() => Long)*): Unit = {
+    def wave(steps: Seq[() => Long]): Unit = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration._
       implicit val ec: ExecutionContext = ExecutionContext.global
@@ -81,13 +81,7 @@ object Bench {
       waveDurations += (System.nanoTime() - t0) / 1e9
       ()
     }
-    // waves 1/2/2b step lists live on the object (shared with
-    // dev.SweepProbe so the width A/B replicates the exact production
-    // shapes); see their scaladoc for the wave taxonomy
-    def wave1Steps(dir: String) = Bench.wave1Steps(spark, dir)
-    def wave2Steps(dir: String) = Bench.wave2Steps(spark, dir)
-    def wave2bSteps(dir: String) = Bench.wave2bSteps(spark, dir)
-    // wave 3 (round 15): the GENERIC sweep — execute EVERY queries entry
+    // The sweep (round 15) is GENERIC: it executes EVERY queries entry
     // once through the exact bench protocol (noop sink, timed passes'
     // name order), replacing rounds 10–14's per-plan pre-fill waves.
     // Those converged locally every round and then the driver host paid
@@ -95,12 +89,8 @@ object Bench {
     // entries in NEW slots, ~36 s — VERDICT r14 item 2: "the per-plan
     // prefill whack-a-mole doesn't converge on a contended host"). The
     // sweep compiles every plan the timed passes will run, by
-    // construction — there is no slot it can miss. It runs SEQUENTIALLY:
-    // concurrent steps must not getOrElseUpdate the same cache key (a
-    // racing TrieMap thunk leaks the loser's persisted relation), and
-    // name order lands every shared-memo fill on the same
-    // alphabetically-first consumer the timed passes charge. Emitted as
-    // the third "warmup_waves_cs" entry; clearResultMemos below evicts
+    // construction — there is no slot it can miss. Emitted as the last
+    // "warmup_waves_cs" entry; clearResultMemos below evicts
     // every detection result the sweep computed, so the timed cold pass
     // still re-pays each query's full per-query work, minus only
     // JIT/codegen/first-touch — which is exactly what warmup_sec is for.
@@ -115,7 +105,7 @@ object Bench {
     // sweep deadline (quiet cost ≈ 105–130 s; the r15 driver paid 393 s).
     // Round 17 (VERDICT r16 item 3): the sweep runs at the SMALLEST
     // available scale factor, not the target dir. Its remaining job after
-    // wave 2b is plan compilation — Spark's codegen cache keys on the
+    // the INDEX fill is plan compilation — Spark's codegen cache keys on the
     // generated source BODY (and the compiling thread's class loader),
     // which is identical across input dirs of the same schema, so a
     // sf0.001 execution JITs the exact classes the timed sf0.1 passes run
@@ -132,9 +122,8 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
     // canonical-path compare: a trailing-slash or symlink spelling of the
-    // target dir must select the SEQUENTIAL same-dir arm — a concurrent
-    // sweep over the timed dir would race its unfilled cache keys and
-    // move the shared-memo landing the timed passes charge
+    // target dir must select the SEQUENTIAL same-dir arm, whose name order
+    // lands each shared-memo fill on the consumer the timed passes charge
     def canon(p: String) =
       try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
     val sweepDir =
@@ -174,39 +163,6 @@ object Bench {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration._
       implicit val ec: ExecutionContext = ExecutionContext.global
-      // base prefill of the SWEEP dir (waves 1–2b shapes — seconds at
-      // sf0.001) so the concurrent sweep below cannot race two threads
-      // into the same unfilled INDEX-cache key; concurrent WITHIN each
-      // wave exactly like the target dir's waves (disjoint keys by the
-      // same argument), sequential ACROSS waves (dependencies). The only
-      // remaining getOrElseUpdate races are tiny-dir RESULT memos, where
-      // a losing thunk's relation is either deduped by CacheManager's
-      // canonical-plan match or an unmaterialized entry — bounded at this
-      // scale and evicted with everything else by clearResultMemos below.
-      // a timed-out prefill wave ABORTS the sweep (review r19): its
-      // abandoned thunks keep running, and a next wave (or the worker
-      // pool) would race them on the same tiny-dir INDEX cache keys —
-      // the exact getOrElseUpdate double-fill the wave structure exists
-      // to prevent. The timed passes surface whatever went unfilled, and
-      // warmup_failures marks the round warmup-degraded. 5 min per wave
-      // (quiet cost: seconds) keeps the worst case inside the outer
-      // wedge guard: 3×5 + the workers' bound below < 35 min.
-      var prefillOk = true
-      def prefill(steps: Seq[() => Long]): Unit =
-        if (prefillOk)
-          try Await.result(
-            Future.sequence(steps.map(s => Future(warm(s())))), 5.minutes)
-          catch { case e: java.util.concurrent.TimeoutException =>
-            prefillOk = false
-            warmupFailed.incrementAndGet()
-            System.err.println(s"[bench] sweep prefill timed out — " +
-              s"aborting the sweep: ${e.getMessage}")
-          }
-      if (sweepDir != sfDir) {
-        prefill(wave1Steps(sweepDir))
-        prefill(wave2Steps(sweepDir))
-        prefill(wave2bSteps(sweepDir))
-      }
       // the sweep itself: a WORK-STEALING pool of 8 workers over the
       // alphabetical query list (r19, verdict r18 item 6) — the r18 form
       // ran grouped(8) barriers, and the handful of multi-second steps
@@ -230,9 +186,7 @@ object Bench {
       // here — memo landing only matters in the sequential same-dir
       // fallback, which keeps pure alphabetical order via sweepPar=1 and
       // an unsorted-by-weight queue.
-      val queued = Bench.sweepOrder(sweepPar)
-      if (prefillOk) queued.foreach(queue.add)
-      else warmupFailed.addAndGet(SparkEntry.queries.size)
+      Bench.sweepOrder(sweepPar).foreach(queue.add)
       val workers = (1 to sweepPar).map { _ =>
         Future {
           var step = queue.poll()
@@ -264,8 +218,8 @@ object Bench {
         }
       }
       // bound the workers to the sweep deadline plus a grace period for
-      // in-flight steps — together with the 3×5-min prefill cap the whole
-      // runSweep worst case stays under the outer 35-min wedge guard
+      // in-flight steps, so the whole runSweep worst case stays under the
+      // outer 35-min wedge guard
       val workerBudget =
         ((sweepDeadline - System.nanoTime()).max(0L).nanos + 3.minutes)
           .min(30.minutes)
@@ -279,31 +233,25 @@ object Bench {
       sweepExt = extBusyPct(sweepJ0, procJiffies())
       sweepSecs = (System.nanoTime() - w3) / 1e9
     }
-    // Round 18 (VERDICT r17 item 5): the tiny-dir sweep OVERLAPS waves
-    // 1–2b instead of following them — every graft cache keys on
-    // (session, dir), so the sweep's sf0.001 keys (and its /tmp index
-    // paths, which carry the dir hash) are DISJOINT from the target dir's
-    // by construction, and the no-two-threads-per-key invariant holds
-    // across the overlap exactly as it holds within a wave. Warmup wall
-    // becomes max(waves, sweep) + calib, not their sum (r17: 87 s raw =
+    // Round 18 (VERDICT r17 item 5): the tiny-dir sweep OVERLAPS the INDEX
+    // fill instead of following it — every graft cache keys on (session,
+    // dir), so the sweep's sf0.001 keys (and its /tmp index paths, which
+    // carry the dir hash) are disjoint from the target dir's. Warmup wall
+    // becomes max(fill, sweep) + calib, not their sum (r17: 87 s raw =
     // ~20 s waves + ~66 s sweep; overlapped ≈ the sweep leg alone). The
-    // same-dir FALLBACK arm stays strictly sequential after the waves:
-    // there the keys are shared and ordering is the race protection.
+    // same-dir fallback arm runs after the fill, sequentially.
     val sweepFuture: Option[scala.concurrent.Future[Unit]] =
       if (sweepDir != sfDir) {
         import scala.concurrent.{ExecutionContext, Future}
         implicit val ec: ExecutionContext = ExecutionContext.global
         Some(Future(runSweep()))
       } else None
-    wave(wave1Steps(sfDir): _*)
-    wave(wave2Steps(sfDir): _*)
-    wave(wave2bSteps(sfDir): _*)
+    wave(Bench.indexFills(spark, sfDir))
     sweepFuture match {
       case Some(f) =>
-        // the sweep bounds itself (3×5-min prefill caps + workers bounded
-        // by the 30-min deadline + 3-min grace); this outer margin only
-        // guards a wedged runtime, honoring the same
-        // may-not-abort-before-the-JSON-line invariant
+        // the sweep bounds itself (workers bounded by the 30-min deadline
+        // + 3-min grace); this outer margin only guards a wedged runtime,
+        // honoring the same may-not-abort-before-the-JSON-line invariant
         import scala.concurrent.Await
         import scala.concurrent.duration._
         try Await.result(f, 35.minutes)
@@ -313,8 +261,8 @@ object Bench {
         }
       case None => runSweep()
     }
-    // the sweep's own wall stays the 4th warmup_waves_cs entry — under the
-    // overlap the entries no longer sum to warmup_sec (they attribute, the
+    // the sweep's own wall stays the last warmup_waves_cs entry — under the
+    // overlap the entries do not sum to warmup_sec (they attribute, the
     // headline field measures)
     waveDurations += sweepSecs
     // evict the result memos the sweep just created (BPE merges, cluster
@@ -338,7 +286,7 @@ object Bench {
     // warmup-completeness instrument (round 17): target-dir INDEX-cache
     // keys that exist after the passes but not here were artifacts the
     // warmup failed to prefill — the timed cold pass paid them. Emitted
-    // as "index_fills_post_warmup" (0 = wave 2b's list is complete);
+    // as "index_fills_post_warmup" (0 = Bench.indexFills is complete);
     // names go to stderr for the adjudication trail.
     val idxKeys0 = Caches.indexKeys(spark, sfDir)
     // deterministic name order; a failed query reports -1 (not its wall
@@ -424,7 +372,7 @@ object Bench {
     val cachedFinal = storageMB
     val idxFills = Caches.indexKeys(spark, sfDir).diff(idxKeys0)
     if (idxFills.nonEmpty) System.err.println(
-      s"[bench] index artifacts filled AFTER warmup (extend wave 2b): " +
+      s"[bench] index artifacts filled AFTER warmup (extend Bench.indexFills): " +
         idxFills.toSeq.sorted.mkString(", "))
     val failures = results.count(_._2 < 0)
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -546,7 +494,7 @@ object Bench {
     println(s"""{"bench_cold_sparse_ds":${fmtShort(coldSparse, 10)}}""")
     println(s"""{"bench_warm_pass_cs":${fmtShort(results, 100)}}""")
     // calib_cs = [pre-pass-1, post-pass-1, …, post-pass-N] probe times in
-    // centiseconds; warmup_waves_cs = per-wave warmup durations. Both are
+    // centiseconds; warmup_waves_cs = per-leg warmup durations. Both are
     // integer-valued and ~25 chars each, inside the driver's 2000-char
     // tail window budget (measured 1,147–1,206 of 2,000 at 113 queries).
     def csList(vs: Seq[Double]): String =
@@ -571,85 +519,44 @@ object Bench {
     spark.stop()
   }
 
-  /** Warmup wave 1: raw table scans + the two base relations everything
-    * else derives from (token hub, shingles) + the embedding base.
-    * Steps within a wave run CONCURRENTLY (disjoint cache keys); waves
-    * are sequenced so every step's dependencies were filled earlier.
+  /** The warmup's INDEX fill: every INDEX artifact of `dir` plus one scan
+    * of each table, run concurrently. Fill order is a performance detail
+    * (bases first), not a correctness rule: fills are single-flight per
+    * key. `BenchFillSpec` checks that the list leaves no INDEX artifact
+    * unfilled, so the timed cold pass pays none; its exclusions say why
+    * an artifact is left out.
     */
-  private[graft] def wave1Steps(spark: SparkSession,
-      dir: String): Seq[() => Long] = Seq[() => Long](
-    () => Tables.events(spark, dir).count(),
-    () => operators.TokenPipeline.docTokenCounts(spark, dir).count(),
-    () => operators.Dedup.shingles(spark, dir).count(),
-    () => operators.Similarity.vectorIndex(spark, dir).count()) ++
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "documents", "embeddings")
-      .map(t => () => Tables.load(spark, dir, t).count())
-
-  /** Warmup wave 2: index artifacts built from wave 1's relations
-    * (disjoint keys).
-    */
-  private[graft] def wave2Steps(spark: SparkSession,
-      dir: String): Seq[() => Long] = Seq(
-    () => operators.TokenPipeline.tokenDictionary(spark, dir).count(),
-    () => operators.TokenPipeline.docAggregates(spark, dir).count(),
-    // per-doc split assignment (INDEX class since r21) — filled HERE, in
-    // wave 2, because several wave-2b steps read it concurrently and
-    // must find the key already filled (TrieMap getOrElseUpdate race)
-    () => operators.TextAnalysis.hashSplit(spark, dir).count(),
-    () => operators.TextAnalysis.tfidfRaw(spark, dir).count(),
-    // ordered-token relation (q70/q84/q106/q107 share it; q106 sorts
-    // first in a pass and would otherwise absorb the fill in cold),
-    // then the bigram adjacency artifact (q70/q84 fold over it, round
-    // 13) — the latter reads the former, so ONE thunk fills both
-    // sequentially (no intra-wave cache race on the rawTokens key)
-    () => {
-      operators.TextAnalysis.rawTokens(spark, dir).count()
-      operators.TextAnalysis.bigramCounts(spark, dir).count()
-    },
-    () => operators.Dedup.shingleDf(spark, dir).count(),
-    () => operators.Dedup.minhashSignatures(spark, dir).count(),
-    () => operators.Dedup.simhashSignature(spark, dir, 16).count(),
-    () => operators.Dedup.simhashSignature(spark, dir, 32).count(),
-    () => operators.Dedup.simhashSignature(spark, dir, 64).count())
-
-  /** Warmup wave 2b (round 17): the index artifacts waves 1–2 did NOT
-    * fill — enumerated against Caches' index/result split and verified
-    * by the index_fills_post_warmup instrument (0 on a complete list).
-    * Needed because wave 3 no longer touches the target dir, so any
-    * artifact missed here would land in the timed cold pass.
-    * cappedShingles is deliberately absent: both its consumers (q26,
-    * q59) run with maxShingleDf = None in the suite. verbatimReps /
-    * repFlagCache are a driver boolean + a dup-gated relation (sf0.1 is
-    * dup-light, the gate says skip) — cold pays one tiny cached-input
-    * aggregate at most. dsirWeightTable reads dsirDocBuckets, so ONE
-    * thunk fills both sequentially (no intra-wave cache race).
-    */
-  private[graft] def wave2bSteps(spark: SparkSession,
-      dir: String): Seq[() => Long] = Seq(
-    () => operators.Dedup.fingerprints(spark, dir).count(),
-    () => operators.Dedup.embeddingRepMap(spark, dir).count(),
-    () => operators.Sketches.bloomEvalBits(spark, dir).count(),
-    () => operators.TextAnalysis.sourceTokens(spark, dir).count(),
-    () => {
-      operators.TextAnalysis.dsirDocBuckets(spark, dir).count()
-      operators.TextAnalysis.dsirWeightTable(spark, dir).count()
-    },
-    // the stored placement artifact (q123's read side — bootstraps the
-    // on-disk index once per session, then persists the doc-grain read)
-    () => operators.Packing.storedPlacement(spark, dir).count(),
-    // the eval-side distinct shingle relation, then the per-benchmark
-    // bloom bit-sets built from it (q125's index side) — ONE thunk, in
-    // dependency order, so no concurrent step races the shared key
-    () => {
-      operators.Sketches.benchEvalShingles(spark, dir).count()
-      operators.Sketches.benchEvalBits(spark, dir).count()
-    },
-    // the CMS d×w cell grid (q103's sketch state — INDEX class since r21)
-    () => operators.Sketches.cmsCells(spark, dir).count(),
-    // raw per-(doc, token) counts (q92/q99's unfiltered TF relation —
-    // INDEX class since r22; reads rawTokens, a wave-2 artifact)
-    () => operators.TextAnalysis.rawTokenCounts(spark, dir).count())
+  private[graft] def indexFills(spark: SparkSession, dir: String): Seq[() => Long] = {
+    import operators._
+    Seq[() => Long](
+      () => Tables.events(spark, dir).count(),
+      () => TokenPipeline.docTokenCounts(spark, dir).count(),
+      () => Dedup.shingles(spark, dir).count(),
+      () => Similarity.vectorIndex(spark, dir).count(),
+      () => TokenPipeline.tokenDictionary(spark, dir).count(),
+      () => TokenPipeline.docAggregates(spark, dir).count(),
+      () => TextAnalysis.hashSplit(spark, dir).count(),
+      () => TextAnalysis.tfidfRaw(spark, dir).count(),
+      () => TextAnalysis.rawTokens(spark, dir).count(),
+      () => TextAnalysis.bigramCounts(spark, dir).count(),
+      () => TextAnalysis.rawTokenCounts(spark, dir).count(),
+      () => TextAnalysis.sourceTokens(spark, dir).count(),
+      () => TextAnalysis.dsirDocBuckets(spark, dir).count(),
+      () => TextAnalysis.dsirWeightTable(spark, dir).count(),
+      () => Dedup.shingleDf(spark, dir).count(),
+      () => Dedup.minhashSignatures(spark, dir).count(),
+      () => Dedup.fingerprints(spark, dir).count(),
+      () => if (Dedup.hasVerbatimDups(spark, dir)) 1L else 0L,
+      () => Dedup.embeddingRepMap(spark, dir).count(),
+      () => Sketches.bloomEvalBits(spark, dir).count(),
+      () => Sketches.benchEvalShingles(spark, dir).count(),
+      () => Sketches.benchEvalBits(spark, dir).count(),
+      () => Sketches.cmsCells(spark, dir).count(),
+      () => Packing.storedPlacement(spark, dir).count()) ++
+      Seq(16, 32, 64).map(bits => () => Dedup.simhashSignature(spark, dir, bits).count()) ++
+      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+        "region", "documents", "embeddings").map(t => () => Tables.load(spark, dir, t).count())
+  }
 
   /** The sweep's execution order: longest-steps-first in the parallel
     * arm (r19 LPT — the stored-index / artifact builders are the sweep's

@@ -18,9 +18,11 @@ object Tables {
     * launches none. The stamp lists the table's files (name, length,
     * mtime), so a table rewritten in place — new part files — misses and
     * is inferred afresh. Only these read-only inputs go through here:
-    * program-written stores read elsewhere infer on every read.
+    * program-written stores read elsewhere infer on every read. Keyed by
+    * the table's path, not its dir, so `Caches.indexKeys(spark, dir)`
+    * counts the structures derived from a dir and not its schemas.
     */
-  private[graft] val schemaMemo = scala.collection.concurrent.TrieMap.empty[String, StructType]
+  private[graft] val schemaMemo = Artifact.value[StructType]("Tables.schemaMemo", Artifact.Index)
 
   /** The parquet reader confs that change what inference returns. */
   private val SchemaConfs = Seq(
@@ -40,16 +42,9 @@ object Tables {
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = Seq(org.apache.spark.sql.GraftBridge.sessionKey(spark), path,
-      fileStamp(spark, path), SchemaConfs.map(c => spark.conf.getOption(c)).mkString(","))
-      .mkString("#")
-    schemaMemo.get(key) match {
-      case Some(schema) => spark.read.schema(schema).parquet(path)
-      case None =>
-        val df = spark.read.parquet(path)
-        schemaMemo.putIfAbsent(key, df.schema)
-        df
-    }
+    val schema = schemaMemo(spark, path, fileStamp(spark, path),
+      SchemaConfs.map(c => spark.conf.getOption(c)).mkString(","))(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "lineitem")

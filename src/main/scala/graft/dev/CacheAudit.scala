@@ -3,12 +3,14 @@ package graft.dev
 import org.apache.spark.sql.SparkSession
 
 /** Storage-footprint audit of every persisted relation the library keeps
-  * per (session, dir) — the round-6 cache-budget check. For each cache-
-  * building query, materializes it and prints the storage DELTA (new
-  * cached RDDs and their memory/disk bytes), so each relation's cost is
-  * attributed, beside the broadcasts each newly cached artifact's plan
-  * retains (`Caches.retainedBroadcasts`): each pins at least one Tungsten
-  * page of heap that the storage delta does not show.
+  * per (session, dir) — the round-6 cache-budget check. Runs Bench's INDEX
+  * fill list one step at a time, then the three queries that fill result
+  * memos (q23 verified pairs, q52 cluster labels, q63 source overlap),
+  * and prints each step's storage DELTA (new cached RDDs and their
+  * memory/disk bytes), so each relation's cost is attributed, beside the
+  * broadcasts each newly cached artifact's plan retains
+  * (`Caches.retainedBroadcasts`): each pins at least one Tungsten page of
+  * heap that the storage delta does not show.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.dev.CacheAudit
   */
@@ -41,16 +43,11 @@ object CacheAudit {
         added.map { case (n, b) => s"$n=$b" }.mkString("[", " ", "]"))
     }
 
-    step("docTokenCounts (hub)")(TokenPipeline.docTokenCounts(spark, sfDir).count())
-    step("tokenDictionary")(TokenPipeline.tokenDictionary(spark, sfDir).count())
-    step("docAggregates")(TokenPipeline.docAggregates(spark, sfDir).count())
-    step("shingles")(Dedup.shingles(spark, sfDir).count())
-    step("minhashSignatures")(Dedup.minhashSignatures(spark, sfDir).count())
-    step("fingerprints (via q21)")(Dedup.exactDedup(spark, sfDir).count())
-    step("reps+capped (via q23)")(Dedup.minhashNearDups(spark, sfDir).count())
+    graft.Bench.indexFills(spark, sfDir).zipWithIndex
+      .foreach { case (fill, i) => step(f"index fill ${i + 1}%2d")(fill()) }
+    step("pairs (via q23)")(Dedup.minhashNearDups(spark, sfDir).count())
     step("clusterLabels (via q52)")(Dedup.dupClusters(spark, sfDir).count())
-    step("srcTokens (via q63)")(TextAnalysis.sourceOverlap(spark, sfDir).count())
-    step("rawTokens (via q70)")(TextAnalysis.collocations(spark, sfDir).count())
+    step("sourceOverlap (via q63)")(TextAnalysis.sourceOverlap(spark, sfDir).count())
     println(f"CACHEAUDIT TOTAL mem=${totalMem / 1024} KiB disk=${totalDisk / 1024} KiB " +
       s"broadcasts=$totalBroadcasts " +
       f"(storage pool ≈ ${spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 1024 / 1024} MiB)")

@@ -21,11 +21,11 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt -batch "runMain graft.dev.SweepProbe [burnerThreads [width...]]"
   *
-  * Protocol: exact Bench warmup shape — the TARGET-dir waves (1/2/2b,
-  * steps concurrent within a wave) run CONCURRENTLY with a work-stealing
-  * pool of W workers executing every `queries` entry at the tiny dir
-  * through the noop sink in Bench.sweepOrder's LPT order, after the same
-  * tiny-dir wave prefill runSweep does. Contention is K spinning daemon
+  * Protocol: exact Bench warmup shape — the TARGET-dir INDEX fill
+  * (Bench.indexFills, steps concurrent) runs CONCURRENTLY with a
+  * work-stealing pool of W workers executing every `queries` entry at the
+  * tiny dir through the noop sink in Bench.sweepOrder's LPT order.
+  * Contention is K spinning daemon
   * threads (pure register arithmetic — the co-tenant model; note the
   * driver's real contention is hypervisor-level and additionally
   * invisible to guest jiffy accounting). Each config runs in a FRESH
@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   * width re-pays identical fills) with the previous session's caches
   * freed; one discarded width-8 round pays JVM-wide JIT/codegen first so
   * config order doesn't bias. Output: one SWEEPPROBE line per config
-  * with waves/sweep/total wall and the calib-probe host multiplier
+  * with fill/pool/total wall and the calib-probe host multiplier
   * context.
   */
 object SweepProbe {
@@ -67,27 +67,18 @@ object SweepProbe {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    def wave(spark: SparkSession, steps: Seq[() => Long]): Unit =
-      Await.result(Future.sequence(steps.map(s => Future { s(); () })),
-        15.minutes)
 
     def config(spark: SparkSession, width: Int, label: String): Unit = {
       val c0 = calib(spark)
       val t0 = System.nanoTime()
-      // target-dir waves, exactly Bench's overlap arm
-      val waves = Future {
+      // the target-dir INDEX fill, exactly Bench's overlap arm
+      val fill = Future {
         val w0 = System.nanoTime()
-        wave(spark, graft.Bench.wave1Steps(spark, sfDir))
-        wave(spark, graft.Bench.wave2Steps(spark, sfDir))
-        wave(spark, graft.Bench.wave2bSteps(spark, sfDir))
+        Await.result(Future.sequence(graft.Bench.indexFills(spark, sfDir)
+          .map(s => Future { s(); () })), 15.minutes)
         (System.nanoTime() - w0) / 1e9
       }
       val sweep = Future {
-        val s0 = System.nanoTime()
-        wave(spark, graft.Bench.wave1Steps(spark, tinyDir))
-        wave(spark, graft.Bench.wave2Steps(spark, tinyDir))
-        wave(spark, graft.Bench.wave2bSteps(spark, tinyDir))
-        val prefill = (System.nanoTime() - s0) / 1e9
         val p0 = System.nanoTime()
         val queue = new ConcurrentLinkedQueue[
           (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
@@ -107,15 +98,15 @@ object SweepProbe {
           }
         }
         Await.result(Future.sequence(workers), 30.minutes)
-        (prefill, (System.nanoTime() - p0) / 1e9)
+        (System.nanoTime() - p0) / 1e9
       }
-      val wavesSec = Await.result(waves, 35.minutes)
-      val (prefillSec, poolSec) = Await.result(sweep, 35.minutes)
+      val fillSec = Await.result(fill, 35.minutes)
+      val poolSec = Await.result(sweep, 35.minutes)
       val total = (System.nanoTime() - t0) / 1e9
       val c1 = calib(spark)
       println(f"SWEEPPROBE $label width=$width%2d burners=$burners%2d " +
-        f"total=$total%7.2f waves=$wavesSec%7.2f prefill=$prefillSec%6.2f " +
-        f"pool=$poolSec%7.2f calib=$c0%.2f/$c1%.2f")
+        f"total=$total%7.2f fill=$fillSec%7.2f pool=$poolSec%7.2f " +
+        f"calib=$c0%.2f/$c1%.2f")
       graft.Caches.clear(spark)
     }
 

@@ -4,9 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar text functions of the reference pipeline, as pure Catalyst
-  * column expressions (no UDFs). `cleanText`, `tokenize`, `countSubstr`
-  * and `parentPath` compile inside whole-stage codegen. `pagePath` and
-  * `shingleArray` use `transform`, whose ArrayTransform is a
+  * column expressions (no UDFs). `cleanText`, `tokenize`, `countSubstr`,
+  * `pagePath` and `parentPath` compile inside whole-stage codegen.
+  * `shingleArray` uses `transform`, whose ArrayTransform is a
   * CodegenFallback in Spark 4.1 (as are ArraySort and ArrayFilter): the
   * stage still compiles, but that expression is evaluated interpreted,
   * row by row.
@@ -48,10 +48,13 @@ object TextFns {
     * page's parent path is the path of id/10 and paths are unique.
     * Plays the role of the reference's URL → page-path extraction
     * (main.go:194) over the synthetic corpus, which has no URLs.
+    * One prefix per possible length (a long renders in at most 20
+    * characters); `concat_ws` skips the nulls past the id's own length.
+    * All codegen'd, unlike a `transform` over `sequence`.
     */
   def pagePath(id: Column): Column = {
     val s = id.cast("string")
-    concat_ws("/", transform(sequence(lit(1), length(s)), i => s.substr(lit(1), i)))
+    concat_ws("/", (1 to 20).map(i => when(length(s) >= i, s.substr(lit(1), lit(i)))): _*)
   }
 
   /** Drop the last path segment; "" for single-segment (root) paths

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.functions.{TextFns, VectorFns}
 
 /** Deduplication operators for a training-data pipeline, over `documents`
@@ -45,19 +45,18 @@ object Dedup {
     */
   val ShingleSize = 5
 
-  private[graft] val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val cache = Artifact.relation("Dedup.cache", Artifact.Index)
 
   /** Distinct (doc_id, shingle) where shingle = ShingleSize consecutive
     * tokens of the cleaned, lowercased text. Shorter docs drop out.
     */
   def shingles(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    cache(spark, dir) {
       shinglesOf(Tables.documents(spark, dir))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  private[graft] val dfCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val dfCache = Artifact.relation("Dedup.dfCache", Artifact.Index)
 
   /** Cached per-shingle document frequency — an INDEX ARTIFACT (a
     * per-item precomputed structure, the same cache class as the
@@ -68,11 +67,11 @@ object Dedup {
     * and the CMS grid build share the lineage).
     */
   def shingleDf(spark: SparkSession, dir: String): DataFrame =
-    dfCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    dfCache(spark, dir) {
       shingles(spark, dir)
         .groupBy("shingle").agg(count(lit(1)).as("df"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Distinct (doc_id, shingle) from a free-standing (doc_id, text)
     * relation — THE single definition of the shingle pipeline, shared by
@@ -103,23 +102,22 @@ object Dedup {
     * boilerplate (which is the point). One extra hash-agg + semi-join,
     * both on the already-persisted shingle relation.
     */
-  private[graft] val cappedCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val cappedCache = Artifact.relation("Dedup.cappedCache", Artifact.Index)
 
   def cappedShingles(spark: SparkSession, dir: String, maxDf: Long): DataFrame =
     // persisted per (session, dir, cap): consumers reference the capped
     // relation on BOTH sides of their self-joins, and re-aliased exprIds
     // defeat exchange reuse — without the cache the df hash-agg +
     // semi-join would execute once per side
-    cappedCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$maxDf", {
-        val sh = shingles(spark, dir)
-        val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-          .filter(col("df") <= maxDf).select("shingle")
-        sh.join(rare, Seq("shingle"), "left_semi")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    cappedCache(spark, dir, maxDf) {
+      val sh = shingles(spark, dir)
+      val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf).select("shingle")
+      sh.join(rare, Seq("shingle"), "left_semi")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-  private[graft] val fpCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val fpCache = Artifact.relation("Dedup.fpCache", Artifact.Index)
 
   /** Cached (doc_id, fp = md5(text)) — THE one fingerprint scan over the
     * corpus text, shared by exactDedup (q21), the collapse cost probe
@@ -129,11 +127,11 @@ object Dedup {
     * consumers now read one persisted (id, 32-hex) relation instead.
     */
   private[graft] def fingerprints(spark: SparkSession, dir: String): DataFrame =
-    fpCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    fpCache(spark, dir) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), md5(col("text")).as("fp"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Exact dedup by content hash: fingerprint, copies per group, rank of
     * this doc within its group (rank 1 = canonical survivor).
@@ -147,17 +145,17 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  private[graft] val sigCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val sigCache = Artifact.relation("Dedup.sigCache", Artifact.Index)
 
   /** Per-doc MinHash signature: h_i = min over shingles of md5("i|"+shingle),
     * i ∈ [0,8). Fixed-width hex ⇒ lexicographic min = numeric min. Persisted:
     * the LSH band self-join references it on both sides.
     */
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    sigCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    sigCache(spark, dir) {
       signaturesOfShingles(shingles(spark, dir))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** MinHash signatures from a (doc_id, shingle) relation — the single
     * definition shared by the cached and streaming paths.
@@ -190,8 +188,8 @@ object Dedup {
   def bandBucketsFor(docs: DataFrame): DataFrame =
     bandsOfSignatures(signaturesOfShingles(shinglesOf(docs)))
 
-  private[graft] val repFlagCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private[graft] val repsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val repFlagCache = Artifact.value[Boolean]("Dedup.repFlagCache", Artifact.Index)
+  private[graft] val repsCache = Artifact.relation("Dedup.repsCache", Artifact.Index)
 
   /** Is the representative collapse worth its overhead here? The collapse
     * is a pure cost trade — identical texts have identical band sets, so
@@ -205,8 +203,8 @@ object Dedup {
     * semi-join, and both expansion joins entirely; the 10× verbatim smoke
     * (Σ group² = 10·n) still collapses.
     */
-  private def hasVerbatimDups(spark: SparkSession, dir: String): Boolean =
-    repFlagCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+  private[graft] def hasVerbatimDups(spark: SparkSession, dir: String): Boolean =
+    repFlagCache(spark, dir) {
       val r = fingerprints(spark, dir)
         .groupBy("fp").agg(count(lit(1)).as("cnt"))
         .agg(coalesce(sum(col("cnt") * col("cnt")), lit(0L)).as("sq"),
@@ -215,7 +213,7 @@ object Dedup {
       // n == 0 (empty corpus): no dups, and the coalesce keeps the empty
       // SUM from NPE-ing the probe
       r.getLong(1) > 0 && r.getLong(0) >= 2 * r.getLong(1)
-    })
+    }
 
   /** (doc_id, rep_id): rep = min doc_id among verbatim-identical texts —
     * the exact-dedup pass (q21 shape) applied INSIDE the near-dup
@@ -235,12 +233,12 @@ object Dedup {
     * embedding side's `embeddingRepMap`.
     */
   private def verbatimReps(spark: SparkSession, dir: String): DataFrame =
-    repsCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    repsCache(spark, dir) {
       val fp = fingerprints(spark, dir)
       fp.join(fp.groupBy("fp").agg(min("doc_id").as("rep_id")), Seq("fp"))
         .select("doc_id", "rep_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Expand representative-level verified pairs back to all member pairs:
     * cross pairs inherit the reps' (inter, uni) verbatim; within-group
@@ -608,13 +606,13 @@ object Dedup {
     * (Caches.clearResultMemos) and each pass still pays for detection
     * exactly once.
     */
-  private[graft] val pairsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val pairsCache = Artifact.relation("Dedup.pairsCache", Artifact.Result)
 
   private def repNearDupPairs(spark: SparkSession, dir: String,
       collapse: Boolean, maxShingleDf: Option[Long] = None): DataFrame =
-    pairsCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$collapse#${maxShingleDf.getOrElse(-1L)}",
-      repNearDupPairsUncached(spark, dir, collapse, maxShingleDf))
+    pairsCache(spark, dir, collapse, maxShingleDf.getOrElse(-1L)) {
+      repNearDupPairsUncached(spark, dir, collapse, maxShingleDf)
+    }
 
   private def repNearDupPairsUncached(spark: SparkSession, dir: String,
       collapse: Boolean, maxShingleDf: Option[Long]): DataFrame = {
@@ -774,7 +772,7 @@ object Dedup {
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
     dupClusterLabels(spark, dir).orderBy("doc_id")
 
-  private[graft] val clusterCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val clusterCache = Artifact.relation("Dedup.clusterCache", Artifact.Result)
 
   /** Converged (doc_id, component_id) labels, cached per (session, dir):
     * q52 and q54 both consume them, and the iterative computation is the
@@ -1007,7 +1005,7 @@ object Dedup {
   }
 
   private def dupClusterLabels(spark: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    clusterCache(spark, dir) {
     // Propagate on the REPRESENTATIVE graph and expand member labels at
     // the end: identical texts are by construction in one component, and
     // the component's min doc_id IS its min rep_id (every member ≥ its
@@ -1035,7 +1033,7 @@ object Dedup {
       org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(labels)
       expanded
     }
-  })
+  }
 
   /** End-to-end dedup materialization: EVERY document labeled with its
     * near-dup component and whether it is the canonical survivor (minimum
@@ -1159,8 +1157,7 @@ object Dedup {
     // would tax every consumer with a range partition; q24 sorts at its edge
   }
 
-  private[graft] val simhashSigCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val simhashSigCache = Artifact.relation("Dedup.simhashSigCache", Artifact.Index)
 
   /** Cached per-(session, dir, width) SimHash signature relation — the
     * same index-artifact class as minhashSignatures/fingerprints (a
@@ -1171,12 +1168,11 @@ object Dedup {
     * (bits = 64 routes to simhash64Bits).
     */
   def simhashSignature(spark: SparkSession, dir: String, bits: Int): DataFrame =
-    simhashSigCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$bits", {
-        (if (bits == 64) simhash64Bits(spark, dir)
-         else simhashBits(spark, dir, bits))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    simhashSigCache(spark, dir, bits) {
+      (if (bits == 64) simhash64Bits(spark, dir)
+       else simhashBits(spark, dir, bits))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** 16-bit SimHash sorted for output (the q24 contract; collision groups
     * at 16 bits are q25's).
@@ -1534,8 +1530,7 @@ object Dedup {
     * propagation is one join+agg per round with checkpointed labels, and
     * the final survivor join is vector-grain.
     */
-  private[graft] val embRepCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val embRepCache = Artifact.relation("Dedup.embRepCache", Artifact.Index)
 
   /** Cached (vec_id, rep) verbatim-embedding membership map — the
     * embedding-space analogue of verbatimReps, and the same index-artifact
@@ -1550,19 +1545,18 @@ object Dedup {
     * per-vector key, pinning rep = self.
     */
   private[graft] def embeddingRepMap(spark: SparkSession, dir: String): DataFrame =
-    embRepCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val keyed = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("emb"))
-          .withColumn("ehash",
-            when(VectorFns.l2Norm(col("emb")) === 0.0,
-              concat(lit("z"), col("vec_id").cast("string")))
-              .otherwise(md5(col("emb").cast("string").cast("binary"))))
-        keyed.select("ehash", "vec_id")
-          .join(keyed.groupBy("ehash").agg(min("vec_id").as("rep")), Seq("ehash"))
-          .select("vec_id", "rep")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    embRepCache(spark, dir) {
+      val keyed = Tables.embeddings(spark, dir)
+        .select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("emb"))
+        .withColumn("ehash",
+          when(VectorFns.l2Norm(col("emb")) === 0.0,
+            concat(lit("z"), col("vec_id").cast("string")))
+            .otherwise(md5(col("emb").cast("string").cast("binary"))))
+      keyed.select("ehash", "vec_id")
+        .join(keyed.groupBy("ehash").agg(min("vec_id").as("rep")), Seq("ehash"))
+        .select("vec_id", "rep")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Verified REP-level embedding near-dup pairs (vec_a, vec_b, c) —
     * sign-LSH bucket equi-join + in-bucket cosine ≥ 0.25 over the rep
@@ -1575,19 +1569,17 @@ object Dedup {
     * buckets/norms are per-vector values, identical whether computed on
     * the subset or the whole.
     */
-  private[graft] val embPairsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val embPairsCache = Artifact.relation("Dedup.embPairsCache", Artifact.Result)
 
   private[graft] def embRepPairs(spark: SparkSession, dir: String,
       bits: Int): DataFrame =
-    embPairsCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$bits", {
-        val memberRep = embeddingRepMap(spark, dir)
-        val reps = Similarity.vectorIndex(spark, dir, bits).join(
-          memberRep.filter(col("vec_id") === col("rep")).select("vec_id"),
-          Seq("vec_id"))
-        embNearDupPairsOf(reps).persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    embPairsCache(spark, dir, bits) {
+      val memberRep = embeddingRepMap(spark, dir)
+      val reps = Similarity.vectorIndex(spark, dir, bits).join(
+        memberRep.filter(col("vec_id") === col("rep")).select("vec_id"),
+        Seq("vec_id"))
+      embNearDupPairsOf(reps).persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   def semDedupSurvivors(spark: SparkSession, dir: String,
       bits: Int = Similarity.IvfBits): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Artifact
+
 /** Context-window packing — the batch-forming step of LLM pretraining
   * (extension surface; the reference is strictly an ETL binary): documents
   * are concatenated in a deterministic corpus order (doc_id) and the token
@@ -201,20 +203,19 @@ object Packing {
     * materializePackedFrom, appendPackedShards), which thread capacity
     * and verify it against the sidecar.
     */
-  private[graft] val placementCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val placementCache = Artifact.relation("Packing.placementCache",
+    Artifact.Index, (key, df) => { deleteStoredPlacementFor(key); Artifact.release(df) })
 
   def storedPlacement(spark: SparkSession, dir: String): DataFrame =
-    placementCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val path = PackingIndexPath(spark, dir) + "-stored"
-        if (readState(spark, path).isEmpty)
-          updatePackingIndex(spark, tokenCounts(spark, dir), path)
-        readPackingIndex(spark, path)
-          .select("doc_id", "n_toks", "start_tok", "first_win", "last_win",
-            "n_windows")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    placementCache(spark, dir) {
+      val path = PackingIndexPath(spark, dir) + "-stored"
+      if (readState(spark, path).isEmpty)
+        updatePackingIndex(spark, tokenCounts(spark, dir), path)
+      readPackingIndex(spark, path)
+        .select("doc_id", "n_toks", "start_tok", "first_win", "last_win",
+          "n_windows")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** q123 — the q122 window-segment map derived from the STORED q121
     * placement artifact instead of a per-run corpus re-sort (VERDICT r17
@@ -655,13 +656,13 @@ object Packing {
     org.apache.spark.sql.GraftBridge
       .sessionDirPath("graft-packing-index", spark, dir)
 
-  /** Delete one (session, dir) `-stored` bootstrap from DISK — the cache-
-    * teardown hook Caches.clearDir/clear/clearAll call with the cache key
+  /** Delete one (session, dir) `-stored` bootstrap from DISK — part of
+    * [[placementCache]]'s free, called with the entry's key
     * ("<sessionKey>#<dir>"): dropping the cached read alone is not enough,
     * because the next [[storedPlacement]] call would adopt the on-disk
     * index built from the dir's OLD contents after an in-place rewrite
     * (review r18 — the clearDir contract is "must not read stale
-    * entries", and this artifact lives outside the TrieMaps).
+    * entries", and the on-disk index outlives the cached read).
     */
   private[graft] def deleteStoredPlacementFor(key: String): Unit = {
     val i = key.indexOf('#')

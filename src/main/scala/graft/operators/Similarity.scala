@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.functions.{TopKAggregator, VectorFns}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -26,8 +26,7 @@ object Similarity {
   val K = 5
   val QuerySetSize = 8 // vec_id < 8 are the demo query vectors
 
-  private[graft] val idxCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val idxCache = Artifact.relation("Similarity.idxCache", Artifact.Index)
 
   /** Per-(session, dir, rung) memo of the four kNN rung RESULTS — the
     * exact / IVF / multi-probe / PQ top-K tables (K·|queries| rows each).
@@ -39,14 +38,11 @@ object Similarity {
     * the r13 trainVerdict device. Caches.clearResultMemos evicts them, so
     * every pass re-pays each rung exactly once.
     */
-  private[graft] val knnMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val knnMemo = Artifact.relation("Similarity.knnMemo", Artifact.Result)
 
   private def memoRung(spark: SparkSession, dir: String, rung: String)(
       build: => DataFrame): DataFrame =
-    knnMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$rung",
-      build.persist(StorageLevel.MEMORY_AND_DISK))
+    knnMemo(spark, dir, rung)(build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Cached (vec_id, emb, nrm) relation per (session, dir) — the resident
     * base of the vector index, shared by every embedding consumer
@@ -58,14 +54,13 @@ object Similarity {
     * when a caller asks for more bits than the vectors have components.
     */
   private def vectors(spark: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        Tables.embeddings(spark, dir).select(
-          col("vec_id"),
-          VectorFns.asDouble(col("embedding")).as("emb"))
-          .withColumn("nrm", VectorFns.l2Norm(col("emb")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    idxCache(spark, dir) {
+      Tables.embeddings(spark, dir).select(
+        col("vec_id"),
+        VectorFns.asDouble(col("embedding")).as("emb"))
+        .withColumn("nrm", VectorFns.l2Norm(col("emb")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The cached base plus the `bits`-wide sign-bucket column — the
     * in-memory form of what buildIvfIndex writes to disk.

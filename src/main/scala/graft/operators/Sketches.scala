@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Artifact, Tables}
 
 /** Fixed-size sketch operators — the primitives a 100 TB training-data
   * pipeline uses when the exact relational form (a shuffle keyed on the
@@ -132,8 +132,7 @@ object Sketches {
   private def bloomPositions: Column =
     array((0 until BloomK).map(bloomPosition): _*)
 
-  private[graft] val bitsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+  private[graft] val bitsCache = Artifact.relation("Sketches.bitsCache", Artifact.Index)
 
   /** The eval (val+test) split's Bloom bit-set as a relation — the
     * distinct bit positions set by any eval shingle, ≤ BloomBits rows no
@@ -146,15 +145,14 @@ object Sketches {
     * the r15 q102 anomaly).
     */
   def bloomEvalBits(spark: SparkSession, dir: String): DataFrame =
-    bitsCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
-        Dedup.shingles(spark, dir)
-          .join(splits.filter(col("split") =!= "train").select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .select(explode(bloomPositions).as("pos")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    bitsCache(spark, dir) {
+      val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
+      Dedup.shingles(spark, dir)
+        .join(splits.filter(col("split") =!= "train").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .select(explode(bloomPositions).as("pos")).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The eval bit-set packed into a BloomBits/4-character hex string —
     * the SERIALIZED form of the filter, the thing a deployed pipeline
@@ -224,11 +222,9 @@ object Sketches {
     out
   }
 
-  private[graft] val benchBitsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val benchBitsCache = Artifact.relation("Sketches.benchBitsCache", Artifact.Index)
 
-  private[graft] val evalShCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val evalShCache = Artifact.relation("Sketches.evalShCache", Artifact.Index)
 
   /** The distinct (benchmark, shingle) eval relation — benchmarks are
     * the eval (val+test) split's sources. Shared by the bit-set build,
@@ -237,22 +233,19 @@ object Sketches {
     * never by the train corpus. INDEX-ARTIFACT cache class (r22): a
     * precomputable eval-side structure exactly like the bit-sets built
     * from it — before the cache every consumer re-ran the eval-side
-    * semi-join + distinct per call. Registered in Caches.maps; filled in
-    * Bench wave 2b in the SAME thunk as the bit-set build (sequential —
-    * no concurrent getOrElseUpdate on the key).
+    * semi-join + distinct per call.
     */
   private[graft] def benchEvalShingles(spark: SparkSession, dir: String): DataFrame =
-    evalShCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
-        Dedup.shingles(spark, dir)
-          .join(splits.filter(col("split") =!= "train").select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .join(Tables.documents(spark, dir)
-            .select(col("doc_id"), col("source").as("benchmark")), Seq("doc_id"))
-          .select("benchmark", "shingle").distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    evalShCache(spark, dir) {
+      val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
+      Dedup.shingles(spark, dir)
+        .join(splits.filter(col("split") =!= "train").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .join(Tables.documents(spark, dir)
+          .select(col("doc_id"), col("source").as("benchmark")), Seq("doc_id"))
+        .select("benchmark", "shingle").distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** PER-BENCHMARK Bloom bit-sets — the multi-benchmark form of
     * [[bloomEvalBits]] (VERDICT r17 item 4): real pipelines screen one
@@ -270,44 +263,43 @@ object Sketches {
     * resident across passes.
     */
   def benchEvalBits(spark: SparkSession, dir: String): DataFrame =
-    benchBitsCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        import spark.implicits._
-        // the eval-side distinct is the cached INDEX relation since r22
-        // (it feeds the sizing collect, the position projection, q126's
-        // audit and q119's union-grain audit) — no per-build checkpoint
-        val evd = benchEvalShingles(spark, dir)
-        val sizes = evd.groupBy("benchmark").agg(count(lit(1)).as("n"))
-          .as[(String, Long)].collect()
-          .map { case (b, n) => (b, n, sizedBloomBits(n)) }.toSeq
-        // a clamped rung is an ALARM, not a silent FP-rate drift (verdict
-        // r19): past the 2^24 ceiling the factor-16 design point no
-        // longer holds — the q128 report shows the realized rates, this
-        // names the offender at build time
-        sizes.filter(s => BloomSizeFactor * s._2 > BloomMaxBits.toLong)
-          .foreach { case (b, n, _) =>
-            System.err.println(s"[graft] bloom ladder CLAMPED for " +
-              s"benchmark '$b': $n distinct eval shingles need m > 2^24 " +
-              s"for the 0.24% FP design point — split the benchmark or " +
-              s"raise the ladder before trusting its gate") }
-        // n_eval rides the relation so q128's sizing report never
-        // re-derives the count the build already paid for
-        val mDf = sizes.toDF("benchmark", "n_eval", "mbits")
-        val out = evd
-          .join(broadcast(mDf), Seq("benchmark"))
-          .select(col("benchmark"), col("n_eval"), col("mbits"),
-            explode(array((0 until BloomK).map(i =>
-              bloomRawPositionOf(col("shingle"), i)): _*)).as("raw"))
-          .select(col("benchmark"), col("n_eval"), col("mbits"),
-            (col("raw") % col("mbits")).as("pos"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // materialize the bit-set eagerly (the r19/r20 shape, minus the
-        // per-build checkpoint reclaim — evd is now the long-lived cached
-        // relation owned by Caches, NOT a build-local checkpoint)
-        out.count()
-        out
-      })
+    benchBitsCache(spark, dir) {
+      import spark.implicits._
+      // the eval-side distinct is the cached INDEX relation since r22
+      // (it feeds the sizing collect, the position projection, q126's
+      // audit and q119's union-grain audit) — no per-build checkpoint
+      val evd = benchEvalShingles(spark, dir)
+      val sizes = evd.groupBy("benchmark").agg(count(lit(1)).as("n"))
+        .as[(String, Long)].collect()
+        .map { case (b, n) => (b, n, sizedBloomBits(n)) }.toSeq
+      // a clamped rung is an ALARM, not a silent FP-rate drift (verdict
+      // r19): past the 2^24 ceiling the factor-16 design point no
+      // longer holds — the q128 report shows the realized rates, this
+      // names the offender at build time
+      sizes.filter(s => BloomSizeFactor * s._2 > BloomMaxBits.toLong)
+        .foreach { case (b, n, _) =>
+          System.err.println(s"[graft] bloom ladder CLAMPED for " +
+            s"benchmark '$b': $n distinct eval shingles need m > 2^24 " +
+            s"for the 0.24% FP design point — split the benchmark or " +
+            s"raise the ladder before trusting its gate") }
+      // n_eval rides the relation so q128's sizing report never
+      // re-derives the count the build already paid for
+      val mDf = sizes.toDF("benchmark", "n_eval", "mbits")
+      val out = evd
+        .join(broadcast(mDf), Seq("benchmark"))
+        .select(col("benchmark"), col("n_eval"), col("mbits"),
+          explode(array((0 until BloomK).map(i =>
+            bloomRawPositionOf(col("shingle"), i)): _*)).as("raw"))
+        .select(col("benchmark"), col("n_eval"), col("mbits"),
+          (col("raw") % col("mbits")).as("pos"))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize the bit-set eagerly (the r19/r20 shape, minus the
+      // per-build checkpoint reclaim — evd is now the long-lived cached
+      // relation owned by Caches, NOT a build-local checkpoint)
+      out.count()
+      out
+    }
 
   /** The per-benchmark bit-sets SERIALIZED — (benchmark, hex) pairs
     * sorted by benchmark, the blobs an ingest executor ships as plan
@@ -322,8 +314,7 @@ object Sketches {
       .map { case (b, rows) =>
         b -> packBitsHex(rows.map(_.getLong(2)), rows.head.getInt(1)) }
 
-  private[graft] val multiBloomMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val multiBloomMemo = Artifact.relation("Sketches.multiBloomMemo", Artifact.Result)
 
   /** The unsorted per-(train doc, benchmark) flag relation — a RESULT
     * MEMO like [[bloomMemo]] (evicted per bench pass by
@@ -339,50 +330,49 @@ object Sketches {
     * edge join back to the train-doc × benchmark universe.
     */
   private def multiBenchFlags(spark: SparkSession, dir: String): DataFrame =
-    multiBloomMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        import spark.implicits._
-        val benches = benchBitsHex(spark, dir)
-        val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
-        val trainDocs = splits.filter(col("split") === "train").select("doc_id")
-        val out =
-          if (benches.isEmpty)
-            // no eval docs → no benchmarks: empty, correctly-typed
-            trainDocs.select(col("doc_id"), lit("").as("benchmark"),
-              lit(0L).as("n_shingles"), lit(0L).as("n_flagged")).limit(0)
-          else {
-            // RAW 24-bit positions, shared across benchmarks — each
-            // benchmark's BitSetContains masks them down to its own
-            // ladder rung (r19), so sizing costs zero extra projection
-            val tagged = Dedup.shingles(spark, dir)
-              .join(trainDocs, Seq("doc_id"), "left_semi")
-              .select(col("doc_id") +:
-                (0 until BloomK).map(i =>
-                  bloomRawPositionOf(col("shingle"), i).as(s"_pos$i")): _*)
-            val aggCols = count(lit(1)).as("n_shingles") +:
-              benches.zipWithIndex.map { case ((b, hex), bi) =>
-                val bits = hexBitWords(hex) // one array instance per benchmark
-                val allHit = (0 until BloomK)
-                  .map(i => graft.plans.BitSetContains(col(s"_pos$i"), bits, b))
-                  .reduce(_ && _)
-                sum(when(allHit, lit(1L)).otherwise(lit(0L))).as(s"_f$bi")
-              }
-            val agg = tagged.groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*)
-            val stacked = agg.select(col("doc_id"), col("n_shingles"),
-              explode(array(benches.zipWithIndex.map { case ((b, _), bi) =>
-                struct(lit(b).as("benchmark"), col(s"_f$bi").as("n_flagged"))
-              }: _*)).as("bf"))
-              .select(col("doc_id"), col("bf.benchmark"),
-                col("n_shingles"), col("bf.n_flagged"))
-            trainDocs
-              .crossJoin(broadcast(benches.map(_._1).toDF("benchmark")))
-              .join(stacked, Seq("doc_id", "benchmark"), "left")
-              .select(col("doc_id"), col("benchmark"),
-                coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-                coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
-          }
-        out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    multiBloomMemo(spark, dir) {
+      import spark.implicits._
+      val benches = benchBitsHex(spark, dir)
+      val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
+      val trainDocs = splits.filter(col("split") === "train").select("doc_id")
+      val out =
+        if (benches.isEmpty)
+          // no eval docs → no benchmarks: empty, correctly-typed
+          trainDocs.select(col("doc_id"), lit("").as("benchmark"),
+            lit(0L).as("n_shingles"), lit(0L).as("n_flagged")).limit(0)
+        else {
+          // RAW 24-bit positions, shared across benchmarks — each
+          // benchmark's BitSetContains masks them down to its own
+          // ladder rung (r19), so sizing costs zero extra projection
+          val tagged = Dedup.shingles(spark, dir)
+            .join(trainDocs, Seq("doc_id"), "left_semi")
+            .select(col("doc_id") +:
+              (0 until BloomK).map(i =>
+                bloomRawPositionOf(col("shingle"), i).as(s"_pos$i")): _*)
+          val aggCols = count(lit(1)).as("n_shingles") +:
+            benches.zipWithIndex.map { case ((b, hex), bi) =>
+              val bits = hexBitWords(hex) // one array instance per benchmark
+              val allHit = (0 until BloomK)
+                .map(i => graft.plans.BitSetContains(col(s"_pos$i"), bits, b))
+                .reduce(_ && _)
+              sum(when(allHit, lit(1L)).otherwise(lit(0L))).as(s"_f$bi")
+            }
+          val agg = tagged.groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*)
+          val stacked = agg.select(col("doc_id"), col("n_shingles"),
+            explode(array(benches.zipWithIndex.map { case ((b, _), bi) =>
+              struct(lit(b).as("benchmark"), col(s"_f$bi").as("n_flagged"))
+            }: _*)).as("bf"))
+            .select(col("doc_id"), col("bf.benchmark"),
+              col("n_shingles"), col("bf.n_flagged"))
+          trainDocs
+            .crossJoin(broadcast(benches.map(_._1).toDF("benchmark")))
+            .join(stacked, Seq("doc_id", "benchmark"), "left")
+            .select(col("doc_id"), col("benchmark"),
+              coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
+              coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
+        }
+      out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** q125 — multi-benchmark Bloom decontamination: q102's gate run
     * against EVERY benchmark's bit-set in the same single train-side
@@ -414,8 +404,7 @@ object Sketches {
   def multiBenchFpAudit(spark: SparkSession, dir: String): DataFrame =
     multiBenchFpRaw(spark, dir).orderBy("doc_id", "benchmark")
 
-  private[graft] val multiBenchFpMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val multiBenchFpMemo = Artifact.relation("Sketches.multiBenchFpMemo", Artifact.Result)
 
   /** The unsorted audit relation — q126 sorts it at (doc, benchmark)
     * grain; q128 aggregates it to benchmark grain (no sort below an agg).
@@ -425,22 +414,21 @@ object Sketches {
     * `Caches.clearResultMemos` evicts it so every bench pass re-pays.
     */
   private def multiBenchFpRaw(spark: SparkSession, dir: String): DataFrame =
-    multiBenchFpMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
-        val exact = Dedup.shingles(spark, dir)
-          .join(splits.filter(col("split") === "train").select("doc_id"),
-            Seq("doc_id"), "left_semi")
-          .join(broadcast(benchEvalShingles(spark, dir)), Seq("shingle"))
-          .groupBy("doc_id", "benchmark").agg(count(lit(1)).as("n_exact"))
-        multiBenchFlags(spark, dir)
-          .join(exact, Seq("doc_id", "benchmark"), "left")
-          .select(col("doc_id"), col("benchmark"), col("n_shingles"),
-            coalesce(col("n_exact"), lit(0L)).as("n_exact"), col("n_flagged"),
-            (col("n_flagged") - coalesce(col("n_exact"), lit(0L)))
-              .as("n_false_pos"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    multiBenchFpMemo(spark, dir) {
+      val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
+      val exact = Dedup.shingles(spark, dir)
+        .join(splits.filter(col("split") === "train").select("doc_id"),
+          Seq("doc_id"), "left_semi")
+        .join(broadcast(benchEvalShingles(spark, dir)), Seq("shingle"))
+        .groupBy("doc_id", "benchmark").agg(count(lit(1)).as("n_exact"))
+      multiBenchFlags(spark, dir)
+        .join(exact, Seq("doc_id", "benchmark"), "left")
+        .select(col("doc_id"), col("benchmark"), col("n_shingles"),
+          coalesce(col("n_exact"), lit(0L)).as("n_exact"), col("n_flagged"),
+          (col("n_flagged") - coalesce(col("n_exact"), lit(0L)))
+            .as("n_false_pos"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** q128 — the Bloom SIZING report, benchmark grain (r19, verdict r18
     * item 2's calibration deliverable): for each benchmark, its distinct
@@ -488,8 +476,7 @@ object Sketches {
     * The only shuffles are doc-grained: the partial agg and the edge join
     * back to the train-doc universe.
     */
-  private[graft] val bloomMemo =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val bloomMemo = Artifact.relation("Sketches.bloomMemo", Artifact.Result)
 
   /** The unsorted per-train-doc flag relation — a RESULT MEMO (a detection
     * OUTPUT, same cache class as the verified-pair relations): within a
@@ -498,31 +485,30 @@ object Sketches {
     * evicts it so every bench pass re-pays the detection.
     */
   private def bloomFlags(spark: SparkSession, dir: String): DataFrame =
-    bloomMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
-        val trainDocs = splits.filter(col("split") === "train").select("doc_id")
-        val bits = bloomEvalBits(spark, dir)
-        val tagged = Dedup.shingles(spark, dir)
-          .join(trainDocs, Seq("doc_id"), "left_semi")
-          .select(col("doc_id") +:
-            (0 until BloomK).map(i => bloomPosition(i).as(s"_pos$i")): _*)
-        val hit = (0 until BloomK).foldLeft(tagged) { (df, i) =>
-          df.join(broadcast(bits.select(col("pos").as(s"_hit$i"))),
-            df(s"_pos$i") === col(s"_hit$i"), "left")
-        }
-        val allHit =
-          (0 until BloomK).map(i => col(s"_hit$i").isNotNull).reduce(_ && _)
-        val agg = hit.groupBy("doc_id").agg(
-          count(lit(1)).as("n_shingles"),
-          sum(when(allHit, lit(1L)).otherwise(lit(0L))).as("n_flagged"))
-        trainDocs
-          .join(agg, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-            coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    bloomMemo(spark, dir) {
+      val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
+      val trainDocs = splits.filter(col("split") === "train").select("doc_id")
+      val bits = bloomEvalBits(spark, dir)
+      val tagged = Dedup.shingles(spark, dir)
+        .join(trainDocs, Seq("doc_id"), "left_semi")
+        .select(col("doc_id") +:
+          (0 until BloomK).map(i => bloomPosition(i).as(s"_pos$i")): _*)
+      val hit = (0 until BloomK).foldLeft(tagged) { (df, i) =>
+        df.join(broadcast(bits.select(col("pos").as(s"_hit$i"))),
+          df(s"_pos$i") === col(s"_hit$i"), "left")
+      }
+      val allHit =
+        (0 until BloomK).map(i => col(s"_hit$i").isNotNull).reduce(_ && _)
+      val agg = hit.groupBy("doc_id").agg(
+        count(lit(1)).as("n_shingles"),
+        sum(when(allHit, lit(1L)).otherwise(lit(0L))).as("n_flagged"))
+      trainDocs
+        .join(agg, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
+          coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   def bloomDecontamination(spark: SparkSession, dir: String): DataFrame =
     bloomFlags(spark, dir).orderBy("doc_id")
@@ -578,8 +564,7 @@ object Sketches {
       .select(col("shingle"), col("df").as("n_exact"),
         posexplode(cmsBucketArray).as(Seq("i", "bucket")))
 
-  private[graft] val cmsGridCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val cmsGridCache = Artifact.relation("Sketches.cmsGridCache", Artifact.Index)
 
   /** The d×w cell grid as a relation — q103's sketch state, also the
     * batch side of the streaming twin's cell-for-cell parity test.
@@ -590,14 +575,13 @@ object Sketches {
     * rows whatever the corpus). Before this cache q103 re-paid the
     * grid's posexplode + groupBy every pass, and that rebuild was the
     * slot's dominant, high-variance cost (r21 QProbe: 1.14–2.15 s warm
-    * across 3 same-host passes; the r20 drift flag). Registered in
-    * Caches.maps (index class) with a wave-2b fill thunk.
+    * across 3 same-host passes; the r20 drift flag).
     */
   def cmsCells(spark: SparkSession, dir: String): DataFrame =
-    cmsGridCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir",
+    cmsGridCache(spark, dir) {
       cmsTagged(spark, dir).groupBy("i", "bucket").agg(sum("n_exact").as("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Top-`TopHitters` 5-gram shingles by exact document frequency, with
     * the count-min-sketch estimate and its overcount (provably ≥ 0)

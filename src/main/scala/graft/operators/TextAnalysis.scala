@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.functions.TextFns
 
 /** Text-analysis operators for a training-data pipeline: quality scoring,
@@ -80,8 +80,7 @@ object TextAnalysis {
   def hashSplit(spark: SparkSession, dir: String): DataFrame =
     splitRaw(spark, dir).orderBy("doc_id")
 
-  private[graft] val splitCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val splitCache = Artifact.relation("TextAnalysis.splitCache", Artifact.Index)
 
   /** UNSORTED split assignment — building-block form for internal joins
     * (splitContamination); q56 sorts at its edge via hashSplit.
@@ -90,30 +89,21 @@ object TextAnalysis {
     * fingerprint relation — that before this cache was recomputed by
     * EVERY consumer (q56/q59/q81/q102/q119/q125/q126 plus both eval
     * bit-set builds), each paying a full documents scan + md5 over the
-    * whole text column per call. Two tiny columns persisted; filled in
-    * Bench wave 2 so the CONCURRENT wave-2b readers (bloomEvalBits,
-    * benchEvalBits, …) never race the first fill (the TrieMap
-    * getOrElseUpdate double-eval hazard). The TINY-dir key is covered
-    * the same way (advice r21): Bench's sweep prefills
-    * wave2Steps(sweepDir) — including this cache — before its width-8
-    * worker pool starts, so no two sweep workers can race the tiny-dir
-    * first fill either; the residual CacheManager same-plan dedup is a
-    * backstop, not the mechanism.
+    * whole text column per call. Two tiny columns persisted.
     */
   private[operators] def splitRaw(spark: SparkSession, dir: String): DataFrame =
-    splitCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val nib = (j: Int) =>
-          expr(s"(instr('0123456789abcdef', substring(md5(text), $j, 1)) - 1)")
-        val bucket = (nib(1) * 16 + nib(2)).cast("long")
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), bucket.as("bucket"))
-          .withColumn("split",
-            when(col("bucket") < 204, "train")
-              .when(col("bucket") < 230, "val")
-              .otherwise("test"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    splitCache(spark, dir) {
+      val nib = (j: Int) =>
+        expr(s"(instr('0123456789abcdef', substring(md5(text), $j, 1)) - 1)")
+      val bucket = (nib(1) * 16 + nib(2)).cast("long")
+      Tables.documents(spark, dir)
+        .select(col("doc_id"), bucket.as("bucket"))
+        .withColumn("split",
+          when(col("bucket") < 204, "train")
+            .when(col("bucket") < 230, "val")
+            .otherwise("test"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Within-document repetition — the duplicate-n-gram quality filter a
     * pretraining pipeline runs before anything cross-document: word-bigram
@@ -169,8 +159,7 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  private[graft] val tfidfCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+  private[graft] val tfidfCache = Artifact.relation("TextAnalysis.tfidfCache", Artifact.Index)
 
   /** TF-IDF per (doc, token) from the shared (doc,token,qty) relation:
     * tfidf = qty · ln(N / df), N = docs with ≥1 kept token. UNSORTED
@@ -183,21 +172,20 @@ object TextAnalysis {
     * detection result); q34 and q43 both read the relation.
     */
   def tfidfRaw(spark: SparkSession, dir: String): DataFrame =
-    tfidfCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        val kept = TokenPipeline.docTokenCounts(spark, dir)
-        // N stays a lazy broadcast scalar (1-row cross join), not an eager
-        // .count() job at plan-construction time
-        val nDf = kept.agg(countDistinct(col("doc_id")).as("n_docs"))
-        val df = kept.groupBy("token").agg(count(lit(1)).as("df"))
-        kept.join(broadcast(df), Seq("token"))
-          .crossJoin(broadcast(nDf))
-          .select(
-            col("doc_id"), col("token"), col("qty"), col("df"),
-            round(col("qty") * log(col("n_docs").cast("double") / col("df")), 6)
-              .as("tfidf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    tfidfCache(spark, dir) {
+      val kept = TokenPipeline.docTokenCounts(spark, dir)
+      // N stays a lazy broadcast scalar (1-row cross join), not an eager
+      // .count() job at plan-construction time
+      val nDf = kept.agg(countDistinct(col("doc_id")).as("n_docs"))
+      val df = kept.groupBy("token").agg(count(lit(1)).as("df"))
+      kept.join(broadcast(df), Seq("token"))
+        .crossJoin(broadcast(nDf))
+        .select(
+          col("doc_id"), col("token"), col("qty"), col("df"),
+          round(col("qty") * log(col("n_docs").cast("double") / col("df")), 6)
+            .as("tfidf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** q34 form: TF-IDF sorted for output. */
   def tfidf(spark: SparkSession, dir: String): DataFrame =
@@ -254,24 +242,22 @@ object TextAnalysis {
       .orderBy("src_a", "src_b")
   }
 
-  private[graft] val srcTokCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val srcTokCache = Artifact.relation("TextAnalysis.srcTokCache", Artifact.Index)
 
   /** Cached DISTINCT (source, token) relation — sourceOverlap references
     * it on both sides of its self-join plus the sizes aggregate, and
     * re-aliased exprIds defeat exchange reuse, so without the persist the
     * hub-join + distinct would execute once per reference.
     */
-  // private[graft]: Bench's warmup wave 2b prefills this index artifact
+  // private[graft]: Bench's INDEX fill prefills this index artifact
   private[graft] def sourceTokens(spark: SparkSession, dir: String): DataFrame =
-    srcTokCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        TokenPipeline.docTokenCounts(spark, dir)
-          .join(Tables.documents(spark, dir).select("doc_id", "source"),
-            Seq("doc_id"))
-          .select("source", "token").distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    srcTokCache(spark, dir) {
+      TokenPipeline.docTokenCounts(spark, dir)
+        .join(Tables.documents(spark, dir).select("doc_id", "source"),
+          Seq("doc_id"))
+        .select("source", "token").distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Deterministic stratified sample (q65): within each source stratum,
     * rank docs by (md5 of salted content, doc_id) and keep the first
@@ -323,8 +309,7 @@ object TextAnalysis {
       .orderBy("batch")
   }
 
-  private[graft] val rawTokCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val rawTokCache = Artifact.relation("TextAnalysis.rawTokCache", Artifact.Index)
 
   /** Cached ordered-token relation (doc_id, toks). The token HUB
     * (TokenPipeline.docTokenCounts) can't serve order-sensitive
@@ -334,14 +319,12 @@ object TextAnalysis {
     * order.
     */
   private[graft] def rawTokens(spark: SparkSession, dir: String): DataFrame =
-    rawTokCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        withTokens(spark, dir).select("doc_id", "toks")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    rawTokCache(spark, dir) {
+      withTokens(spark, dir).select("doc_id", "toks")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-  private[graft] val bigramCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val bigramCache = Artifact.relation("TextAnalysis.bigramCache", Artifact.Index)
 
   /** Cached corpus-wide bigram adjacency counts (src, dst, c) — an INDEX
     * ARTIFACT (precomputable per-corpus structure, CLAUDE.md cache
@@ -354,15 +337,14 @@ object TextAnalysis {
     * than the token stream it derives from.
     */
   private[graft] def bigramCounts(spark: SparkSession, dir: String): DataFrame =
-    bigramCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        rawTokens(spark, dir)
-          .select(explode(TextFns.shingleArray(col("toks"), 2)).as("bg"))
-          .select(split(col("bg"), " ").as("p"))
-          .select(element_at(col("p"), 1).as("src"), element_at(col("p"), 2).as("dst"))
-          .groupBy("src", "dst").agg(count(lit(1)).as("c"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    bigramCache(spark, dir) {
+      rawTokens(spark, dir)
+        .select(explode(TextFns.shingleArray(col("toks"), 2)).as("bg"))
+        .select(split(col("bg"), " ").as("p"))
+        .select(element_at(col("p"), 1).as("src"), element_at(col("p"), 2).as("dst"))
+        .groupBy("src", "dst").agg(count(lit(1)).as("c"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Collocation extraction (q70): adjacent raw-token pairs scored by
     * pointwise mutual information — PMI = ln(n_ab·N / (n_a·n_b)) over
@@ -529,7 +511,7 @@ object TextAnalysis {
   }
 
   private[graft] val mergeMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(Long, String, String, Long, String)]]
+    Artifact.value[Seq[(Long, String, String, Long, String)]]("TextAnalysis.mergeMemo", Artifact.Result)
 
   /** The learned merge table, memoized per (session, dir, rounds) — a
     * RESULT memo in the Caches.clearResultMemos sense (the bench clears
@@ -540,12 +522,11 @@ object TextAnalysis {
     */
   private def learnMerges(spark: SparkSession, dir: String,
       rounds: Int): Seq[(Long, String, String, Long, String)] =
-    mergeMemo.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir#$rounds", {
-        val (merges, toks) = bpeLoop(spark, dir, rounds)
-        org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(toks)
-        merges
-      })
+    mergeMemo(spark, dir, rounds) {
+      val (merges, toks) = bpeLoop(spark, dir, rounds)
+      org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(toks)
+      merges
+    }
 
   /** The merge loop itself: returns the merges AND the final rewritten
     * token stream, checkpointed — the CALLER owns releasing it via
@@ -766,8 +747,7 @@ object TextAnalysis {
   /** Per-(doc, bucket) hashed-bigram counts — the feature relation the
     * DSIR learner aggregates. Bucket = first two md5 nibbles (0..255).
     */
-  private[graft] val dsirCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+  private[graft] val dsirCache = Artifact.relation("TextAnalysis.dsirCache", Artifact.Index)
 
   /** Per-doc hashed-bigram bucket counts (doc_id, bucket, n) — the DSIR
     * feature vectors. Cached per (session, dir) as an INDEX ARTIFACT:
@@ -779,18 +759,16 @@ object TextAnalysis {
     * the scores.
     */
   private[graft] def dsirDocBuckets(spark: SparkSession, dir: String): DataFrame =
-    dsirCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        rawTokens(spark, dir)
-          .select(col("doc_id"), explode(TextFns.shingleArray(col("toks"), 2)).as("b"))
-          .select(col("doc_id"),
-            expr("cast(conv(substring(md5(b), 1, 2), 16, 10) as bigint)").as("bucket"))
-          .groupBy("doc_id", "bucket").agg(count(lit(1)).as("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    dsirCache(spark, dir) {
+      rawTokens(spark, dir)
+        .select(col("doc_id"), explode(TextFns.shingleArray(col("toks"), 2)).as("b"))
+        .select(col("doc_id"),
+          expr("cast(conv(substring(md5(b), 1, 2), 16, 10) as bigint)").as("bucket"))
+        .groupBy("doc_id", "bucket").agg(count(lit(1)).as("n"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
-  private[graft] val dsirWtCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
+  private[graft] val dsirWtCache = Artifact.relation("TextAnalysis.dsirWtCache", Artifact.Index)
 
   /** The learned 256-row DSIR weight table (bucket → quantized
     * log-likelihood ratio) — the artifact a 100 TB deployment would
@@ -803,11 +781,10 @@ object TextAnalysis {
     * that q82 and q109 each re-derived every pass.
     */
   def dsirWeightTable(spark: SparkSession, dir: String): DataFrame =
-    dsirWtCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        dsirWeightTableRaw(spark, dir)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    dsirWtCache(spark, dir) {
+      dsirWeightTableRaw(spark, dir)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def dsirWeightTableRaw(spark: SparkSession, dir: String): DataFrame = {
     val docB = dsirDocBuckets(spark, dir)
@@ -867,8 +844,7 @@ object TextAnalysis {
         sum(col("train_ok")).as("n_train_ok"))
       .orderBy("source")
 
-  private[graft] val verdictCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val verdictCache = Artifact.relation("TextAnalysis.verdictCache", Artifact.Result)
 
   /** UNSORTED per-document verdict — building-block form shared by q81
     * (sorted edge), q86 (per-source aggregate), and the two Pipeline
@@ -883,10 +859,9 @@ object TextAnalysis {
     * relation).
     */
   private def trainVerdictRaw(spark: SparkSession, dir: String): DataFrame =
-    verdictCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        trainVerdictBuild(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    verdictCache(spark, dir) {
+      trainVerdictBuild(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def trainVerdictBuild(spark: SparkSession, dir: String): DataFrame = {
     val splits = splitRaw(spark, dir).select("doc_id", "split")
@@ -990,8 +965,7 @@ object TextAnalysis {
     * edge round(6) absorbs the ulp, exactly as q34/q70. Empty docs are
     * out of domain. One (doc, token) aggregate + one per-doc fold.
     */
-  private[graft] val rawCountsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val rawCountsCache = Artifact.relation("TextAnalysis.rawCountsCache", Artifact.Index)
 
   /** Raw per-(doc, token) occurrence counts over the UNFILTERED token
     * stream — INDEX-ARTIFACT cache class (r22): the exact term-frequency
@@ -1000,17 +974,15 @@ object TextAnalysis {
     * per call and q99's LM scoring subtree evaluated it THREE times per
     * call (doc side, corpus-count side, corpus-total side — the before
     * plan shows the explode+aggregate chain under three separate
-    * exchanges). Registered in Caches.maps; filled in Bench wave 2b
-    * (reads rawTokens, a wave-2 artifact).
+    * exchanges). Reads rawTokens.
     */
   private[graft] def rawTokenCounts(spark: SparkSession, dir: String): DataFrame =
-    rawCountsCache.getOrElseUpdate(
-      s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
-        rawTokens(spark, dir)
-          .select(col("doc_id"), explode(col("toks")).as("token"))
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("n"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-      })
+    rawCountsCache(spark, dir) {
+      rawTokens(spark, dir)
+        .select(col("doc_id"), explode(col("toks")).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("n"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   def tokenEntropy(spark: SparkSession, dir: String): DataFrame =
     rawTokenCounts(spark, dir)

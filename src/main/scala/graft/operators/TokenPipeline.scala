@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.Tables
+import graft.{Artifact, Tables}
 import graft.functions.TextFns
 
 /** The reference's core dataflow (jbohanon/capstone-etl main.go:126–283),
@@ -77,7 +77,7 @@ object TokenPipeline {
   // The (doc_id, token, qty) relation is the hub every downstream operator
   // reuses (reference keeps it as tknQtyMap per doc, main.go:63); persist it
   // once per input dir instead of re-tokenizing per query.
-  private[graft] val cache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val cache = Artifact.relation("TokenPipeline.cache", Artifact.Index)
 
   /** (doc_id, token, qty) after dictionary semi-join (O11) and stop-word
     * anti-join (O12); qty = occurrences in doc (O14). Cached per (session,
@@ -93,12 +93,12 @@ object TokenPipeline {
     * and an equi anti-join is NOT IN.
     */
   def docTokenCounts(spark: SparkSession, dir: String): DataFrame =
-    cache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    cache(spark, dir) {
       rawTokens(Tables.documents(spark, dir))
         .filter(col("token").isin(Dictionary: _*) && !col("token").isin(StopWords: _*))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("qty"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Per-document statistics: distinct kept tokens (main.go:57), total kept
     * tokens, and the L2 norm over TF quantities (main.go:272–281). Docs whose
@@ -123,7 +123,7 @@ object TokenPipeline {
         coalesce(round(col("nrm"), 6), lit(0.0)).as("euclidian_norm"))
   }
 
-  private[graft] val statsCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val statsCache = Artifact.relation("TokenPipeline.statsCache", Artifact.Index)
 
   /** Cached per-doc aggregate triple (unique tokens, total tokens,
     * UNROUNDED L2 norm) over the kept-token counts — the index-artifact
@@ -133,15 +133,15 @@ object TokenPipeline {
     * (q47) read the raw norm. Doc-grain, three numbers a row.
     */
   private[graft] def docAggregates(spark: SparkSession, dir: String): DataFrame =
-    statsCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    statsCache(spark, dir) {
       docTokenCounts(spark, dir).groupBy("doc_id").agg(
         count(lit(1)).as("count_unique_words"),
         sum("qty").as("total_tokens"),
         sqrt(sum(col("qty") * col("qty"))).as("nrm"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
-  private[graft] val dictCache = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  private[graft] val dictCache = Artifact.relation("TokenPipeline.dictCache", Artifact.Index)
 
   /** Global token dictionary: distinct tokens, sorted, dense 0-based ids
     * (reference main.go:143–153). Dense ids via the scale-safe sorted
@@ -150,13 +150,13 @@ object TokenPipeline {
     * five queries join against this relation.
     */
   def tokenDictionary(spark: SparkSession, dir: String): DataFrame =
-    dictCache.getOrElseUpdate(s"${org.apache.spark.sql.GraftBridge.sessionKey(spark)}#$dir", {
+    dictCache(spark, dir) {
       Ids.withDenseId(
         docTokenCounts(spark, dir).select("token").distinct(),
         "token_id", col("token"))
         .select("token_id", "token")
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   /** Inverted index in relational form: (token_id, token, doc_id, qty)
     * (reference main.go:151–163 materializes this as posting-list structs;

@@ -29,13 +29,13 @@ class TextAnalysisSpec extends AnyFunSuite {
   test("split assignment is an INDEX-class cache: registered, memoized") {
     val key = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#" + sf
     TextAnalysis.hashSplit(spark, sf).count()
-    assert(TextAnalysis.splitCache.contains(key))
+    assert(TextAnalysis.splitCache.keys.contains(key))
     // INDEX class (r21): survives the per-pass result-memo eviction (a
     // per-doc hash assignment is precomputable per-item structure, the
     // fingerprint class) and is seen by the warmup-completeness
-    // instrument, so the warmup waves must fill it
+    // instrument, so Bench's INDEX fill must fill it
     Caches.clearResultMemos(spark)
-    assert(TextAnalysis.splitCache.contains(key))
+    assert(TextAnalysis.splitCache.keys.contains(key))
     assert(Caches.indexKeys(spark, sf).contains(key))
   }
 

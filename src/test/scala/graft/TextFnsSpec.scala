@@ -61,4 +61,15 @@ class TextFnsSpec extends AnyFunSuite {
     assert(rows(1) === ("4/42", "4"))
     assert(rows(2) === ("1/12/123/1234", "1/12/123"))
   }
+
+  test("pagePath covers the whole long range; a null id gives an empty path") {
+    val ids = Seq(0L, 9L, 10L, -7L, Long.MaxValue, Long.MinValue)
+    val got = (ids.map(Option(_)) :+ None).toDF("id")
+      .select(TextFns.pagePath($"id")).as[String].collect().toSeq
+    val want = ids.map { id =>
+      val s = id.toString
+      (1 to s.length).map(s.take).mkString("/")
+    } :+ ""
+    assert(got === want)
+  }
 }
