@@ -160,6 +160,32 @@ class TokenPipelineSpec extends AnyFunSuite {
     assert(TokenPipeline.docTokenCounts(spark, sf).count() > 0)
   }
 
+  test("Caches.clear and clearDir reach the index caches added in round 11") {
+    import graft.operators.{Dedup, Similarity}
+    Dedup.simhashSignature(spark, sf, 16).count()
+    Similarity.vectorIndex(spark, sf).count()
+    TokenPipeline.docAggregates(spark, sf).count()
+    Dedup.embeddingRepMap(spark, sf).count()
+    Dedup.shingleDf(spark, sf).count() // round-12 index cache
+    graft.operators.TextAnalysis.dsirDocBuckets(spark, sf).count() // round-12 index cache
+    graft.operators.TextAnalysis.dsirWeightTable(spark, sf).count() // round-12 index cache
+    val prefix = org.apache.spark.sql.GraftBridge.sessionKey(spark) + "#"
+    val artifacts = Seq[Artifact[_]](
+      Dedup.simhashSigCache, Similarity.idxCache, TokenPipeline.statsCache,
+      Dedup.embRepCache, Dedup.dfCache, graft.operators.TextAnalysis.dsirCache,
+      graft.operators.TextAnalysis.dsirWtCache)
+    artifacts.foreach(a =>
+      assert(a.keys.exists(_.startsWith(prefix)), s"${a.name} not populated"))
+    Caches.clear(spark)
+    artifacts.foreach(a =>
+      assert(!a.keys.exists(_.startsWith(prefix)), s"${a.name} survived clear"))
+    // clearDir must also evict parameterized "…#dir#<bits>" entries
+    Dedup.simhashSignature(spark, sf, 16).count()
+    Caches.clearDir(spark, sf)
+    assert(!Dedup.simhashSigCache.keys.exists(_.startsWith(prefix)),
+      "parameterized simhash key survived clearDir")
+  }
+
   test("hierarchy: parent of doc N is doc N/10; roots have parent -1") {
     val links = Hierarchy.parentLinks(spark, sf)
     val bad = links.filter(
