@@ -21,7 +21,7 @@ import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
   * on it see the same exception, and the next caller rebuilds.
   */
 final class Artifact[V] private (val name: String, val kind: Artifact.Kind,
-    free: (String, V) => Unit) {
+    stage: V => V, free: (String, V) => Unit) {
   import Artifact.Fill
 
   private val fills = new ConcurrentHashMap[String, Fill[V]]()
@@ -29,7 +29,7 @@ final class Artifact[V] private (val name: String, val kind: Artifact.Kind,
   def apply(spark: SparkSession, dir: String, params: Any*)(build: => V): V = {
     val key = (GraftBridge.sessionKey(spark) +: dir +: params).mkString("#")
     val hit = fills.get(key)
-    val fill = if (hit != null) hit else fills.computeIfAbsent(key, _ => new Fill(() => build))
+    val fill = if (hit != null) hit else fills.computeIfAbsent(key, _ => new Fill(() => stage(build)))
     try fill.value
     catch { case e: Throwable => fills.remove(key, fill); throw e }
   }
@@ -68,23 +68,18 @@ object Artifact {
 
   private def declare[V](a: Artifact[V]): Artifact[V] = { declared.add(a); a }
 
-  /** A persisted relation. The default free unpersists it and any
-    * checkpoint RDD behind it; `free` also gets the entry's key.
+  /** A relation: its build returns a plain frame, which the fill persists
+    * with `Stage.keep`. The default free is `Stage.free` (the persist and
+    * every checkpoint the build staged under it); `free` also gets the
+    * entry's key.
     */
   def relation(name: String, kind: Kind,
-      free: (String, DataFrame) => Unit = (_, df) => release(df)): Artifact[DataFrame] =
-    declare(new Artifact(name, kind, free))
+      free: (String, DataFrame) => Unit = (_, df) => Stage.free(df)): Artifact[DataFrame] =
+    declare(new Artifact(name, kind, Stage.keep, free))
 
   /** A driver-side value: nothing to free beyond the entry. */
   def value[V](name: String, kind: Kind): Artifact[V] =
-    declare(new Artifact[V](name, kind, (_, _) => ()))
-
-  def release(df: DataFrame): Unit = {
-    df.unpersist() // CacheManager-backed relations (persist())
-    // checkpoint-backed relations: unpersist is a no-op there, the RDD
-    // itself holds the blocks
-    GraftBridge.unpersistCheckpointRdds(df)
-  }
+    declare(new Artifact[V](name, kind, identity, (_, _) => ()))
 
   /** One key's build, run at most once; the outcome, value or exception,
     * is kept for every caller that reached this holder.

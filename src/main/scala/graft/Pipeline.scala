@@ -84,7 +84,7 @@ object Pipeline {
     * the verdict join is doc_id-keyed; text is written once.
     */
   def cleanCorpus(spark: SparkSession, dir: String, outPath: String): Map[String, Long] = {
-    // persisted once (the rawTokens idiom): the scrub regexes and the
+    // staged once (the rawTokens idiom): the scrub regexes and the
     // tokenize each run ONE corpus pass — purgeCore reads toks twice
     // (window explode + rebuild join) and the final join reads the
     // scrubbed metadata again, all off the materialized relations
@@ -93,45 +93,43 @@ object Pipeline {
       .select(col("doc_id"), col("lang"), col("source"),
         TextAnalysis.piiRedactCol(col("text")).as("text"),
         TextAnalysis.piiHitsCol(col("text")).as("pii_hits"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val toks = scrubbed.select(col("doc_id"),
       graft.functions.TextFns.tokenize(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val purged = TextAnalysis.purgeCore(toks)
-      .select(col("doc_id"),
-        concat_ws(" ", flatten(col("kept"))).as("clean_text"),
-        aggregate(col("kept"), lit(0L), (a, sl) => a + size(sl))
-          .as("n_tokens"),
-        (size(col("slices")) - size(col("kept"))).cast("long")
-          .as("windows_dropped"))
-    val verdict = TextAnalysis.trainCorpus(spark, dir)
-      .select("doc_id", "split", "train_ok")
-    val keep = verdict.filter(
-      (col("split") === "train" && col("train_ok") === 1L) ||
-        col("split") =!= "train")
-    val out = scrubbed.drop("text")
-      .join(purged, Seq("doc_id"))
-      .join(keep, Seq("doc_id"))
-      .select(col("doc_id"), col("clean_text"), col("lang"), col("n_tokens"),
-        col("pii_hits"), col("windows_dropped"), col("split"), col("source"))
-    sources.Sources.writeParquet(out, s"$outPath/corpus",
-      partitionCols = Seq("split", "source"))
-    // stage-level counts from what was actually WRITTEN
-    val w = spark.read.parquet(s"$outPath/corpus")
-    val Seq(nDocs, nTok, nPii, nWin) = w.agg(count(lit(1)),
-      sum("n_tokens"), sum("pii_hits"), sum("windows_dropped"))
-      .collect().head.toSeq.map(v => v.asInstanceOf[Long]).toSeq
-    val counts = Map(
-      "docs_in" -> scrubbed.count(),
-      "docs_written" -> nDocs, "tokens_written" -> nTok,
-      "pii_hits_redacted" -> nPii, "windows_dropped" -> nWin)
-    val manifest = counts.toSeq.sortBy(_._1)
-      .map { case (s, n) => s""""$s":$n""" }.mkString("{", ",", "}")
-    Files.write(Paths.get(s"$outPath/manifest.json"),
-      manifest.getBytes(StandardCharsets.UTF_8))
-    toks.unpersist()
-    scrubbed.unpersist()
-    counts
+    Stage.using(scrubbed)(_ => Stage.using(toks) { _ =>
+      val purged = TextAnalysis.purgeCore(toks)
+        .select(col("doc_id"),
+          concat_ws(" ", flatten(col("kept"))).as("clean_text"),
+          aggregate(col("kept"), lit(0L), (a, sl) => a + size(sl))
+            .as("n_tokens"),
+          (size(col("slices")) - size(col("kept"))).cast("long")
+            .as("windows_dropped"))
+      val verdict = TextAnalysis.trainCorpus(spark, dir)
+        .select("doc_id", "split", "train_ok")
+      val keep = verdict.filter(
+        (col("split") === "train" && col("train_ok") === 1L) ||
+          col("split") =!= "train")
+      val out = scrubbed.drop("text")
+        .join(purged, Seq("doc_id"))
+        .join(keep, Seq("doc_id"))
+        .select(col("doc_id"), col("clean_text"), col("lang"), col("n_tokens"),
+          col("pii_hits"), col("windows_dropped"), col("split"), col("source"))
+      sources.Sources.writeParquet(out, s"$outPath/corpus",
+        partitionCols = Seq("split", "source"))
+      // stage-level counts from what was actually WRITTEN
+      val w = spark.read.parquet(s"$outPath/corpus")
+      val Seq(nDocs, nTok, nPii, nWin) = w.agg(count(lit(1)),
+        sum("n_tokens"), sum("pii_hits"), sum("windows_dropped"))
+        .collect().head.toSeq.map(v => v.asInstanceOf[Long]).toSeq
+      val counts = Map(
+        "docs_in" -> scrubbed.count(),
+        "docs_written" -> nDocs, "tokens_written" -> nTok,
+        "pii_hits_redacted" -> nPii, "windows_dropped" -> nWin)
+      val manifest = counts.toSeq.sortBy(_._1)
+        .map { case (s, n) => s""""$s":$n""" }.mkString("{", ",", "}")
+      Files.write(Paths.get(s"$outPath/manifest.json"),
+        manifest.getBytes(StandardCharsets.UTF_8))
+      counts
+    })
   }
 
   /** The persisted cross-corpus chunk-hash index (VERDICT r12 #5 — the
@@ -222,9 +220,7 @@ object Pipeline {
     // entirely: at the billion-row scale shape an idempotent micro-batch
     // must not pay O(index) I/O to change nothing (review r13; the old
     // form also re-scanned the store post-swap just to derive the counts)
-    val newOnly = dumpHashes.join(before, Seq("chunk_hash"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage.using(dumpHashes.join(before, Seq("chunk_hash"), "left_anti")) { newOnly =>
       val nAdded = newOnly.count()
       if (nAdded > 0L) {
         val tmp = indexPath + ".next"
@@ -244,7 +240,7 @@ object Pipeline {
       }
       Map("hashes_before" -> nBefore, "hashes_added" -> nAdded,
         "hashes_after" -> (nBefore + nAdded))
-    } finally { newOnly.unpersist(); () }
+    }
   }
 
   /** Default catalog table name of the maintained chunk index. */
@@ -403,9 +399,7 @@ object Pipeline {
     }
     val stored = spark.table(table)
     val nBefore = t("count-before")(stored.count())
-    val newOnly = dumpHashes.join(stored, Seq("chunk_hash"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Stage.using(dumpHashes.join(stored, Seq("chunk_hash"), "left_anti")) { newOnly =>
       val nAdded = t("antijoin-count")(newOnly.count())
       if (nAdded > 0L) {
         // delta-sized append: new bucket files only, never a rewrite
@@ -415,7 +409,7 @@ object Pipeline {
       }
       Map("hashes_before" -> nBefore, "hashes_added" -> nAdded,
         "hashes_after" -> (nBefore + nAdded))
-    } finally { newOnly.unpersist(); () }
+    }
   }
 
   /** Point membership probe of the bucketed index — the "is this chunk
@@ -987,12 +981,12 @@ object Pipeline {
         // dynamic partition overwrite: only the shard dirs present in the
         // delta are replaced; the write option scopes the mode to THIS
         // write (the session conf stays untouched)
-        val d = windows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("shard").parquet(s"$outPath/windows")
-        val r = d.agg(count(lit(1)), countDistinct("shard")).head()
-        d.unpersist()
+        val r = Stage.using(windows) { d =>
+          d.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("shard").parquet(s"$outPath/windows")
+          d.agg(count(lit(1)), countDistinct("shard")).head()
+        }
         Some((r.getLong(0), r.getLong(1)))
       }
     // drop stale TRAILING shard dirs (the shrinking re-pack seam, verdict

@@ -48,7 +48,7 @@ object Plans {
       "q61_funnel" ->
         "strict-order funnel in ONE event-grain exchange: three chained whole-partition window minima (t2 reads the t1 column — no join back), then a user-grain aggregate reusing the window's hashpartitioning(user_id) — no per-step joins",
       "q74_semdedup_survivors" ->
-        "SemDeDup survivors: verbatim vectors collapse via an md5-keyed groupBy with map-side partial min (no full-embedding shuffle keys), the narrow (vec_id, rep) membership localCheckpoint-materialized, then one left join against the checkpoint-truncated component labels (edges from q27's bucketed sign-LSH equi-join)",
+        "SemDeDup survivors: verbatim vectors collapse via an md5-keyed groupBy with map-side partial min (no full-embedding shuffle keys), the narrow (vec_id, rep) membership map cached as an INDEX artifact, then one left join against the checkpoint-truncated component labels (edges from q27's bucketed sign-LSH equi-join)",
       "q76_dup_span_coverage" ->
         "duplicated-span coverage: the CACHED per-shingle df index artifact (round 12, shared with q103) joined back to the cached shingle relation, then a per-doc aggregate — the inverted index costed, never doc pairs",
       "q77_knn_quantized" ->
@@ -159,13 +159,12 @@ object Plans {
       // jump adds no corpus-side shuffle. (Rounds 1–2 run the same plan
       // minus the jump join; Dedup.propagateMinLabels gates it.)
       val (verts, sym) = operators.Dedup.dupClusterGraph(spark, sfDir, collapse = true)
-      val labels0 = verts.distinct()
-        .withColumn("component_id", org.apache.spark.sql.functions.col("doc_id"))
-        .localCheckpoint()
-      section("q52_dup_clusters — one propagation round (jump form)",
+      val labels0 = Stage.now(verts.distinct()
+        .withColumn("component_id", org.apache.spark.sql.functions.col("doc_id")))
+      try section("q52_dup_clusters — one propagation round (jump form)",
         "min-label propagation round over the REP graph: labels join onto edge targets through ONE hashpartitioning(doc_id) exchange, grouped min, then the round-3+ pointer-doubling self-join over the aggregate's output — AQE broadcasts that tiny side at sf (the BroadcastHashJoin on newc=jid below); at scale both sides share the aggregate's exchange (ReusedExchange) — either way the jump adds no corpus-side shuffle",
         operators.Dedup.propagationRound(labels0, sym, jump = true))
-      org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(labels0)
+      finally Stage.free(labels0)
     }
     locally {
       // q73: one BPE learning round's pair scoring — the k-round loop's

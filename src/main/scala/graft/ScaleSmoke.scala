@@ -404,18 +404,19 @@ object ScaleSmoke {
     if (only.isEmpty || only("q121_packing_index")) {
       val path = operators.Packing.PackingIndexPath(spark, out)
       val counts = operators.Packing.tokenCounts(spark, out)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val baseDocs = counts.where(col("doc_id") < 1000000L).count()
-      val (boot, ta) = timed {
-        operators.Packing.deletePackingIndex(spark, path)
-        operators.Packing.updatePackingIndex(spark, counts, path)
+      val (baseDocs, boot, ta, incr, tb) = Stage.using(counts) { _ =>
+        val baseDocs = counts.where(col("doc_id") < 1000000L).count()
+        val (boot, ta) = timed {
+          operators.Packing.deletePackingIndex(spark, path)
+          operators.Packing.updatePackingIndex(spark, counts, path)
+        }
+        val day = counts.where(col("doc_id") < 1000000L)
+          .withColumn("doc_id", col("doc_id") + lit(copies * 1000000L))
+        val (incr, tb) = timed {
+          operators.Packing.updatePackingIndex(spark, day, path)
+        }
+        (baseDocs, boot, ta, incr, tb)
       }
-      val day = counts.where(col("doc_id") < 1000000L)
-        .withColumn("doc_id", col("doc_id") + lit(copies * 1000000L))
-      val (incr, tb) = timed {
-        operators.Packing.updatePackingIndex(spark, day, path)
-      }
-      counts.unpersist()
       // round 18 (VERDICT r17 item 1): extending the loader's composition
       // map after the append is O(batch) — the segment derivation reads
       // ONLY the appended batch=1 dir (partition-pruned) and explodes it

@@ -23,14 +23,12 @@ object BucketStats {
     try {
       val per = graft.operators.Dedup.embRepPairs(spark, dir, bits)
         .groupBy("bucket").agg(count(lit(1)).as("n"))
-        .persist()
-      val row = per.agg(count(lit(1)), max("n"),
-        expr("percentile(n, 0.99)"), sum("n")).head()
+      val row = graft.Stage.using(per)(_.agg(count(lit(1)), max("n"),
+        expr("percentile(n, 0.99)"), sum("n")).head())
       println(s"[bucketstats] dir=$dir bits=$bits buckets=${row.getLong(0)} " +
         s"maxEdgesPerBucket=${row.getLong(1)} p99=${row.getDouble(2)} " +
         s"totalEdges=${row.getLong(3)} alarmAt=" +
         graft.functions.ComponentsAggregator.AlarmEdgeCount)
-      per.unpersist()
       ()
     } finally spark.stop()
   }

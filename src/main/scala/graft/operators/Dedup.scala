@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Stage, Tables}
 import graft.functions.{TextFns, VectorFns}
 
 /** Deduplication operators for a training-data pipeline, over `documents`
@@ -53,7 +52,6 @@ object Dedup {
   def shingles(spark: SparkSession, dir: String): DataFrame =
     cache(spark, dir) {
       shinglesOf(Tables.documents(spark, dir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] val dfCache = Artifact.relation("Dedup.dfCache", Artifact.Index)
@@ -70,7 +68,6 @@ object Dedup {
     dfCache(spark, dir) {
       shingles(spark, dir)
         .groupBy("shingle").agg(count(lit(1)).as("df"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Distinct (doc_id, shingle) from a free-standing (doc_id, text)
@@ -114,7 +111,6 @@ object Dedup {
       val rare = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxDf).select("shingle")
       sh.join(rare, Seq("shingle"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] val fpCache = Artifact.relation("Dedup.fpCache", Artifact.Index)
@@ -130,7 +126,6 @@ object Dedup {
     fpCache(spark, dir) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), md5(col("text")).as("fp"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Exact dedup by content hash: fingerprint, copies per group, rank of
@@ -154,7 +149,6 @@ object Dedup {
   def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
     sigCache(spark, dir) {
       signaturesOfShingles(shingles(spark, dir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** MinHash signatures from a (doc_id, shingle) relation — the single
@@ -237,7 +231,6 @@ object Dedup {
       val fp = fingerprints(spark, dir)
       fp.join(fp.groupBy("fp").agg(min("doc_id").as("rep_id")), Seq("fp"))
         .select("doc_id", "rep_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Expand representative-level verified pairs back to all member pairs:
@@ -376,15 +369,14 @@ object Dedup {
     // staged once (r22, §5): the positional relation feeds BOTH pair-side
     // joins below, and the unstaged subtree re-ran the endpoint tokenize
     // + posexplode per reference; endpoint-sized, ContextCleaner-reclaimed
-    val pos5 = Tables.documents(spark, dir)
+    val pos5 = Stage.now(Tables.documents(spark, dir)
       .join(pairs.select(col("doc_a").as("doc_id"))
         .union(pairs.select(col("doc_b").as("doc_id"))).distinct(),
         Seq("doc_id"), "left_semi")
       .select(col("doc_id"), TextFns.tokenize(col("text")).as("toks"))
       .select(col("doc_id"),
         posexplode(TextFns.shingleArray(col("toks"), ShingleSize))
-          .as(Seq("pos", "shingle")))
-      .localCheckpoint()
+          .as(Seq("pos", "shingle"))))
     val m = pairs
       .join(pos5.select(col("doc_id").as("doc_a"), col("pos").as("pa"),
         col("shingle")), Seq("doc_a"))
@@ -565,17 +557,15 @@ object Dedup {
     val agree = (0 until MinhashHashes)
       .map(i => when(col(s"sa.h$i") === col(s"sb.h$i"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val withAgree = cands
+    val withAgree = Stage.now(cands
       .join(sigs.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), agree.as("n_agree"))
-      .localCheckpoint()
+      .select(col("doc_a"), col("doc_b"), agree.as("n_agree")))
     val candDocs = withAgree.select(col("doc_a").as("doc_id"))
       .union(withAgree.select(col("doc_b").as("doc_id")))
       .distinct()
-    val sh = shingles(spark, dir)
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+    val sh = Stage.now(shingles(spark, dir)
+      .join(candDocs, Seq("doc_id"), "left_semi"))
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val inter = withAgree
       .join(sh.as("ja"), col("doc_a") === col("ja.doc_id"))
@@ -636,13 +626,12 @@ object Dedup {
     // At 100 TB the band self-join is the most expensive subtree in the
     // dedup family — evaluating it once is the scale posture, the prune
     // cuts the verify shuffle to candidate docs' shingles only.
-    val cands = bands.as("x")
+    val cands = Stage.now(bands.as("x")
       .join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // prune the shingle relation to candidate docs ONCE and materialize
     // the pruned copy too — the pruned subtree feeds three references
     // (both verify joins + the set sizes), and an unmaterialized prune
@@ -654,20 +643,11 @@ object Dedup {
     val candDocs = cands.select(col("doc_a").as("doc_id"))
       .union(cands.select(col("doc_b").as("doc_id")))
       .distinct()
-    val shP = shingles(spark, dir)
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val verified = jaccardVerify(spark, dir, cands, shingleSet = Some(shP))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // force the memoized relation NOW so the checkpoint blocks backing
-    // `cands` and the pruned shingles can be reclaimed immediately (they
-    // feed nothing else); building the memo was always the first
-    // consumer's cost, this only moves it from its first action to the
-    // memo fill
-    verified.count()
-    org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(cands)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(shP)
-    verified
+    val shP = Stage.now(shingles(spark, dir)
+      .join(candDocs, Seq("doc_id"), "left_semi"))
+    // the memo holds both checkpoints: evicting it frees them (Stage.free
+    // reaches every checkpoint under the memo's plan)
+    jaccardVerify(spark, dir, cands, shingleSet = Some(shP))
   }
 
   /** Exact n-gram Jaccard near-dups with candidates = pairs sharing ≥1
@@ -870,25 +850,6 @@ object Dedup {
   }
 
   private[graft] def propagateMinLabels(verts: DataFrame, sym0: DataFrame): DataFrame = {
-    // localCheckpoint (eager) both materializes the round's labels AND
-    // truncates lineage — without it each round's plan stacks on the last
-    // and replanning cost compounds with the iteration count.
-    //
-    // The loop runs on the CONTRACTED graph (rep-collapsed vertices), whose
-    // per-round relations are orders smaller than the corpus — round plans
-    // are scheduler-latency-bound, not data-bound. AQE's per-exchange query
-    // stages add ~3 scheduler round-trips per round for nothing at that
-    // size (measured: 0.30 s/round ckpt at 2k vertices, sf0.1), so the
-    // loop executes in a conf-ISOLATED cloned session (same context,
-    // shared cache manager — the caller's persisted `sym` blocks are
-    // visible) with AQE off and shuffle partitions sized from the
-    // measured vertex count: ~500k vertices per partition, UNCAPPED
-    // above — tiny graphs stop paying 32-task stages per round, and a
-    // billion-vertex rep graph gets ~2000 partitions regardless of the
-    // session default (a cap at the default would pin large graphs to
-    // the deployment's default, e.g. 32 on local[32]). Cloning instead
-    // of set/restore keeps concurrent queries on the caller's session
-    // planning under their own conf.
     val base = sym0.sparkSession
     val vertsD = org.apache.spark.sql.GraftBridge.inSession(
       verts.distinct().withColumn("component_id", col("doc_id")), base)
@@ -911,25 +872,54 @@ object Dedup {
     // session gets its own executor class loader, Spark's codegen cache
     // keys on that loader, and a clone per call recompiled every class
     // its jobs ran (20 per warm q112 pass at sf0.1).
-    if (unionFindFits(nVerts, () => sym0.count())) {
-      val out = sym0.select(col("doc_a").as("a"), col("doc_b").as("b"))
+    if (!unionFindFits(nVerts, () => sym0.count())) propagationLoop(vertsD, sym0, nVerts)
+    else {
+      val out = Stage.now(sym0.select(col("doc_a").as("a"), col("doc_b").as("b"))
         .union(vertsD.select(col("doc_id").as("a"), col("doc_id").as("b")))
         .agg(graft.functions.ComponentsAggregator
           .minLabelComponents(col("a"), col("b")).as("ls"))
         .select(explode(col("ls")).as("l"))
-        .select(col("l._1").as("doc_id"), col("l._2").as("component_id"))
-        .localCheckpoint()
+        .select(col("l._1").as("doc_id"), col("l._2").as("component_id")))
       if (sys.env.contains("GRAFT_PROP_DEBUG"))
         println(s"[prop] union-find fast path: $nVerts verts")
-      return out
+      out
     }
+  }
+
+  /** The iterative min-label loop behind [[propagateMinLabels]], for graphs
+    * above the union-find bound. `vertsD` is the distinct seed (doc_id,
+    * component_id = doc_id) of `nVerts` rows. Each round's labels are
+    * staged with `Stage.now` and the round they supersede is freed, so on
+    * return only the final round's blocks remain.
+    */
+  private[graft] def propagationLoop(vertsD: DataFrame, sym0: DataFrame,
+      nVerts: Long): DataFrame = {
+    // localCheckpoint (eager) both materializes the round's labels AND
+    // truncates lineage — without it each round's plan stacks on the last
+    // and replanning cost compounds with the iteration count.
+    //
+    // The loop runs on the CONTRACTED graph (rep-collapsed vertices), whose
+    // per-round relations are orders smaller than the corpus — round plans
+    // are scheduler-latency-bound, not data-bound. AQE's per-exchange query
+    // stages add ~3 scheduler round-trips per round for nothing at that
+    // size (measured: 0.30 s/round ckpt at 2k vertices, sf0.1), so the
+    // loop executes in a conf-ISOLATED cloned session (same context,
+    // shared cache manager — the caller's persisted `sym` blocks are
+    // visible) with AQE off and shuffle partitions sized from the
+    // measured vertex count: ~500k vertices per partition, UNCAPPED
+    // above — tiny graphs stop paying 32-task stages per round, and a
+    // billion-vertex rep graph gets ~2000 partitions regardless of the
+    // session default (a cap at the default would pin large graphs to
+    // the deployment's default, e.g. 32 on local[32]). Cloning instead
+    // of set/restore keeps concurrent queries on the caller's session
+    // planning under their own conf.
+    val base = sym0.sparkSession
     val sess = org.apache.spark.sql.GraftBridge.cloneSession(base)
     val sym = org.apache.spark.sql.GraftBridge.inSession(sym0, sess)
     val loopParts = math.max(1L, (nVerts + 499999L) / 500000L).toString
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     sess.conf.set("spark.sql.shuffle.partitions", loopParts)
-    var labels = org.apache.spark.sql.GraftBridge.inSession(vertsD, sess)
-      .localCheckpoint()
+    var labels = Stage.now(org.apache.spark.sql.GraftBridge.inSession(vertsD, sess))
     var converged = false
     var rounds = 0
     val maxRounds = 50 // component diameter bound; near-dup clusters are tiny
@@ -954,8 +944,7 @@ object Dedup {
       // more than the one checkpoint they save. Fixed overhead per round
       // is real but its remedy isn't plan fusion.
       val t0 = System.nanoTime()
-      val next = propagationRound(labels, sym, jump = rounds >= 2)
-        .localCheckpoint()
+      val next = Stage.now(propagationRound(labels, sym, jump = rounds >= 2))
       val t1 = System.nanoTime()
       converged = !next.agg(coalesce(max(col("chg")), lit(false)))
         .head().getBoolean(0)
@@ -963,9 +952,8 @@ object Dedup {
         println(f"[prop] round ${rounds + 1} ckpt ${(t1 - t0) / 1e9}%.3f s " +
           f"conv ${(System.nanoTime() - t1) / 1e9}%.3f s")
       // `next` is eagerly materialized above, so the PREVIOUS round's
-      // checkpoint blocks can be freed now — Dataset.unpersist doesn't
-      // reach them (they're RDD-persisted, not CacheManager entries)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(labels)
+      // checkpoint blocks can be freed now
+      Stage.free(labels)
       labels = next.select("doc_id", "component_id")
       rounds += 1
     }
@@ -1015,9 +1003,7 @@ object Dedup {
     // machinery (vertices = edge endpoints, no final expansion join).
     val collapse = hasVerbatimDups(spark, dir)
     val (verts, sym0) = dupClusterGraph(spark, dir, collapse)
-    val sym = sym0.persist(StorageLevel.MEMORY_AND_DISK)
-    val labels = propagateMinLabels(verts, sym)
-    sym.unpersist()
+    val labels = Stage.using(sym0)(propagateMinLabels(verts, _))
     // expand rep-level labels to every member of each labeled group; once
     // the expansion is checkpointed, the loop-final rep-level checkpoint
     // can be freed (it would otherwise outlive Caches.clear, which only
@@ -1025,12 +1011,11 @@ object Dedup {
     // ARE doc-level — return them as-is.
     if (!collapse) labels
     else {
-      val expanded = labels
+      val expanded = Stage.now(labels
         .join(verbatimReps(spark, dir).select(col("doc_id").as("m_id"), col("rep_id")),
           labels("doc_id") === col("rep_id"))
-        .select(col("m_id").as("doc_id"), col("component_id"))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(labels)
+        .select(col("m_id").as("doc_id"), col("component_id")))
+      Stage.free(labels)
       expanded
     }
   }
@@ -1171,7 +1156,6 @@ object Dedup {
     simhashSigCache(spark, dir, bits) {
       (if (bits == 64) simhash64Bits(spark, dir)
        else simhashBits(spark, dir, bits))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** 16-bit SimHash sorted for output (the q24 contract; collision groups
@@ -1335,30 +1319,10 @@ object Dedup {
     * so the same-id-space restriction of the self-join ladder does not
     * apply: id ranges may overlap freely across the two inputs.
     */
-  private val crossCorpusPersists =
-    scala.collection.mutable.ListBuffer.empty[DataFrame]
-
-  /** Unpersist every shingle relation past crossCorpusNearDups calls
-    * pinned — the targeted release for sessions chaining many passes
-    * (a blanket clearCache() would also evict the session-keyed dedup
-    * caches that other operators still hand out).
-    */
-  def releaseCrossCorpusCaches(): Unit = crossCorpusPersists.synchronized {
-    crossCorpusPersists.foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    crossCorpusPersists.clear()
-  }
-
-  def crossCorpusNearDups(incoming: DataFrame, corpus: DataFrame): DataFrame = {
-    val inSh = shinglesOf(incoming)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val coSh = shinglesOf(corpus)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    crossCorpusPersists.synchronized {
-      crossCorpusPersists += inSh; crossCorpusPersists += coSh
-    }
-    crossCorpusFromShingles(inSh, coSh)
-  }
+  def crossCorpusNearDups(incoming: DataFrame, corpus: DataFrame): DataFrame =
+    // staged: bands, verification and the size aggregates each read both
+    // shingle relations; the ContextCleaner frees them with the result
+    crossCorpusFromShingles(Stage.now(shinglesOf(incoming)), Stage.now(shinglesOf(corpus)))
 
   /** q62 form: the dump-over-dump query phrased on ONE corpus dir so the
     * harness can oracle-check it — odd doc_ids play the incoming dump,
@@ -1405,11 +1369,6 @@ object Dedup {
       .withColumn("uni", col("sz_i") + col("sz_c") - col("inter"))
       .filter(col("inter") * 2 >= col("uni"))
       .select("incoming_id", "corpus_id", "inter", "uni")
-    // the two persists stay live: bands, verification, and the size
-    // aggregates each reference them, and evicting before the caller's
-    // action would force three rebuilds per side. MEMORY_AND_DISK blocks
-    // are LRU-evictable; sessions chaining many cross-corpus passes call
-    // releaseCrossCorpusCaches() between passes.
     verified.orderBy("incoming_id", "corpus_id")
   }
 
@@ -1555,7 +1514,6 @@ object Dedup {
       keyed.select("ehash", "vec_id")
         .join(keyed.groupBy("ehash").agg(min("vec_id").as("rep")), Seq("ehash"))
         .select("vec_id", "rep")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Verified REP-level embedding near-dup pairs (vec_a, vec_b, c) —
@@ -1578,7 +1536,7 @@ object Dedup {
       val reps = Similarity.vectorIndex(spark, dir, bits).join(
         memberRep.filter(col("vec_id") === col("rep")).select("vec_id"),
         Seq("vec_id"))
-      embNearDupPairsOf(reps).persist(StorageLevel.MEMORY_AND_DISK)
+      embNearDupPairsOf(reps)
     }
 
   def semDedupSurvivors(spark: SparkSession, dir: String,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Artifact
+import graft.{Artifact, Stage}
 
 /** Context-window packing — the batch-forming step of LLM pretraining
   * (extension surface; the reference is strictly an ETL binary): documents
@@ -62,16 +62,15 @@ object Packing {
     val vi = sorted.schema.fieldIndex(valCol)
     require(sorted.schema(vi).dataType == LongType,
       s"$valCol must be LONG (got ${sorted.schema(vi).dataType})")
-    // localCheckpoint so the two mapPartitionsWithIndex jobs below provably
-    // read IDENTICAL partitions (VERDICT r17 item 7): the subtotal pass
-    // materializes the sorted partitions as storage blocks and truncates
-    // the lineage, so the offset-seeding pass re-reads those blocks instead
-    // of re-running the range-partitioned sort — the zipWithIndex
-    // determinism ARGUMENT (same input ⇒ same range bounds) becomes a
-    // storage-level guarantee. Cost: caching the ~16-byte/doc count
-    // relation once per call (blocks freed by the ContextCleaner when the
-    // returned frame is dropped); measured at bench sf0.1 inside noise.
-    val rdd0 = sorted.rdd.localCheckpoint()
+    // staged so the two mapPartitionsWithIndex jobs below provably read
+    // IDENTICAL partitions (VERDICT r17 item 7): the sorted partitions are
+    // storage blocks with the lineage cut, so the offset-seeding pass
+    // re-reads those blocks instead of re-running the range-partitioned
+    // sort — the zipWithIndex determinism ARGUMENT (same input ⇒ same
+    // range bounds) becomes a storage-level guarantee. Cost: the
+    // ~16-byte/doc count relation once per call (blocks freed by the
+    // ContextCleaner when the returned frame is dropped).
+    val rdd0 = Stage.now(sorted).rdd
     val partTotals = rdd0.mapPartitionsWithIndex { case (i, it) =>
       var s = 0L; it.foreach(r => s += r.getLong(vi)); Iterator((i, s))
     }.collect().sortBy(_._1).map(_._2)
@@ -204,7 +203,7 @@ object Packing {
     * and verify it against the sidecar.
     */
   private[graft] val placementCache = Artifact.relation("Packing.placementCache",
-    Artifact.Index, (key, df) => { deleteStoredPlacementFor(key); Artifact.release(df) })
+    Artifact.Index, (key, df) => { deleteStoredPlacementFor(key); Stage.free(df) })
 
   def storedPlacement(spark: SparkSession, dir: String): DataFrame =
     placementCache(spark, dir) {
@@ -214,7 +213,6 @@ object Packing {
       readPackingIndex(spark, path)
         .select("doc_id", "n_toks", "start_tok", "first_win", "last_win",
           "n_windows")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** q123 — the q122 window-segment map derived from the STORED q121

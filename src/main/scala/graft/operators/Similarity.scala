@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Stage, Tables}
 import graft.functions.{TopKAggregator, VectorFns}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
@@ -40,10 +39,6 @@ object Similarity {
     */
   private[graft] val knnMemo = Artifact.relation("Similarity.knnMemo", Artifact.Result)
 
-  private def memoRung(spark: SparkSession, dir: String, rung: String)(
-      build: => DataFrame): DataFrame =
-    knnMemo(spark, dir, rung)(build.persist(StorageLevel.MEMORY_AND_DISK))
-
   /** Cached (vec_id, emb, nrm) relation per (session, dir) — the resident
     * base of the vector index, shared by every embedding consumer
     * (ANN probes, brute-force, k-means, stats, SemDeDup's rep-edge
@@ -59,7 +54,6 @@ object Similarity {
         col("vec_id"),
         VectorFns.asDouble(col("embedding")).as("emb"))
         .withColumn("nrm", VectorFns.l2Norm(col("emb")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** The cached base plus the `bits`-wide sign-bucket column — the
@@ -93,7 +87,7 @@ object Similarity {
 
   /** Exact top-K neighbors by cosine for each query vector (vec_id < 8). */
   def knnBruteForce(spark: SparkSession, dir: String): DataFrame =
-    memoRung(spark, dir, "exact") {
+    knnMemo(spark, dir, "exact") {
     val e = vectors(spark, dir)
     val q = e.filter(col("vec_id") < QuerySetSize).select(
       col("vec_id").as("query_id"), col("emb").as("q_emb"), col("nrm").as("q_nrm"))
@@ -154,7 +148,7 @@ object Similarity {
     * scores vectors in its own cell (equi-join ⇒ partition-prunable).
     */
   def knnIvf(spark: SparkSession, dir: String): DataFrame =
-    memoRung(spark, dir, "ivf") { ivfTopK(spark, dir, Seq(0)) }
+    knnMemo(spark, dir, "ivf") { ivfTopK(spark, dir, Seq(0)) }
 
   /** Multi-probe IVF: each query probes its own cell PLUS every cell at
     * hamming distance 1 in the sign-bit code (IvfBits+1 cells of
@@ -166,7 +160,7 @@ object Similarity {
     * of the corpus per query instead of 1/2^IvfBits.
     */
   def knnIvfMultiProbe(spark: SparkSession, dir: String): DataFrame =
-    memoRung(spark, dir, "multiprobe") {
+    knnMemo(spark, dir, "multiprobe") {
       ivfTopK(spark, dir, 0 +: (0 until IvfBits).map(1 << _)) }
 
   /** Int8 scalar-quantized brute-force top-k — the memory/bandwidth side
@@ -544,7 +538,7 @@ object Similarity {
     * on anything unbounded.
     */
   def knnPq(spark: SparkSession, dir: String, k: Int = K): DataFrame =
-    memoRung(spark, dir, s"pq$k") {
+    knnMemo(spark, dir, s"pq$k") {
     val e = vectors(spark, dir)
     val slices = array((0 until PqSubspaces).map(m =>
       slice(col("emb"), m * PqSubDim + 1, PqSubDim)): _*)
@@ -636,14 +630,13 @@ object Similarity {
     // per-method mean — unmaterialized, the second reference re-ran the
     // whole scoredRungs subtree (3 memo scans + join + aggregate). The
     // relation is |methods|·|queries| rows; ContextCleaner reclaims it.
-    val per = grid
+    val per = Stage.now(grid
       .join(scoredRungs, Seq("method", "query_id"), "left")
       .select(col("method"), col("query_id"),
         coalesce(col("n_returned"), lit(0L)).as("n_returned"),
         coalesce(col("n_hits"), lit(0L)).as("n_hits"))
       .withColumn("recall",
-        round(col("n_hits").cast("double") / lit(K.toDouble), 6))
-      .localCheckpoint()
+        round(col("n_hits").cast("double") / lit(K.toDouble), 6)))
     val mean = per.groupBy("method")
       .agg(sum("n_returned").as("n_returned"), sum("n_hits").as("n_hits"),
         round(sum("n_hits").cast("double") / (count(lit(1)) * lit(K.toLong))
@@ -732,7 +725,7 @@ object Similarity {
     * once per pass, q118's auto-pick re-ranks the memoized table.
     */
   def annSweep(spark: SparkSession, dir: String): DataFrame =
-    memoRung(spark, dir, "sweep") { annSweepUncached(spark, dir) }
+    knnMemo(spark, dir, "sweep") { annSweepUncached(spark, dir) }
 
   private def annSweepUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -151,7 +151,6 @@ object Sketches {
         .join(splits.filter(col("split") =!= "train").select("doc_id"),
           Seq("doc_id"), "left_semi")
         .select(explode(bloomPositions).as("pos")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** The eval bit-set packed into a BloomBits/4-character hex string —
@@ -244,7 +243,6 @@ object Sketches {
         .join(Tables.documents(spark, dir)
           .select(col("doc_id"), col("source").as("benchmark")), Seq("doc_id"))
         .select("benchmark", "shingle").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** PER-BENCHMARK Bloom bit-sets — the multi-benchmark form of
@@ -283,22 +281,24 @@ object Sketches {
             s"for the 0.24% FP design point — split the benchmark or " +
             s"raise the ladder before trusting its gate") }
       // n_eval rides the relation so q128's sizing report never
-      // re-derives the count the build already paid for
-      val mDf = sizes.toDF("benchmark", "n_eval", "mbits")
-      val out = evd
-        .join(broadcast(mDf), Seq("benchmark"))
+      // re-derives the count the build already paid for. Both are literal
+      // per-benchmark columns, not a join against the collected sizes: a
+      // broadcast in a persisted plan pins a Tungsten page while it stays
+      // cached. The inner join's semantics hold: a row whose benchmark
+      // matched none (a null benchmark) drops out.
+      def perBenchmark(v: ((String, Long, Int)) => Any, t: String): Column =
+        sizes.foldLeft(lit(null).cast(t)) { (rest, s) =>
+          when(col("benchmark") === s._1, lit(v(s))).otherwise(rest) }
+      evd
+        .select(col("benchmark"), perBenchmark(_._2, "long").as("n_eval"),
+          perBenchmark(_._3, "int").as("mbits"), col("shingle"))
+        .filter(col("mbits").isNotNull)
         .select(col("benchmark"), col("n_eval"), col("mbits"),
           explode(array((0 until BloomK).map(i =>
             bloomRawPositionOf(col("shingle"), i)): _*)).as("raw"))
         .select(col("benchmark"), col("n_eval"), col("mbits"),
           (col("raw") % col("mbits")).as("pos"))
         .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize the bit-set eagerly (the r19/r20 shape, minus the
-      // per-build checkpoint reclaim — evd is now the long-lived cached
-      // relation owned by Caches, NOT a build-local checkpoint)
-      out.count()
-      out
     }
 
   /** The per-benchmark bit-sets SERIALIZED — (benchmark, hex) pairs
@@ -335,43 +335,41 @@ object Sketches {
       val benches = benchBitsHex(spark, dir)
       val splits = TextAnalysis.splitRaw(spark, dir).select("doc_id", "split")
       val trainDocs = splits.filter(col("split") === "train").select("doc_id")
-      val out =
-        if (benches.isEmpty)
-          // no eval docs → no benchmarks: empty, correctly-typed
-          trainDocs.select(col("doc_id"), lit("").as("benchmark"),
-            lit(0L).as("n_shingles"), lit(0L).as("n_flagged")).limit(0)
-        else {
-          // RAW 24-bit positions, shared across benchmarks — each
-          // benchmark's BitSetContains masks them down to its own
-          // ladder rung (r19), so sizing costs zero extra projection
-          val tagged = Dedup.shingles(spark, dir)
-            .join(trainDocs, Seq("doc_id"), "left_semi")
-            .select(col("doc_id") +:
-              (0 until BloomK).map(i =>
-                bloomRawPositionOf(col("shingle"), i).as(s"_pos$i")): _*)
-          val aggCols = count(lit(1)).as("n_shingles") +:
-            benches.zipWithIndex.map { case ((b, hex), bi) =>
-              val bits = hexBitWords(hex) // one array instance per benchmark
-              val allHit = (0 until BloomK)
-                .map(i => graft.plans.BitSetContains(col(s"_pos$i"), bits, b))
-                .reduce(_ && _)
-              sum(when(allHit, lit(1L)).otherwise(lit(0L))).as(s"_f$bi")
-            }
-          val agg = tagged.groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*)
-          val stacked = agg.select(col("doc_id"), col("n_shingles"),
-            explode(array(benches.zipWithIndex.map { case ((b, _), bi) =>
-              struct(lit(b).as("benchmark"), col(s"_f$bi").as("n_flagged"))
-            }: _*)).as("bf"))
-            .select(col("doc_id"), col("bf.benchmark"),
-              col("n_shingles"), col("bf.n_flagged"))
-          trainDocs
-            .crossJoin(broadcast(benches.map(_._1).toDF("benchmark")))
-            .join(stacked, Seq("doc_id", "benchmark"), "left")
-            .select(col("doc_id"), col("benchmark"),
-              coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-              coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
-        }
-      out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (benches.isEmpty)
+        // no eval docs → no benchmarks: empty, correctly-typed
+        trainDocs.select(col("doc_id"), lit("").as("benchmark"),
+          lit(0L).as("n_shingles"), lit(0L).as("n_flagged")).limit(0)
+      else {
+        // RAW 24-bit positions, shared across benchmarks — each
+        // benchmark's BitSetContains masks them down to its own
+        // ladder rung (r19), so sizing costs zero extra projection
+        val tagged = Dedup.shingles(spark, dir)
+          .join(trainDocs, Seq("doc_id"), "left_semi")
+          .select(col("doc_id") +:
+            (0 until BloomK).map(i =>
+              bloomRawPositionOf(col("shingle"), i).as(s"_pos$i")): _*)
+        val aggCols = count(lit(1)).as("n_shingles") +:
+          benches.zipWithIndex.map { case ((b, hex), bi) =>
+            val bits = hexBitWords(hex) // one array instance per benchmark
+            val allHit = (0 until BloomK)
+              .map(i => graft.plans.BitSetContains(col(s"_pos$i"), bits, b))
+              .reduce(_ && _)
+            sum(when(allHit, lit(1L)).otherwise(lit(0L))).as(s"_f$bi")
+          }
+        val agg = tagged.groupBy("doc_id").agg(aggCols.head, aggCols.tail: _*)
+        val stacked = agg.select(col("doc_id"), col("n_shingles"),
+          explode(array(benches.zipWithIndex.map { case ((b, _), bi) =>
+            struct(lit(b).as("benchmark"), col(s"_f$bi").as("n_flagged"))
+          }: _*)).as("bf"))
+          .select(col("doc_id"), col("bf.benchmark"),
+            col("n_shingles"), col("bf.n_flagged"))
+        trainDocs
+          .crossJoin(broadcast(benches.map(_._1).toDF("benchmark")))
+          .join(stacked, Seq("doc_id", "benchmark"), "left")
+          .select(col("doc_id"), col("benchmark"),
+            coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
+            coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
+      }
     }
 
   /** q125 — multi-benchmark Bloom decontamination: q102's gate run
@@ -427,7 +425,6 @@ object Sketches {
           coalesce(col("n_exact"), lit(0L)).as("n_exact"), col("n_flagged"),
           (col("n_flagged") - coalesce(col("n_exact"), lit(0L)))
             .as("n_false_pos"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** q128 — the Bloom SIZING report, benchmark grain (r19, verdict r18
@@ -507,7 +504,6 @@ object Sketches {
         .select(col("doc_id"),
           coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
           coalesce(col("n_flagged"), lit(0L)).as("n_flagged"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   def bloomDecontamination(spark: SparkSession, dir: String): DataFrame =
@@ -580,7 +576,6 @@ object Sketches {
   def cmsCells(spark: SparkSession, dir: String): DataFrame =
     cmsGridCache(spark, dir) {
       cmsTagged(spark, dir).groupBy("i", "bucket").agg(sum("n_exact").as("cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Top-`TopHitters` 5-gram shingles by exact document frequency, with

@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.{Artifact, Tables}
+import graft.{Artifact, Stage, Tables}
 import graft.functions.TextFns
 
 /** Text-analysis operators for a training-data pipeline: quality scoring,
@@ -102,7 +101,6 @@ object TextAnalysis {
           when(col("bucket") < 204, "train")
             .when(col("bucket") < 230, "val")
             .otherwise("test"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Within-document repetition — the duplicate-n-gram quality filter a
@@ -184,7 +182,6 @@ object TextAnalysis {
           col("doc_id"), col("token"), col("qty"), col("df"),
           round(col("qty") * log(col("n_docs").cast("double") / col("df")), 6)
             .as("tfidf"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** q34 form: TF-IDF sorted for output. */
@@ -256,7 +253,6 @@ object TextAnalysis {
         .join(Tables.documents(spark, dir).select("doc_id", "source"),
           Seq("doc_id"))
         .select("source", "token").distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Deterministic stratified sample (q65): within each source stratum,
@@ -321,7 +317,6 @@ object TextAnalysis {
   private[graft] def rawTokens(spark: SparkSession, dir: String): DataFrame =
     rawTokCache(spark, dir) {
       withTokens(spark, dir).select("doc_id", "toks")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] val bigramCache = Artifact.relation("TextAnalysis.bigramCache", Artifact.Index)
@@ -343,7 +338,6 @@ object TextAnalysis {
         .select(split(col("bg"), " ").as("p"))
         .select(element_at(col("p"), 1).as("src"), element_at(col("p"), 2).as("dst"))
         .groupBy("src", "dst").agg(count(lit(1)).as("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Collocation extraction (q70): adjacent raw-token pairs scored by
@@ -421,7 +415,7 @@ object TextAnalysis {
     // p2 (the propagateMinLabels device, round 13 — measured ~0.7 s/pass
     // saved). Vocabulary-sized blocks; the ContextCleaner reclaims them
     // when the query's RDDs go unreachable (nothing caches this relation).
-    val p1 = step(pr0).localCheckpoint()
+    val p1 = Stage.now(step(pr0))
     val p2 = step(p1)
     p1.select(col("token"), col("pr").as("pr1"))
       .join(p2.select(col("token"), col("pr").as("pr2")), Seq("token"))
@@ -524,14 +518,13 @@ object TextAnalysis {
       rounds: Int): Seq[(Long, String, String, Long, String)] =
     mergeMemo(spark, dir, rounds) {
       val (merges, toks) = bpeLoop(spark, dir, rounds)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(toks)
+      Stage.free(toks)
       merges
     }
 
   /** The merge loop itself: returns the merges AND the final rewritten
     * token stream, checkpointed — the CALLER owns releasing it via
-    * GraftBridge.unpersistCheckpointRdds once its derivative is
-    * materialized.
+    * Stage.free once its derivative is materialized.
     */
   /** One learning round's pair-scoring relation: adjacent-pair counts over
     * the (evolving) positional token stream, top-1 by (count desc, pair).
@@ -594,9 +587,8 @@ object TextAnalysis {
         merges += ((r.toLong, a, b, n, s"${a}_$b"))
         toks = mergeAdjacentPair(toks, a, b)
         if (r % ckptEvery == 0) {
-          val next = toks.localCheckpoint()
-          if (lastCkpt != null)
-            org.apache.spark.sql.GraftBridge.unpersistCheckpointRdds(lastCkpt)
+          val next = Stage.now(toks)
+          if (lastCkpt != null) Stage.free(lastCkpt)
           lastCkpt = next
           toks = next
         }
@@ -765,7 +757,6 @@ object TextAnalysis {
         .select(col("doc_id"),
           expr("cast(conv(substring(md5(b), 1, 2), 16, 10) as bigint)").as("bucket"))
         .groupBy("doc_id", "bucket").agg(count(lit(1)).as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] val dsirWtCache = Artifact.relation("TextAnalysis.dsirWtCache", Artifact.Index)
@@ -783,7 +774,6 @@ object TextAnalysis {
   def dsirWeightTable(spark: SparkSession, dir: String): DataFrame =
     dsirWtCache(spark, dir) {
       dsirWeightTableRaw(spark, dir)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private def dsirWeightTableRaw(spark: SparkSession, dir: String): DataFrame = {
@@ -859,9 +849,7 @@ object TextAnalysis {
     * relation).
     */
   private def trainVerdictRaw(spark: SparkSession, dir: String): DataFrame =
-    verdictCache(spark, dir) {
-      trainVerdictBuild(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    verdictCache(spark, dir)(trainVerdictBuild(spark, dir))
 
   private def trainVerdictBuild(spark: SparkSession, dir: String): DataFrame = {
     val splits = splitRaw(spark, dir).select("doc_id", "split")
@@ -981,7 +969,6 @@ object TextAnalysis {
       rawTokens(spark, dir)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   def tokenEntropy(spark: SparkSession, dir: String): DataFrame =

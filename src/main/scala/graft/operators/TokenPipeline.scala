@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.{Artifact, Tables}
 import graft.functions.TextFns
@@ -97,7 +96,6 @@ object TokenPipeline {
       rawTokens(Tables.documents(spark, dir))
         .filter(col("token").isin(Dictionary: _*) && !col("token").isin(StopWords: _*))
         .groupBy("doc_id", "token").agg(count(lit(1)).as("qty"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Per-document statistics: distinct kept tokens (main.go:57), total kept
@@ -138,7 +136,6 @@ object TokenPipeline {
         count(lit(1)).as("count_unique_words"),
         sum("qty").as("total_tokens"),
         sqrt(sum(col("qty") * col("qty"))).as("nrm"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   private[graft] val dictCache = Artifact.relation("TokenPipeline.dictCache", Artifact.Index)
@@ -155,7 +152,6 @@ object TokenPipeline {
         docTokenCounts(spark, dir).select("token").distinct(),
         "token_id", col("token"))
         .select("token_id", "token")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Inverted index in relational form: (token_id, token, doc_id, qty)

@@ -944,7 +944,6 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val bands = graft.operators.Dedup.bandBucketsFor(batch)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // one semi-join per store part (compacted table / recent dirs):
         // joining a UNION would discard the compacted side's bucketed
         // partitioning and force a full store shuffle
@@ -959,22 +958,20 @@ object StreamingOps {
         // persisted: the corpus write and the bands write are separate
         // jobs, and without this the store scan + both joins run twice
         val drop = (dupVsStore :+ dupInBatch).reduce(_.union(_)).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        batch.join(drop, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
-        bands.join(drop, Seq("doc_id"), "left_anti")
-          .write.mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
-        // fold the store (now including this batch's bands) once enough
-        // uncompacted batches accumulate — geometric: also wait until
-        // they rival half the compacted store, bounding total fold I/O.
-        // Runs inside the batch, so a failed fold fails the batch and
-        // the retry refolds idempotently
-        val through = compactedThroughOf(spark, bandsDir)
-        if (batchId - through >= math.max(compactEvery.toLong, (through + 1) / 2))
-          compactBandStore(spark, bandsDir)
-        drop.unpersist()
-        bands.unpersist()
-        ()
+        graft.Stage.using(bands)(_ => graft.Stage.using(drop) { _ =>
+          batch.join(drop, Seq("doc_id"), "left_anti")
+            .write.mode("overwrite").parquet(s"$corpusDir/batch=$batchId")
+          bands.join(drop, Seq("doc_id"), "left_anti")
+            .write.mode("overwrite").parquet(s"$bandsDir/batch=$batchId")
+          // fold the store (now including this batch's bands) once enough
+          // uncompacted batches accumulate — geometric: also wait until
+          // they rival half the compacted store, bounding total fold I/O.
+          // Runs inside the batch, so a failed fold fails the batch and
+          // the retry refolds idempotently
+          val through = compactedThroughOf(spark, bandsDir)
+          if (batchId - through >= math.max(compactEvery.toLong, (through + 1) / 2))
+            compactBandStore(spark, bandsDir)
+        })
       }
       .outputMode("append")
       .options(options)

@@ -70,16 +70,4 @@ object GraftBridge {
   def collectTopK(c: Column, k: Int, reverse: Boolean): Column =
     column(org.apache.spark.sql.catalyst.expressions.aggregate
       .GraftAggBridge.collectTopK(expression(c), k, reverse))
-
-  /** Eagerly free the persisted blocks behind `localCheckpoint`-backed
-    * DataFrames. `Dataset.unpersist` only touches CacheManager entries;
-    * a checkpointed plan is a LogicalRDD whose RDD is persisted directly,
-    * so without this its MEMORY_AND_DISK blocks linger until GC.
-    */
-  def unpersistCheckpointRdds(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -377,9 +377,6 @@ class DedupSpec extends AnyFunSuite {
       "near-dup and verbatim match; novel doc emits nothing")
     // verbatim pair must verify at Jaccard 1 (inter == uni)
     assert(got.exists(p => p._1 == 2L && p._3 == p._4))
-    // targeted release of the pinned shingle relations is clean + idempotent
-    Dedup.releaseCrossCorpusCaches()
-    Dedup.releaseCrossCorpusCaches()
   }
 
   test("empty corpus: dedup ladder returns empty, no NPE in the cost probe") {
@@ -427,7 +424,6 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(parity === direct, "shared body: parity form == free-standing form")
     assert(parity.forall(p => p._1 % 2 == 1 && p._2 % 2 == 0))
-    Dedup.releaseCrossCorpusCaches()
   }
 
   test("crossCorpusParityDups finds a planted odd-incoming/even-corpus pair") {
@@ -610,12 +606,16 @@ class DedupSpec extends AnyFunSuite {
     assert(got.nonEmpty)
   }
 
+  // a 40-vertex path (diameter 39 — far beyond a log-rounds budget if the
+  // pointer-doubling regressed), a 3-clique, and two isolates
+  private val chainAndForest: Seq[(Long, Long)] =
+    (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq ++
+      Seq((100L, 101L), (101L, 102L), (100L, 102L))
+
   test("propagateMinLabels: deep chain and forest label to component minima") {
-    // a 40-vertex path (diameter 39 — far beyond a log-rounds budget if
-    // the pointer-doubling regressed), a 3-clique, and two isolates
-    val chain = (1L to 40L).sliding(2).map(s => (s(0), s(1))).toSeq
-    val edges = (chain ++ Seq((100L, 101L), (101L, 102L), (100L, 102L)))
-      .toDF("doc_a", "doc_b")
+    // at 45 vertices this takes the union-find fast path; the propagation
+    // loop's own test runs the same graph through the loop
+    val edges = chainAndForest.toDF("doc_a", "doc_b")
     val sym = edges.union(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
     val verts = sym.select(col("doc_a").as("doc_id"))
       .union(Seq(200L, 201L).toDF("doc_id"))
@@ -624,6 +624,48 @@ class DedupSpec extends AnyFunSuite {
     val want = (1L to 40L).map(v => (v, 1L)).toSet ++
       Set((100L, 100L), (101L, 100L), (102L, 100L), (200L, 200L), (201L, 201L))
     assert(got === want)
+  }
+
+  test("propagationLoop equals union-find and frees every superseded round") {
+    // the loop runs only above the 4M-edge union-find bound, so no suite
+    // graph reaches it through propagateMinLabels: drive it directly over
+    // the deep chain + forest and PropertySpec's ten random graphs
+    val sc = spark.sparkContext
+    def unionFind(verts: Seq[Long], edges: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val parent = scala.collection.mutable.Map(verts.map(v => v -> v): _*)
+      def find(x: Long): Long = { var r = x; while (parent(r) != r) r = parent(r); r }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      verts.map(v => (v, find(v))).toSet
+    }
+    def check(verts: Seq[Long], edges: Seq[(Long, Long)], what: String): Unit = {
+      val e = edges.toDF("doc_a", "doc_b")
+      val sym = e.union(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      val seed = verts.toDF("doc_id").distinct().withColumn("component_id", col("doc_id"))
+      val before = sc.getPersistentRDDs.keySet
+      val labels = Dedup.propagationLoop(seed, sym, verts.distinct.size.toLong)
+      try {
+        val finalRound = labels.queryExecution.analyzed.collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+        }.toSet
+        assert(finalRound.size === 1, what)
+        assert(sc.getPersistentRDDs.keySet -- before === finalRound,
+          s"$what: only the final round's staged blocks remain")
+        assert(labels.as[(Long, Long)].collect().toSet === unionFind(verts, edges), what)
+      } finally Stage.free(labels)
+    }
+    check(chainAndForest.flatMap(e => Seq(e._1, e._2)).distinct ++ Seq(200L, 201L),
+      chainAndForest, "deep chain and forest")
+    val rnd = new scala.util.Random(7L) // PropertySpec's graphs
+    (1 to 10).foreach { trial =>
+      val n = 30 + rnd.nextInt(40)
+      val m = rnd.nextInt(2 * n)
+      val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+        .filter { case (a, b) => a != b }
+      check(0L until n.toLong, edges, s"trial=$trial n=$n m=$m")
+    }
   }
 
   test("dupGraphStats/sharedSpans: collapse ≡ doc-level enumeration on verbatim copies") {

@@ -86,6 +86,14 @@ class SketchesSpec extends AnyFunSuite {
     }
   }
 
+  test("benchEvalBits retains no broadcast while cached") {
+    // the per-benchmark sizes ride as literal columns: a broadcast join in
+    // the cached plan would pin a hash relation for the artifact's lifetime
+    Sketches.benchEvalBits(spark, sf).count()
+    assert(Caches.retainedBroadcasts(spark, sf).toMap.get("Sketches.benchBitsCache")
+      === Some(0))
+  }
+
   test("sizedBloomBits: the power-of-two ladder with factor-16 headroom") {
     import Sketches.{sizedBloomBits, BloomMinBits, BloomMaxBits, BloomSizeFactor}
     assert(sizedBloomBits(0L) === BloomMinBits)
