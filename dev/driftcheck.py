@@ -12,15 +12,11 @@ to root-cause with QProbe. When the bench carries calibration probes
 ("calib_cs", round 13+: a fixed synthetic workload timed before the first
 pass and after every pass), the host multiplier is MEASURED — each ratio is
 also shown normalized by calib instead of inferred circularly from the
-suite itself. Round 15+ benches additionally carry per-slot kernel jiffy
-telemetry ("bench_ext_busy_pct": CPU held by OTHER processes during exactly
-that query's timed window) — a flagged slot with ext >= 35% is adjudicated
-as contention by measurement, closing the calib-miss gap where a window
-opens and closes mid-pass between probes — and "bench_self_util_pct" (the
-JVM's own share of the machine over the 16 most expensive warm slots),
-which separates "did more work" from "got fewer cycles" even when the
-contention is hypervisor-level and invisible to guest jiffy accounting. Exit code 0 always — this is an
-adjudication AID, not a gate; the 2x suite gate is the driver's.
+suite itself. Benches also carry each warm slot's self-utilization (the
+JVM's own share of the machine during that slot), which separates "did
+more work" from "got fewer cycles" even when the contention is
+hypervisor-level. Exit code 0 always — this is an adjudication AID, not a
+gate; the 2x suite gate is the driver's.
 """
 import json
 import re
@@ -64,27 +60,14 @@ def calib_values(text):
     return [int(v) / 100.0 for v in m.group(1).split(",")]
 
 
-def ext_busy(text):
-    """Round 15 per-slot telemetry: ({q: external-busy %}, [per-pass %]).
-
-    The sparse map carries only warm-pass slots where OTHER processes held
-    >= 15% of the machine (kernel jiffy accounting around exactly that
-    query's timed window); the list is the whole-pass figure per pass.
-    Either may be absent (pre-r15 bench logs) -> ({}, None)."""
-    m = re.search(r'\{"bench_ext_busy_pct":(\{[^}]*\})\}', text)
-    slots = {k.lstrip("q"): v for k, v in json.loads(m.group(1)).items()} if m else {}
-    p = re.search(r'"ext_busy_pct":\[([-\d,\s]*)\]', text)
-    passes = [int(v) for v in p.group(1).split(",")] if p and p.group(1).strip() else None
-    return slots, passes
-
-
 def self_util(text):
     """{q: JVM share of the machine %}. The dilation discriminator: a
     slot 3x its floor at its usual utilization did 3x the work; at a
     third of its usual utilization it got a third of the cycles
     (starved). Reads the complete r17+ map when the log carries it
     (local logs; the driver's tail window truncates it), overlaid with
-    the sparse top-16+flagged map that always survives."""
+    the sparse top-16+flagged map that older benches emitted (it
+    survives the driver's tail window in archived rounds)."""
     out = {}
     a = re.search(r'\{"bench_self_util_all_pct":(\{[^}]*\})\}', text)
     if a:
@@ -191,18 +174,16 @@ def warmup_probe_floor(cpus=None):
 
 def warmup_stats(text):
     """(warmup_sec, warmup_probe_cs/100 or None, sweep_width or None) from
-    the bench stdout. The probe (r20) is the start-of-warmup calib sample
-    the adaptive sweep width keys on; with it and calib[0] (the
-    end-of-warmup sample) the warmup window is bracketed by measurements
-    the same way the timed passes are."""
+    the bench stdout. The probe (r20) is the start-of-warmup calib sample;
+    with it and calib[0] (the end-of-warmup sample) the warmup window is
+    bracketed by measurements the same way the timed passes are. The
+    sweep width is a constant 8 now; older benches printed it."""
     m = re.search(r'"warmup_sec":([\d.]+)', text)
     w = float(m.group(1)) if m else None
     p = re.search(r'"warmup_probe_cs":(\d+)', text)
     probe = int(p.group(1)) / 100.0 if p else None
     sw = re.search(r'"warmup_sweep_width":(\d+)', text)
-    ext = re.search(r'"warmup_sweep_ext_pct":(-?\d+)', text)
-    return (w, probe, (int(sw.group(1)) if sw else None),
-            (int(ext.group(1)) if ext else None))
+    return w, probe, (int(sw.group(1)) if sw else None)
 
 
 def calib_floor(cpus=None):
@@ -243,10 +224,9 @@ def main():
     cmult = None
     if calib and len(calib) >= 2 and cfloor:
         cmult = max((calib[-2] + calib[-1]) / 2.0 / cfloor, 0.01)
-    slots, pass_ext = ext_busy(text)
     utils = self_util(text)
     quiet = quiet_util_table()
-    flagged, measured, starved = [], [], []
+    flagged, starved = [], []
     missing = []
     for q in sorted(warm, key=lambda k: int(k)):
         w = warm[q]
@@ -257,14 +237,6 @@ def main():
         r = w / f if f > 0 else float("inf")
         rn = r / cmult if cmult else None
         above = (rn if rn is not None else r) > ratio or w < 0
-        # per-slot kernel measurement trumps the bracketing probes: a
-        # flagged slot where co-tenants held >= 35% of the machine is
-        # contention BY MEASUREMENT (a 32-thread CPU-bound stage loses
-        # roughly 1/(1-ext) throughput), not a regression to chase
-        ext = slots.get(q)
-        if above and w >= 0 and ext is not None and ext >= 35:
-            measured.append((q, r, ext))
-            above = False
         # util vs the committed quiet range (r17): proportionally-low util
         # = fewer cycles, not more work — adjudicated as starvation by
         # measurement. WORK/AMBIGUOUS labels stay flagged for QProbe.
@@ -277,14 +249,13 @@ def main():
             mark = "  <-- starved (util vs quiet)"
         elif uverdict:
             mark += f" [{uverdict.lower()}]"
-        exts = f"  ext {ext:3d}%" if ext is not None else ""
         u = utils.get(q)
         qu = quiet.get(q)
         us = f"  util {u:3d}%" if u is not None else ""
         if u is not None and qu is not None:
             us += f" (quiet {qu[0]}-{qu[1]})"
         norm = f"  norm {rn:5.2f}" if rn is not None else ""
-        print(f"q{q:>3}  warm {w:6.2f}  floor {f:5.2f}  ratio {r:5.2f}{norm}{exts}{us}{mark}")
+        print(f"q{q:>3}  warm {w:6.2f}  floor {f:5.2f}  ratio {r:5.2f}{norm}{us}{mark}")
         if above:
             flagged.append((q, w, f, r))
     # both totals over the same query set: a failed query (warm = -1) is
@@ -325,7 +296,7 @@ def main():
     # normalized is drift worth adjudicating (the r19 driver's 141.9 s at
     # a 1.44x host normalizes to ~2.4x = inside the band).
     WARMUP_RATIO = 3.0
-    wsec, wprobe, swidth, swext = warmup_stats(text)
+    wsec, wprobe, swidth = warmup_stats(text)
     wfloor = warmup_floor(mcpus.group(1) if mcpus else None)
     if wsec is not None:
         if wfloor:
@@ -342,40 +313,24 @@ def main():
             wm = max(sum(ratios) / len(ratios), 0.01) if ratios else None
             wn = wr / wm if wm else None
             above = (wn if wn is not None else wr) > WARMUP_RATIO
-            # the brackets can UNDERESTIMATE a mid-warmup window (r20 run
-            # 7: 4.0x raw, brackets 1.55x) — the sweep's own whole-leg
-            # jiffy ext% is the instrument that catches it; >= 35% is
-            # contention by measurement, same rule as per-query slots
-            if above and swext is not None and swext >= 35:
-                verdict = (f"ABOVE {WARMUP_RATIO}x but sweep ext {swext}% "
-                           ">= 35% — contention by measurement")
-            elif above:
+            if above:
                 verdict = (f"ABOVE {WARMUP_RATIO}x — adjudicate the sweep "
                            "(per-step costs in warmup_sweep_top_cs)")
             else:
                 verdict = "ok"
             wms = f"  norm {wn:5.2f} (warmup-window mult {wm:.2f}x)" if wm else ""
             sws = f"  sweep-width {swidth}" if swidth is not None else ""
-            exs = (f"  sweep-ext {swext}%"
-                   if swext is not None and swext >= 0 else "")
             print(f"warmup: {wsec:.1f} s vs floor {wfloor:.1f} s "
-                  f"= {wr:.2f}x{wms}{sws}{exs}  {verdict}")
+                  f"= {wr:.2f}x{wms}{sws}  {verdict}")
         else:
             print(f"warmup: {wsec:.1f} s — no 'Warmup floor: **N.N s**' "
                   f"declared in BASELINE-notes.md yet (r20 protocol); "
                   f"declare one from kept quiet runs")
-    if pass_ext is not None:
-        print(f"whole-pass external-busy: {pass_ext} % per pass "
-              f"(kernel jiffy accounting; warm pass is the last entry)")
     if utils:
         print("util = JVM share of the machine during that slot; compare a "
               "flagged slot's util against a quiet round's for the same "
               "query — same util means more WORK (regression), "
               "proportionally lower util means fewer CYCLES (starved)")
-    if measured:
-        print(f"{len(measured)} flagged slot(s) adjudicated as contention by "
-              f"per-slot measurement (ext >= 35%): "
-              + ", ".join(f"q{q} ({r:.2f}x @ ext {e}%)" for q, r, e in measured))
     if starved:
         print(f"{len(starved)} flagged slot(s) adjudicated as STARVED by the "
               f"quiet-util table (util <= half its quiet-low): "

@@ -8,8 +8,8 @@ object Bench {
     // HOST-SPEED CALIBRATION PROBE (round 13): a fixed synthetic workload —
     // pure CPU over all cores, no I/O, no caches, no shuffle — timed before
     // the first pass and after every pass, emitted as "calib_cs" in the
-    // JSON. On a quiet host it runs at the declared calib floor
-    // (BASELINE-notes); on a contended host it scales with the load the
+    // JSON. On a quiet host it runs at the declared calib floor (the one
+    // driftcheck.py reads); on a contended host it scales with the load the
     // timed queries also see, so driftcheck.py can divide per-query ratios
     // by a MEASURED multiplier instead of inferring one circularly from
     // the suite itself (VERDICT r12 item 1a — this round's perf verdict
@@ -27,17 +27,6 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // PER-SLOT EXTERNAL-CPU TELEMETRY (round 15): the calib probe brackets
-    // the passes, so a contention window that opens and closes MID-pass is
-    // invisible to it — r12, r14, and r15 all spent a verdict item
-    // hand-adjudicating an execution-order-contiguous band of 2–3×
-    // per-query ratios against probes that read ~1.2× (the "calib-miss
-    // signature"). Instead of more probes (a timed workload per slot would
-    // cost ~10 s/pass and perturb the thing it measures), sample the
-    // kernel's own accounting around each timed query — semantics, parsing
-    // and failure behavior in graft.HostStat (test-pinned there): a 3×
-    // ratio with ext_busy 50% is contention by measurement, not inference.
-    import HostStat.{sample => procJiffies, extBusyPct, selfUtilPct}
     // Warmup, timed separately: materialize every shared persisted relation
     // and touch each table once, so the timed loop measures per-query work —
     // not session/scan warmup or first-touch cache fills that would
@@ -97,11 +86,10 @@ object Bench {
     // Round 16: the sweep is (a) INSTRUMENTED — r15's wave 3 cost 392.8 s
     // on the driver host (~3–4× quiet) with no per-slot evidence, and that
     // unmeasured pressure window was the round's leading q102 hypothesis
-    // (VERDICT r15 items 1/4) — each step gets the same wall + jiffy
-    // brackets as a timed slot, with the top-8 emitted; and (b) BOUNDED —
-    // the replaced wave() helper capped a hung step at 15 minutes, the
-    // first sweep cut didn't (advice r15), so one hang stalled the bench
-    // before the JSON line. Per-step bound 10 min under a 30-min whole-
+    // (VERDICT r15 items 1/4) — each step's wall clock is recorded, with
+    // the top-8 emitted; and (b) BOUNDED — the replaced wave() helper
+    // capped a hung step at 15 minutes, the first sweep cut didn't
+    // (advice r15), so one hang stalled the bench before the JSON line. Per-step bound 10 min under a 30-min whole-
     // sweep deadline (quiet cost ≈ 105–130 s; the r15 driver paid 393 s).
     // Round 17 (VERDICT r16 item 3): the sweep runs at the SMALLEST
     // available scale factor, not the target dir. Its remaining job after
@@ -130,36 +118,24 @@ object Bench {
       if (new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir))
         warmDir
       else sfDir
-    // SWEEP WIDTH (r20, verdict r19 item 1): the "pool self-contends
-    // under external load" hypothesis for the driver's 141.9 s r19 warmup
-    // was A/B'd by dev.SweepProbe — widths 8/4/2, fresh child sessions,
-    // JIT paid by a discarded round, burner-thread contention at measured
-    // calib multipliers ~1.0×/2.3×/3.2× — and REFUTED: width 8 won every
-    // regime (quiet 34.6/40.2/52.1 s; 2.3× 44.2/46.3/56.0; 3.2×
-    // 58.6/62.6/70.8 — BASELINE-notes r20). Warmup inflation under
-    // contention is sub-linear at full width, and the r19 driver number
-    // sits at the top of the same-HEAD quiet variance band (41–92.7 s)
-    // times its measured 1.44× host — variance, not a pool pathology. So
-    // the width STAYS 8; what r20 adds instead is adjudicability: the
-    // start-of-run probe below (one discarded calibrate() pays the
-    // probe's JIT, the second is the measurement, ~1 s inside warmup_sec)
-    // is emitted as warmup_probe_cs so it and calib[0] bracket the warmup
-    // window for driftcheck's warmup-floor protocol, and
-    // SPARK_GRAFT_SWEEP_WIDTH keeps the A/B repeatable. The probe, not
-    // HostStat, carries the multiplier because the driver's contention is
-    // hypervisor-level — invisible to guest jiffy ext% (r19 measured
-    // ext 0 during a 1.44× round).
+    // START-OF-RUN PROBE (r20): one discarded calibrate() pays the probe's
+    // JIT, the second is the measurement (~1 s inside warmup_sec). Emitted
+    // as warmup_probe_cs so it and calib[0] bracket the warmup window for
+    // driftcheck's warmup-floor protocol.
     val startProbe: Double = { calibrate(); calibrate() }
-    val sweepWidth = sys.env.get("SPARK_GRAFT_SWEEP_WIDTH")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(8)
-    val sweepStats =
-      scala.collection.mutable.ArrayBuffer.empty[(String, Double, Int, Int)]
-    @volatile var sweepExt = -1
+    // SWEEP WIDTH is the constant 8 (r20, verdict r19 item 1): the "pool
+    // self-contends under external load" hypothesis for the driver's
+    // 141.9 s r19 warmup was A/B'd at widths 8/4/2 under burner-thread
+    // contention at measured calib multipliers ~1.0×/2.3×/3.2× and
+    // REFUTED: width 8 won every regime (quiet 34.6/40.2/52.1 s; 2.3×
+    // 44.2/46.3/56.0; 3.2× 58.6/62.6/70.8). Warmup inflation under
+    // contention is sub-linear at full width.
+    val sweepWidth = 8
+    val sweepStats = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     @volatile var sweepSecs = 0.0
     def runSweep(): Unit = {
       val w3 = System.nanoTime()
       val sweepDeadline = w3 + 30L * 60 * 1000 * 1000 * 1000
-      val sweepJ0 = procJiffies()
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration._
       implicit val ec: ExecutionContext = ExecutionContext.global
@@ -200,18 +176,13 @@ object Bench {
                 s"[bench] warmup sweep skipped ${step._1}: deadline")
             } else {
               val (name, fn) = step
-              val j0 = procJiffies()
               val t0 = System.nanoTime()
               warm {
                 fn(spark, sweepDir).write.mode("overwrite").format("noop")
                   .save(); 0L
               }
               val secs = (System.nanoTime() - t0) / 1e9
-              val j1 = procJiffies()
-              sweepStats.synchronized {
-                sweepStats +=
-                  ((name, secs, extBusyPct(j0, j1), selfUtilPct(j0, j1)))
-              }
+              sweepStats.synchronized { sweepStats += (name -> secs) }
             }
             step = queue.poll()
           }
@@ -230,7 +201,6 @@ object Bench {
         warmupFailed.incrementAndGet()
         System.err.println(s"[bench] warmup sweep wedged: ${e.getMessage}")
       }
-      sweepExt = extBusyPct(sweepJ0, procJiffies())
       sweepSecs = (System.nanoTime() - w3) / 1e9
     }
     // Round 18 (VERDICT r17 item 5): the tiny-dir sweep OVERLAPS the INDEX
@@ -297,17 +267,23 @@ object Bench {
     // Catalyst prune the final projection — and sometimes the whole join
     // tree — so projection-heavy queries were priced at a fraction of
     // their real cost (q82 measured 0.3 s counted vs ~2.5 s materialized;
-    // q102 0.24 vs 2.47; q79 0.16 vs 1.81 — the round-12 audit in
-    // BASELINE-notes). The noop sink consumes full rows with no I/O and
-    // no type restrictions, pricing the query a consumer actually pays
-    // for. The declared denominator and the driver's measurement both run
-    // this same protocol, so the gate comparison stays apples-to-apples.
-    // returns (per-query seconds, per-query external-busy %, per-query
-    // self-utilization %) — the jiffy samples wrap the SAME window the
-    // timer wraps, so each entry measures exactly that timed slot
-    def onePass(): (Seq[(String, Double)], Seq[(String, Int)], Seq[(String, Int)]) = {
+    // q102 0.24 vs 2.47; q79 0.16 vs 1.81 — the round-12 audit). The
+    // noop sink consumes full rows with no I/O and no type restrictions,
+    // pricing the query a consumer actually pays for. The declared
+    // denominator and the driver's measurement both run this same
+    // protocol, so the gate comparison stays apples-to-apples.
+    // Returns (per-query seconds, per-query self-utilization %). Util is
+    // this JVM's CPU time (utime+stime, read the way perfbench's
+    // JvmCounters does) over wall × availableProcessors, sampled around
+    // the SAME window the timer wraps. It separates "did more work" (wall
+    // up, util at its quiet baseline) from "got fewer cycles" (wall up,
+    // util proportionally down).
+    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+    val nCpus = Runtime.getRuntime.availableProcessors
+    def onePass(): (Seq[(String, Double)], Seq[(String, Int)]) = {
       val rs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val j0 = procJiffies()
+        val c0 = osBean.getProcessCpuTime
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -317,12 +293,11 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
         }
-        val secs = (System.nanoTime() - t0) / 1e9
-        val j1 = procJiffies()
-        (name, if (ok) secs else -1.0, extBusyPct(j0, j1), selfUtilPct(j0, j1))
+        val wall = System.nanoTime() - t0
+        val c1 = osBean.getProcessCpuTime
+        (name, if (ok) wall / 1e9 else -1.0, Bench.utilPct(c0, c1, wall, nCpus))
       }
-      (rs.map(r => r._1 -> r._2), rs.map(r => r._1 -> r._3),
-        rs.map(r => r._1 -> r._4))
+      (rs.map(r => r._1 -> r._2), rs.map(r => r._1 -> r._3))
     }
     // STEADY-STATE protocol: run the whole suite `passes` times in ONE
     // session and report the LAST pass as the headline numbers. A single
@@ -350,25 +325,18 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] prologue failed: ${e.getMessage}") }
     calibs += calibrate() // pre-pass-1 host-speed sample
-    // overall external-busy percent across each FULL timed pass (the
-    // per-slot ladder localizes a window; this one integer says whether
-    // the pass as a whole ran against a co-tenant)
-    val passExt = scala.collection.mutable.ArrayBuffer.empty[Int]
     val all = (1 to passes).map { i =>
       // later passes re-do real per-query work (cluster labels are a
       // memoized RESULT, not an index) but keep index-like caches warm
       if (i > 1) Caches.clearResultMemos(spark)
       prologue()
-      val j0 = procJiffies()
       val r = onePass()
-      passExt += extBusyPct(j0, procJiffies())
       calibs += calibrate() // post-pass-i host-speed sample
       r
     }
     val cold = all.head._1
     val results = all.last._1
-    val warmExt = all.last._2
-    val warmUtil = all.last._3
+    val warmUtil = all.last._2
     val cachedFinal = storageMB
     val idxFills = Caches.indexKeys(spark, sfDir).diff(idxKeys0)
     if (idxFills.nonEmpty) System.err.println(
@@ -426,71 +394,28 @@ object Bench {
       val w = warmByName.getOrElse(k, 0.0)
       if (v < 0 || w < 0) Double.NegativeInfinity else -(v - w)
     }.take(16).sortBy(_._1)
-    // the warm-pass external-busy ladder, SPARSE like the cold map: only
-    // slots where other processes held ≥15% of the machine (below that
-    // the effect on a 32-thread stage is within run-to-run noise), capped
-    // at 16 by severity — a quiet round emits {} (~30 chars). Printed
-    // FIRST: under the driver's 2000-char tail window the head of the
-    // FIRST line is what truncation eats, and this is the most expendable.
     def pctMap(entries: Seq[(String, Int)]): String = entries.sortBy(_._1)
       .map { case (k, v) =>
         "\"" + k.takeWhile(_ != '_').stripPrefix("q") + "\":" + v }
       .mkString("{", ",", "}")
-    // FLOOR-AWARE EMISSION (round 16): driftcheck flags warm/floor above
-    // 2× calib-normalized, but the r15 ladders covered only the top-16
-    // slots by wall time — so the round's five flagged sub-1.3 s slots
-    // carried no ext/util evidence either way (VERDICT r15 item 2). The
-    // bench reads the SAME canonical floor table driftcheck reads (the
-    // LAST floors.py-format table in BASELINE-notes.md) and guarantees
-    // every slot that COULD be flagged — raw ratio ≥ 1.8, which covers
-    // every possible ≥2× normalized flag since the calib multiplier
-    // divides by ≥ ~1 (the floor is a min on this same machine) — an
-    // entry in BOTH ladders, capped at 16 extra by ratio so a fully
-    // contended host can't overflow the driver's 2000-char tail window.
-    // Failures (warm < 0) always qualify. No table (fresh checkout) →
-    // empty set, the pre-r16 behavior.
-    val floors: Map[String, Double] = try {
-      // explicit UTF-8: the notes carry ×/≈ punctuation and a forked JVM's
-      // default charset may not be UTF-8 — a decode throw here would
-      // silently disable flagged-slot emission via the catch below
-      Bench.parseFloorTable(scala.io.Source.fromFile("BASELINE-notes.md")(
-        scala.io.Codec.UTF8).mkString)
-    } catch { case _: Throwable => Map.empty }
-    val flagged = Bench.flaggedSlots(results, floors)
-    val extByName = warmExt.toMap
-    // warmup-sweep diagnostics, printed FIRST (most expendable under the
-    // tail window): whole-sweep external-busy % and the 8 most expensive
-    // sweep steps' wall clock — r15's 392.8 s driver wave 3 becomes
-    // attributable per slot instead of one opaque total
-    // snapshot under the same lock the sweep futures append with — a
-    // timed-out group's abandoned futures may still be running here
-    // (advice r17: the unsynchronized sort raced their appends)
+    // warmup-sweep diagnostics: the 8 most expensive sweep steps' wall
+    // clock — r15's 392.8 s driver wave 3 becomes attributable per slot
+    // instead of one opaque total. Snapshot under the same lock the sweep
+    // futures append with — a timed-out group's abandoned futures may
+    // still be running here (advice r17: the unsynchronized sort raced
+    // their appends)
     val sweepTop = sweepStats.synchronized(sweepStats.toList)
-      .sortBy(-_._2).take(8).map(s => s._1 -> s._2)
+      .sortBy(-_._2).take(8)
     // COMPLETE warm-pass utilization map, printed FIRST of all JSON lines
-    // (round 17, VERDICT r16 item 2): the sparse bench_self_util_pct below
-    // covers only top-16 + flagged slots, so quiet declaration runs carried
-    // no util baseline for the other ~100 queries — exactly the gap that
-    // made the r16 q53/q54/q55 band non-adjudicable ("q53's 59% util is
-    // unreadable without its quiet number"). ~1 KB at 120 queries: the
-    // driver's 2000-char tail window truncates from the HEAD, so this line
-    // is sacrificed first there — it exists for LOCAL logs, which
-    // dev/floors.py folds into the committed 120-slot quiet-util table
+    // (round 17, VERDICT r16 item 2): a quiet declaration run needs a util
+    // baseline for every query, or a flagged slot's util is unreadable
+    // ("q53's 59% util is unreadable without its quiet number"). ~1 KB at
+    // 128 queries: the driver's 2000-char tail window truncates from the
+    // HEAD, so this line is sacrificed first there — it exists for LOCAL
+    // logs, which dev/floors.py folds into the committed quiet-util table
     // that driftcheck reads to label flagged slots mechanically.
     println(s"""{"bench_self_util_all_pct":${pctMap(warmUtil)}}""")
-    println(s"""{"warmup_sweep_ext_pct":$sweepExt,"warmup_sweep_width":$sweepWidth,"warmup_probe_cs":${math.round(startProbe * 100)},"warmup_sweep_top_cs":${fmtShort(sweepTop, 100)}}""")
-    val extSparse = (warmExt.filter(_._2 >= 15).sortBy(-_._2).take(16) ++
-      flagged.map(k => k -> extByName.getOrElse(k, -1))).distinct
-    println(s"""{"bench_ext_busy_pct":${pctMap(extSparse)}}""")
-    // utilization for the 16 most expensive warm slots plus every flagged
-    // slot — the slots any drift adjudication is actually about. Always
-    // emitted (the quiet-run values ARE the per-query baselines a
-    // contended round is read against)
-    val utilByName = warmUtil.toMap
-    val utilTop = (results.filter(_._2 >= 0).sortBy(-_._2).take(16).map(_._1)
-      ++ flagged).distinct
-      .map(k => k -> utilByName.getOrElse(k, -1))
-    println(s"""{"bench_self_util_pct":${pctMap(utilTop)}}""")
+    println(s"""{"warmup_probe_cs":${math.round(startProbe * 100)},"warmup_sweep_top_cs":${fmtShort(sweepTop, 100)}}""")
     println(s"""{"bench_cold_sparse_ds":${fmtShort(coldSparse, 10)}}""")
     println(s"""{"bench_warm_pass_cs":${fmtShort(results, 100)}}""")
     // calib_cs = [pre-pass-1, post-pass-1, …, post-pass-N] probe times in
@@ -508,23 +433,20 @@ object Bench {
     // (quoted if non-numeric — SPARK_GRAFT_CPUS=* is legal for local[*])
     val cpusJson = scala.util.Try(cpus.trim.toInt.toString)
       .getOrElse("\"" + cpus + "\"")
-    // ext_busy_pct = [pass-1, …, pass-N] whole-pass external-busy percent
-    // (-1 = /proc unreadable); the per-slot ladder above localizes windows
-    val extJson = passExt.mkString("[", ",", "]")
     // cached_mb = [mem, disk] MB of persisted blocks post-warmup then
     // post-final-pass: disk > 0 means index artifacts were demoted under
     // pressure and later reads re-pay deserialization (the r15 q102 tell)
     val cachedJson = (cachedPostWarmup ++ cachedFinal).mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","failures":$failures,"warmup_sec":${s3(warmup)},"warmup_failures":$warmupFailures,"passes":$passes,"cold_total":${s3(coldTotal)},"calib_cs":${csList(calibs.toSeq)},"ext_busy_pct":$extJson,"warmup_waves_cs":${csList(waveDurations.toSeq)},"cached_mb":$cachedJson,"index_fills_post_warmup":${idxFills.size},"cpus":$cpusJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${s3(total)},"unit":"sec","failures":$failures,"warmup_sec":${s3(warmup)},"warmup_failures":$warmupFailures,"passes":$passes,"cold_total":${s3(coldTotal)},"calib_cs":${csList(calibs.toSeq)},"warmup_waves_cs":${csList(waveDurations.toSeq)},"cached_mb":$cachedJson,"index_fills_post_warmup":${idxFills.size},"cpus":$cpusJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 
   /** The warmup's INDEX fill: every INDEX artifact of `dir` plus one scan
     * of each table, run concurrently. Fill order is a performance detail
     * (bases first), not a correctness rule: fills are single-flight per
-    * key. `BenchFillSpec` checks that the list leaves no INDEX artifact
-    * unfilled, so the timed cold pass pays none; its exclusions say why
-    * an artifact is left out.
+    * key. ArtifactSpec's INDEX-fill test checks that the list leaves no
+    * INDEX artifact unfilled, so the timed cold pass pays none; its
+    * exclusions say why an artifact is left out.
     */
   private[graft] def indexFills(spark: SparkSession, dir: String): Seq[() => Long] = {
     import operators._
@@ -558,6 +480,15 @@ object Bench {
         "region", "documents", "embeddings").map(t => () => Tables.load(spark, dir, t).count())
   }
 
+  /** This JVM's share of the machine over a timed slot, in percent:
+    * process CPU nanoseconds `cpu1 - cpu0` over `wallNanos × cpus`; -1
+    * when a CPU reading is missing (the JVM answers -1) or no wall time
+    * elapsed.
+    */
+  private[graft] def utilPct(cpu0: Long, cpu1: Long, wallNanos: Long, cpus: Int): Int =
+    if (cpu0 < 0 || cpu1 < 0 || wallNanos <= 0 || cpus <= 0) -1
+    else (100L * math.max(0L, cpu1 - cpu0) / (wallNanos * cpus)).toInt
+
   /** The sweep's execution order: longest-steps-first in the parallel
     * arm (r19 LPT — the stored-index / artifact builders are the sweep's
     * multi-second steps even at the tiny dir, enqueued first so the pool
@@ -575,37 +506,5 @@ object Bench {
       order.sortBy { case (n, _) =>
         (!heavyFirst.contains(n.split("_").head), n) }
     else order
-  }
-
-  /** The LAST floors.py-format table in BASELINE-notes.md, keyed by SHORT
-    * query id ("q102") — the same anchor dev/driftcheck.py uses, so the
-    * bench and the offline adjudicator can never disagree on which table
-    * is canonical. Test-pinned (BenchEmissionSpec).
-    */
-  private[graft] def parseFloorTable(text: String): Map[String, Double] = {
-    val header = "| query | floor (s) | query | floor (s) | query | floor (s) |"
-    val at = text.lastIndexOf(header)
-    if (at < 0) Map.empty
-    else text.substring(at).linesIterator.drop(2).takeWhile(_.startsWith("|"))
-      .flatMap("""(q\d+) \| ([\d.]+)""".r.findAllMatchIn(_))
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-  }
-
-  /** Every warm slot that COULD be driftcheck-flagged — raw warm/floor ≥
-    * 1.8 (covers any ≥2× calib-normalized flag, since the floor is a min
-    * on this same machine) plus every failure — capped at 16 by severity
-    * so a fully contended host can't overflow the driver's 2000-char tail
-    * window. The table keys are SHORT ids; results carry full query names
-    * — normalized at lookup (the first cut matched full names against
-    * short keys, so only failures ever flagged; test-pinned now).
-    */
-  private[graft] def flaggedSlots(results: Seq[(String, Double)],
-      floors: Map[String, Double]): Set[String] = {
-    def floorOf(k: String): Option[Double] = floors.get(k.takeWhile(_ != '_'))
-    results.filter { case (k, v) =>
-      v < 0 || floorOf(k).exists(f => f > 0 && v / f >= 1.8)
-    }.sortBy { case (k, v) =>
-      if (v < 0) Double.NegativeInfinity else -(v / floorOf(k).get)
-    }.take(16).map(_._1).toSet
   }
 }

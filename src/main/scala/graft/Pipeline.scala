@@ -364,23 +364,15 @@ object Pipeline {
       table: String, path: String,
       buckets: Int = ChunkIndexBuckets,
       width: Int = TextAnalysis.ChunkWidth): Map[String, Long] = {
-    def t[A](tag: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_Q116_DEBUG")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[q116-u] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
     val dumpHashes = TextAnalysis.chunksOf(dump, width, 0)
       .select("chunk_hash").distinct()
-    t("adopt")(adoptCompactStagingIfNewer(spark, table, path, buckets))
+    adoptCompactStagingIfNewer(spark, table, path, buckets)
     // the EFFECTIVE bucket count: the sidecar (what the files were
     // written with) wins over the parameter everywhere past bootstrap —
     // adoption AND appends — so a caller's mismatched count can neither
     // mis-declare the layout nor fail the append
-    val b = t("readspec")(readBucketSpec(spark, path)).getOrElse(buckets)
-    t("recover")(recoverCatalogIfCommitted(spark, table, path, b))
+    val b = readBucketSpec(spark, path).getOrElse(buckets)
+    recoverCatalogIfCommitted(spark, table, path, b)
     // Measured r22 and REJECTED: repartition(b, chunk_hash) before each
     // write (one file per bucket per batch, §6 small-files shape). AQE
     // already coalesces these writes to 1–4 tasks at bench scale, so the
@@ -389,23 +381,23 @@ object Pipeline {
     // At deployment scale the same alignment IS the right write shape,
     // but it should come from AQE advisory sizing over a real-sized dump,
     // not a hard-coded exchange that taxes the small case.
-    if (!t("exists?")(spark.catalog.tableExists(table))) {
-      t("bootstrap-write")(sources.Sources.writeBucketed(dumpHashes, table, path, b,
-        "chunk_hash", sortCols = Seq("chunk_hash")))
+    if (!spark.catalog.tableExists(table)) {
+      sources.Sources.writeBucketed(dumpHashes, table, path, b,
+        "chunk_hash", sortCols = Seq("chunk_hash"))
       writeBucketSpec(spark, path, b)
-      val n = t("bootstrap-count")(spark.table(table).count())
+      val n = spark.table(table).count()
       return Map("hashes_before" -> 0L, "hashes_added" -> n,
         "hashes_after" -> n)
     }
     val stored = spark.table(table)
-    val nBefore = t("count-before")(stored.count())
+    val nBefore = stored.count()
     Stage.using(dumpHashes.join(stored, Seq("chunk_hash"), "left_anti")) { newOnly =>
-      val nAdded = t("antijoin-count")(newOnly.count())
+      val nAdded = newOnly.count()
       if (nAdded > 0L) {
         // delta-sized append: new bucket files only, never a rewrite
-        t("append")(newOnly.write.mode("append")
+        newOnly.write.mode("append")
           .bucketBy(b, "chunk_hash").sortBy("chunk_hash")
-          .saveAsTable(table))
+          .saveAsTable(table)
       }
       Map("hashes_before" -> nBefore, "hashes_added" -> nAdded,
         "hashes_after" -> (nBefore + nAdded))
@@ -675,19 +667,11 @@ object Pipeline {
     */
   def chunkIndexBucketedSummary(spark: SparkSession, dir: String): DataFrame = {
     val (table, path) = BucketedChunkIndexLocation(spark, dir)
-    def t[A](tag: String)(f: => A): A =
-      if (!sys.env.contains("GRAFT_Q116_DEBUG")) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"[q116] $tag ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-    t("delete")(deleteBucketedChunkIndex(spark, table, path))
+    deleteBucketedChunkIndex(spark, table, path)
     val all = TextAnalysis.rawTokens(spark, dir)
-    t("update0")(updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 0), table, path))
-    t("update1")(updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 1), table, path))
-    t("update2")(updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 2), table, path))
+    updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 0), table, path)
+    updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 1), table, path)
+    updateChunkIndexBucketed(spark, all.where(col("doc_id") % 3 === 2), table, path)
     spark.table(table)
       .withColumn("bucket", substring(col("chunk_hash"), 1, 1))
       .groupBy("bucket")

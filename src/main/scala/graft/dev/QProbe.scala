@@ -6,7 +6,7 @@ package graft.dev
   *
   *   sbt -batch "runMain graft.dev.QProbe q23_minhash_neardups q52_dup_clusters"
   *
-  * Protocol (BASELINE-notes "drift adjudication protocol"): the exact Bench
+  * Drift adjudication protocol: the exact Bench
   * environment (Sessions.start, local[32], shuffle=32), one untimed warm-up
   * sweep, then 3 timed passes. Every pass starts with ONE
   * Caches.clearResultMemos — Bench's steady-state eviction — and then runs

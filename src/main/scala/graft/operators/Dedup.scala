@@ -217,7 +217,7 @@ object Dedup {
     * afterwards returns the EXACT same relation while collapsing the
     * worst case (a corpus full of verbatim copies) from cluster-quadratic
     * join work to representative-level work plus output expansion
-    * (measured in BASELINE-notes.md's 10× smoke). Only built (and
+    * (measured in the 10× ScaleSmoke). Only built (and
     * persisted — three consumers) when hasVerbatimDups says it matters.
     *
     * groupBy + join, NOT a window over the dup group: min() gets map-side
@@ -768,7 +768,7 @@ object Dedup {
     * pointer-doubles (label ← label(label)), so rounds needed =
     * O(log diameter) + 2, not diameter — the 10× verbatim-replicated
     * corpus that needed 14 neighbor-min rounds converges in ~10 with the
-    * jump (measured, BASELINE-notes round 9; the jump composes
+    * jump (measured round 9; the jump composes
     * already-found minima, so its gain depends on where the min id sits
     * in the chain). Rounds 1–2 stay plain: the common case (tiny cliques,
     * 2-round convergence) can never profit from the jump, and the extra
@@ -873,17 +873,12 @@ object Dedup {
     // keys on that loader, and a clone per call recompiled every class
     // its jobs ran (20 per warm q112 pass at sf0.1).
     if (!unionFindFits(nVerts, () => sym0.count())) propagationLoop(vertsD, sym0, nVerts)
-    else {
-      val out = Stage.now(sym0.select(col("doc_a").as("a"), col("doc_b").as("b"))
-        .union(vertsD.select(col("doc_id").as("a"), col("doc_id").as("b")))
-        .agg(graft.functions.ComponentsAggregator
-          .minLabelComponents(col("a"), col("b")).as("ls"))
-        .select(explode(col("ls")).as("l"))
-        .select(col("l._1").as("doc_id"), col("l._2").as("component_id")))
-      if (sys.env.contains("GRAFT_PROP_DEBUG"))
-        println(s"[prop] union-find fast path: $nVerts verts")
-      out
-    }
+    else Stage.now(sym0.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .union(vertsD.select(col("doc_id").as("a"), col("doc_id").as("b")))
+      .agg(graft.functions.ComponentsAggregator
+        .minLabelComponents(col("a"), col("b")).as("ls"))
+      .select(explode(col("ls")).as("l"))
+      .select(col("l._1").as("doc_id"), col("l._2").as("component_id")))
   }
 
   /** The iterative min-label loop behind [[propagateMinLabels]], for graphs
@@ -943,14 +938,9 @@ object Dedup {
       // single-task stage sizes the re-executed inner exchanges cost
       // more than the one checkpoint they save. Fixed overhead per round
       // is real but its remedy isn't plan fusion.
-      val t0 = System.nanoTime()
       val next = Stage.now(propagationRound(labels, sym, jump = rounds >= 2))
-      val t1 = System.nanoTime()
       converged = !next.agg(coalesce(max(col("chg")), lit(false)))
         .head().getBoolean(0)
-      if (sys.env.contains("GRAFT_PROP_DEBUG"))
-        println(f"[prop] round ${rounds + 1} ckpt ${(t1 - t0) / 1e9}%.3f s " +
-          f"conv ${(System.nanoTime() - t1) / 1e9}%.3f s")
       // `next` is eagerly materialized above, so the PREVIOUS round's
       // checkpoint blocks can be freed now
       Stage.free(labels)
@@ -960,8 +950,6 @@ object Dedup {
     // fail loudly rather than return non-minimal labels for a pathological
     // long-chain component
     require(converged, s"label propagation did not converge in $maxRounds rounds")
-    if (sys.env.contains("GRAFT_PROP_DEBUG"))
-      println(s"[prop] converged in $rounds rounds")
     // hand the converged labels back bound to the CALLER's session — the
     // loop session (and its conf) ends with this call; the checkpointed
     // blocks are context-level and stay valid
@@ -1024,7 +1012,7 @@ object Dedup {
     * near-dup component and whether it is the canonical survivor (minimum
     * doc_id of its component; docs in no cluster survive trivially). This
     * is the relation a 100 TB pipeline filters on before training — and
-    * the 10× smoke (BASELINE-notes.md) shows the right ORDER at scale:
+    * the 10× ScaleSmoke shows the right ORDER at scale:
     * collapse verbatim copies with exactDedup first, then run the LSH
     * near-dup ladder on the collapsed corpus, then this.
     */

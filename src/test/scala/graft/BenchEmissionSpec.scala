@@ -2,73 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's floor-aware flagged-slot emission (round 16, VERDICT
-  * r15 item 2): the floor-table anchor must match dev/driftcheck.py's
-  * (LAST floors.py-format table wins) and the short-id/full-name key
-  * mismatch that silently disabled flagging in the first cut must stay
-  * fixed.
+/** Pins the bench's stdout contract: the must-survive suffix fits the
+  * driver's 2000-char archive window, the sweep order, the per-slot util
+  * arithmetic, and the floor table in BASELINE-notes.md that
+  * dev/driftcheck.py reads.
   */
 class BenchEmissionSpec extends AnyFunSuite {
-
-  private val table =
-    """!| query | floor (s) | query | floor (s) | query | floor (s) |
-      !|---|---|---|---|---|---|
-      !| q01 | 0.80 | q02 | 0.59 | q102 | 2.33 |
-      !| q04 | 0.51 | q119 | 1.60 | | |
-      !""".stripMargin('!')
-
-  test("parseFloorTable reads the LAST table and keys by short id") {
-    val stale =
-      """!| query | floor (s) | query | floor (s) | query | floor (s) |
-        !|---|---|---|---|---|---|
-        !| q01 | 9.99 | | | | |
-        !""".stripMargin('!')
-    val floors = Bench.parseFloorTable(
-      "preamble\n" + stale + "\nprose between tables\n" + table + "\ntrailing prose")
-    assert(floors === Map(
-      "q01" -> 0.80, "q02" -> 0.59, "q102" -> 2.33, "q04" -> 0.51,
-      "q119" -> 1.60))
-  }
-
-  test("parseFloorTable is empty on text with no floors.py header") {
-    assert(Bench.parseFloorTable("no tables here\n| a | b |\n") === Map.empty)
-  }
-
-  test("flaggedSlots matches FULL query names against SHORT table keys") {
-    val floors = Bench.parseFloorTable(table)
-    val results = Seq(
-      "q01_pricing_summary" -> 0.85, // 1.06x — quiet
-      "q02_revenue_by_nation" -> 1.20, // 2.03x — flagged
-      "q102_bloom_decontamination" -> 9.14, // 3.92x — the r15 anomaly shape
-      "q04_top_orders_per_customer" -> 0.60, // 1.18x — quiet
-      "q119_bloom_fp_audit" -> -1.0) // failure — always flagged
-    assert(Bench.flaggedSlots(results, floors) === Set(
-      "q02_revenue_by_nation", "q102_bloom_decontamination",
-      "q119_bloom_fp_audit"))
-  }
-
-  test("flaggedSlots caps at 16 by severity, failures always survive") {
-    val floors = (1 to 30).map(i => f"q$i%02d" -> 1.0).toMap
-    val results = (1 to 30).map(i => f"q$i%02d_name" -> (1.8 + i * 0.1)) :+
-      ("q99_broken" -> -1.0)
-    val flagged = Bench.flaggedSlots(results, floors)
-    assert(flagged.size === 16)
-    assert(flagged.contains("q99_broken"))
-    // severity order: the 15 largest ratios fill the rest
-    assert(flagged.contains("q30_name") && !flagged.contains("q01_name"))
-  }
-
-  test("no floor table means only failures flag (fresh-checkout behavior)") {
-    val flagged = Bench.flaggedSlots(
-      Seq("q01_x" -> 99.0, "q02_y" -> -1.0), Map.empty)
-    assert(flagged === Set("q02_y"))
-  }
 
   test("worst-case tail lines fit the driver's 2000-char archive window") {
     // The driver archives only the LAST 2000 chars of Bench stdout and
     // parses the final {"metric":...} line; truncation eats from the
     // HEAD, so the print order makes earlier lines (full util map, sweep
-    // stats, ext ladder, sparse util ladder) deliberately expendable.
+    // stats) deliberately expendable.
     // The MUST-SURVIVE suffix is the last three lines: the sparse cold
     // map (hard-capped at 16 entries since r17), the COMPLETE warm map
     // (driftcheck's input — rounds 1–5 and 8–9 lost it to overflow), and
@@ -105,10 +50,29 @@ class BenchEmissionSpec extends AnyFunSuite {
     }
   }
 
+  test("utilPct: the JVM's own share of capacity, -1 without a reading") {
+    val sec = 1000000000L
+    // 2 s of process CPU over 1 s of wall on 4 processors = half the machine
+    assert(Bench.utilPct(0L, 2 * sec, sec, 4) === 50)
+    assert(Bench.utilPct(7L, 7L, sec, 4) === 0)
+    // getProcessCpuTime answers -1 where the platform has no CPU clock
+    assert(Bench.utilPct(-1L, sec, sec, 4) === -1)
+    assert(Bench.utilPct(0L, -1L, sec, 4) === -1)
+    assert(Bench.utilPct(0L, sec, 0L, 4) === -1)
+  }
+
   test("the repo's own BASELINE-notes parses and covers the suite") {
     val text = scala.io.Source.fromFile("BASELINE-notes.md")(
       scala.io.Codec.UTF8).mkString
-    val floors = Bench.parseFloorTable(text)
+    // the LAST floors.py-format table is canonical, the same anchor
+    // dev/driftcheck.py uses; rows key by SHORT query id ("q102")
+    val header = "| query | floor (s) | query | floor (s) | query | floor (s) |"
+    val at = text.lastIndexOf(header)
+    assert(at >= 0, "no floors.py-format floor table")
+    val floors = text.substring(at).linesIterator.drop(2)
+      .takeWhile(_.startsWith("|"))
+      .flatMap("""(q\d+) \| ([\d.]+)""".r.findAllMatchIn(_))
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
     // every floor key must correspond to a real query (a renamed or
     // deleted query leaving a stale floor row would mis-normalize flags)
     val known = SparkEntry.queries.keys.map(_.takeWhile(_ != '_')).toSet
