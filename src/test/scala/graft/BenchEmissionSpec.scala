@@ -50,11 +50,15 @@ class BenchEmissionSpec extends AnyFunSuite {
     }
   }
 
-  test("utilPct: the JVM's own share of capacity, -1 without a reading") {
+  test("utilPct: the JVM's own share of capacity") {
     val sec = 1000000000L
     // 2 s of process CPU over 1 s of wall on 4 processors = half the machine
     assert(Bench.utilPct(0L, 2 * sec, sec, 4) === 50)
     assert(Bench.utilPct(7L, 7L, sec, 4) === 0)
+  }
+
+  test("utilPct answers -1 for a missing CPU reading or an empty window") {
+    val sec = 1000000000L
     // getProcessCpuTime answers -1 where the platform has no CPU clock
     assert(Bench.utilPct(-1L, sec, sec, 4) === -1)
     assert(Bench.utilPct(0L, -1L, sec, 4) === -1)
