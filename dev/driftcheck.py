@@ -13,9 +13,9 @@ to root-cause with QProbe. When the bench carries calibration probes
 pass and after every pass), the host multiplier is MEASURED — each ratio is
 also shown normalized by calib instead of inferred circularly from the
 suite itself. Benches also carry each warm slot's self-utilization (the
-JVM's own share of the machine during that slot), which separates "did
-more work" from "got fewer cycles" even when the contention is
-hypervisor-level. Exit code 0 always — this is an adjudication AID, not a
+JVM's share of the kernel's total jiffies during that slot), which
+separates "did more work" from "got fewer cycles" even when the contention
+is hypervisor-level. Exit code 0 always — this is an adjudication AID, not a
 gate; the 2x suite gate is the driver's.
 """
 import json
@@ -66,8 +66,8 @@ def self_util(text):
     third of its usual utilization it got a third of the cycles
     (starved). Reads the complete r17+ map when the log carries it
     (local logs; the driver's tail window truncates it), overlaid with
-    the sparse top-16+flagged map that older benches emitted (it
-    survives the driver's tail window in archived rounds)."""
+    the sparse map of the 16 most expensive warm slots, which survives
+    the tail window (r16-r22 benches also added flagged slots to it)."""
     out = {}
     a = re.search(r'\{"bench_self_util_all_pct":(\{[^}]*\})\}', text)
     if a:

@@ -89,8 +89,9 @@ object Bench {
     // (VERDICT r15 items 1/4) — each step's wall clock is recorded, with
     // the top-8 emitted; and (b) BOUNDED — the replaced wave() helper
     // capped a hung step at 15 minutes, the first sweep cut didn't
-    // (advice r15), so one hang stalled the bench before the JSON line. Per-step bound 10 min under a 30-min whole-
-    // sweep deadline (quiet cost ≈ 105–130 s; the r15 driver paid 393 s).
+    // (advice r15), so one hang stalled the bench before the JSON line.
+    // Per-step bound 10 min under a 30-min whole-sweep deadline (quiet
+    // cost ≈ 105–130 s; the r15 driver paid 393 s).
     // Round 17 (VERDICT r16 item 3): the sweep runs at the SMALLEST
     // available scale factor, not the target dir. Its remaining job after
     // the INDEX fill is plan compilation — Spark's codegen cache keys on the
@@ -128,8 +129,8 @@ object Bench {
     // 141.9 s r19 warmup was A/B'd at widths 8/4/2 under burner-thread
     // contention at measured calib multipliers ~1.0×/2.3×/3.2× and
     // REFUTED: width 8 won every regime (quiet 34.6/40.2/52.1 s; 2.3×
-    // 44.2/46.3/56.0; 3.2× 58.6/62.6/70.8). Warmup inflation under
-    // contention is sub-linear at full width.
+    // 44.2/46.3/56.0; 3.2× 58.6/62.6/70.8 — the round-20 notes). Warmup
+    // inflation under contention is sub-linear at full width.
     val sweepWidth = 8
     val sweepStats = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     @volatile var sweepSecs = 0.0
@@ -267,23 +268,17 @@ object Bench {
     // Catalyst prune the final projection — and sometimes the whole join
     // tree — so projection-heavy queries were priced at a fraction of
     // their real cost (q82 measured 0.3 s counted vs ~2.5 s materialized;
-    // q102 0.24 vs 2.47; q79 0.16 vs 1.81 — the round-12 audit). The
-    // noop sink consumes full rows with no I/O and no type restrictions,
-    // pricing the query a consumer actually pays for. The declared
-    // denominator and the driver's measurement both run this same
-    // protocol, so the gate comparison stays apples-to-apples.
-    // Returns (per-query seconds, per-query self-utilization %). Util is
-    // this JVM's CPU time (utime+stime, read the way perfbench's
-    // JvmCounters does) over wall × availableProcessors, sampled around
-    // the SAME window the timer wraps. It separates "did more work" (wall
-    // up, util at its quiet baseline) from "got fewer cycles" (wall up,
-    // util proportionally down).
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    val nCpus = Runtime.getRuntime.availableProcessors
+    // q102 0.24 vs 2.47; q79 0.16 vs 1.81 — the round-12 audit notes).
+    // The noop sink consumes full rows with no I/O and no type
+    // restrictions, pricing the query a consumer actually pays for. The
+    // declared denominator and the driver's measurement both run this
+    // same protocol, so the gate comparison stays apples-to-apples.
+    // Returns (per-query seconds, per-query self-utilization %). The
+    // jiffy samples (graft.HostStat) wrap the SAME window the timer
+    // wraps, so each util entry measures exactly that timed slot.
     def onePass(): (Seq[(String, Double)], Seq[(String, Int)]) = {
       val rs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val c0 = osBean.getProcessCpuTime
+        val j0 = HostStat.sample()
         val t0 = System.nanoTime()
         val ok = try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -293,9 +288,9 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
         }
-        val wall = System.nanoTime() - t0
-        val c1 = osBean.getProcessCpuTime
-        (name, if (ok) wall / 1e9 else -1.0, Bench.utilPct(c0, c1, wall, nCpus))
+        val secs = (System.nanoTime() - t0) / 1e9
+        val j1 = HostStat.sample()
+        (name, if (ok) secs else -1.0, HostStat.selfUtilPct(j0, j1))
       }
       (rs.map(r => r._1 -> r._2), rs.map(r => r._1 -> r._3))
     }
@@ -416,6 +411,15 @@ object Bench {
     // that driftcheck reads to label flagged slots mechanically.
     println(s"""{"bench_self_util_all_pct":${pctMap(warmUtil)}}""")
     println(s"""{"warmup_probe_cs":${math.round(startProbe * 100)},"warmup_sweep_top_cs":${fmtShort(sweepTop, 100)}}""")
+    // util for the 16 most expensive warm slots, printed just before the
+    // must-survive suffix: the complete map above is cut from driver
+    // archives, and this ~170-char line is what driftcheck's util labels
+    // read there. Chosen from the results alone, so a fresh checkout
+    // emits the same line.
+    val utilByName = warmUtil.toMap
+    val utilTop = results.filter(_._2 >= 0).sortBy(-_._2).take(16)
+      .map { case (k, _) => k -> utilByName.getOrElse(k, -1) }
+    println(s"""{"bench_self_util_pct":${pctMap(utilTop)}}""")
     println(s"""{"bench_cold_sparse_ds":${fmtShort(coldSparse, 10)}}""")
     println(s"""{"bench_warm_pass_cs":${fmtShort(results, 100)}}""")
     // calib_cs = [pre-pass-1, post-pass-1, …, post-pass-N] probe times in
@@ -479,15 +483,6 @@ object Bench {
       Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
         "region", "documents", "embeddings").map(t => () => Tables.load(spark, dir, t).count())
   }
-
-  /** This JVM's share of the machine over a timed slot, in percent:
-    * process CPU nanoseconds `cpu1 - cpu0` over `wallNanos × cpus`; -1
-    * when a CPU reading is missing (the JVM answers -1) or no wall time
-    * elapsed.
-    */
-  private[graft] def utilPct(cpu0: Long, cpu1: Long, wallNanos: Long, cpus: Int): Int =
-    if (cpu0 < 0 || cpu1 < 0 || wallNanos <= 0 || cpus <= 0) -1
-    else (100L * math.max(0L, cpu1 - cpu0) / (wallNanos * cpus)).toInt
 
   /** The sweep's execution order: longest-steps-first in the parallel
     * arm (r19 LPT — the stored-index / artifact builders are the sweep's

@@ -1,53 +1,45 @@
 package graft
 
-/** Kernel jiffy sampling for the bench's per-slot contention telemetry
-  * (round 15). A sample is (aggregate busy jiffies, aggregate total
-  * jiffies, this process's utime+stime jiffies); two samples bracketing
-  * a timed region yield
+/** Kernel jiffy sampling for the bench's per-slot self-utilization
+  * (round 15). A sample is (aggregate total jiffies, this process's
+  * utime+stime jiffies); two samples bracketing a timed region yield
+  * [[selfUtilPct]], this JVM's own share of the machine — the dilation
+  * discriminator separating "did more work" (wall up, util at its quiet
+  * baseline) from "got fewer cycles" (wall up, util proportionally down).
   *
-  *  - [[extBusyPct]]: the share of machine capacity OTHER processes
-  *    held during the region — in-guest contention, measured during
-  *    exactly the window the timer wraps (the pass-bracketing calib
-  *    probes miss windows that open and close mid-pass);
-  *  - [[selfUtilPct]]: this JVM's own share of the machine — the
-  *    dilation discriminator separating "did more work" (wall up, util
-  *    at its quiet baseline) from "got fewer cycles" (wall up, util
-  *    proportionally down), which works even when the slowdown is
-  *    hypervisor- or memory-bandwidth-level and invisible to guest
-  *    jiffy accounting entirely.
+  * The denominator is the kernel's total jiffies, not wall × processors:
+  * the committed quiet-util table that dev/driftcheck.py labels slots
+  * against was folded from this form. The JVM's process CPU time gives
+  * the same numerator, but over wall × processors it read up to 8 points
+  * higher per slot on a host with 9–13% hypervisor steal (total jiffies
+  * ran 5–26% above wall × 4), so switching forms needs a re-declared
+  * table first.
   *
   * Telemetry may never break the bench: any read/parse failure yields
-  * None, and both percent functions answer -1 for missing samples or
-  * sub-jiffy regions. The parsing is isolated here (rather than inline
-  * in Bench.main) so HostStatSpec can pin the subtle parts — the comm
-  * field of /proc/self/stat may contain spaces and parentheses, and the
-  * /proc/stat cpu line's column arithmetic differs across kernels.
+  * None, and [[selfUtilPct]] answers -1 for missing samples or sub-jiffy
+  * regions. HostStatSpec pins the subtle parts — the comm field of
+  * /proc/self/stat may contain spaces and parentheses, and the /proc/stat
+  * cpu line's column count differs across kernels.
   */
 object HostStat {
-  /** (busy, total, self) jiffies — None on any failure. */
-  def sample(): Option[(Long, Long, Long)] =
+  /** (total, self) jiffies — None on any failure. */
+  def sample(): Option[(Long, Long)] =
     try {
-      val stat = java.nio.file.Files.lines(java.nio.file.Paths.get("/proc/stat"))
-        .filter(_.startsWith("cpu ")).findFirst.get
-      val self = java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/self/stat"))
-      for (a <- parseCpuLine(stat); s <- parseSelfJiffies(self))
-        yield (a._1, a._2, s)
+      def read(p: String) = java.nio.file.Files.readString(java.nio.file.Paths.get(p))
+      val stat = read("/proc/stat").linesIterator.find(_.startsWith("cpu ")).get
+      for (t <- parseCpuLine(stat); s <- parseSelfJiffies(read("/proc/self/stat")))
+        yield (t, s)
     } catch { case _: Throwable => None }
 
-  /** The aggregate "cpu " line of /proc/stat → (busy, total) jiffies.
-    * Columns: user nice system idle iowait irq softirq steal [guest
-    * guest_nice]; busy = user+nice+system+irq+softirq+steal (steal
-    * counts as external — this process cannot have produced it), total
-    * = busy+idle+iowait. Older kernels omit trailing columns, so
-    * iowait/steal are read defensively.
+  /** Total jiffies of the aggregate "cpu " line of /proc/stat. Columns:
+    * user nice system idle iowait irq softirq steal [guest guest_nice];
+    * total sums the first eight (guest time is already inside user/nice).
+    * Older kernels omit trailing columns, so fewer are summed as read.
     */
-  def parseCpuLine(line: String): Option[(Long, Long)] =
+  def parseCpuLine(line: String): Option[Long] =
     try {
       val c = line.trim.split("\\s+").drop(1).map(_.toLong)
-      val busy = c(0) + c(1) + c(2) + c(5) + c(6) +
-        (if (c.length > 7) c(7) else 0L)
-      Some((busy, busy + c(3) + (if (c.length > 4) c(4) else 0L)))
+      if (c.length < 4) None else Some(c.take(8).sum)
     } catch { case _: Throwable => None }
 
   /** utime+stime of a /proc/<pid>/stat line. The comm field (2) is an
@@ -63,21 +55,12 @@ object HostStat {
       Some(rest(11).toLong + rest(12).toLong)
     } catch { case _: Throwable => None }
 
-  /** Percent of machine capacity other processes held between two
-    * samples; -1 when either sample is missing or no jiffy elapsed. */
-  def extBusyPct(a: Option[(Long, Long, Long)],
-                 b: Option[(Long, Long, Long)]): Int = (a, b) match {
-    case (Some((b0, t0, s0)), Some((b1, t1, s1))) if t1 > t0 =>
-      (100L * math.max(0L, (b1 - b0) - (s1 - s0)) / (t1 - t0)).toInt
-    case _ => -1
-  }
-
   /** Percent of machine capacity THIS process held between two samples;
     * -1 when either sample is missing or no jiffy elapsed. */
-  def selfUtilPct(a: Option[(Long, Long, Long)],
-                  b: Option[(Long, Long, Long)]): Int = (a, b) match {
-    case (Some((_, t0, s0)), Some((_, t1, s1))) if t1 > t0 =>
-      (100L * math.max(0L, s1 - s0) / (t1 - t0)).toInt
-    case _ => -1
-  }
+  def selfUtilPct(a: Option[(Long, Long)], b: Option[(Long, Long)]): Int =
+    (a, b) match {
+      case (Some((t0, s0)), Some((t1, s1))) if t1 > t0 =>
+        (100L * math.max(0L, s1 - s0) / (t1 - t0)).toInt
+      case _ => -1
+    }
 }

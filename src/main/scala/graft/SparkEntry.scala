@@ -105,7 +105,8 @@ object SparkEntry {
     // SimHash hamming-distance probing (banded LSH on the signature bits)
     "q53_simhash_hamming" -> ((s, d) => Dedup.simhashNearDups(s, d)),
     // Canonical-survivor materialization (the relation a pipeline filters
-    // on before training; the 10× ScaleSmoke measures the scale ordering)
+    // on before training; the round-2 notes' 10× ScaleSmoke measures the
+    // scale ordering)
     "q54_dedup_survivors" -> ((s, d) => Dedup.dedupSurvivors(s, d)),
     // Multi-probe IVF ANN (hamming-1 cell fan-out, the recall/cost knob)
     "q55_knn_multiprobe" -> ((s, d) => Similarity.knnIvfMultiProbe(s, d)),

@@ -6,9 +6,9 @@ package graft.dev
   *
   *   sbt -batch "runMain graft.dev.QProbe q23_minhash_neardups q52_dup_clusters"
   *
-  * Drift adjudication protocol: the exact Bench
-  * environment (Sessions.start, local[32], shuffle=32), one untimed warm-up
-  * sweep, then 3 timed passes. Every pass starts with ONE
+  * Protocol (as in the round-9 notes' q64 drift adjudication): the exact
+  * Bench environment (Sessions.start, local[32], shuffle=32), one untimed
+  * warm-up sweep, then 3 timed passes. Every pass starts with ONE
   * Caches.clearResultMemos — Bench's steady-state eviction — and then runs
   * the named queries IN THE GIVEN ORDER, so shared rebuild costs (e.g. the
   * verified-pair relation q23/q52/q54/q95 share) land on whichever query

@@ -217,7 +217,7 @@ object Dedup {
     * afterwards returns the EXACT same relation while collapsing the
     * worst case (a corpus full of verbatim copies) from cluster-quadratic
     * join work to representative-level work plus output expansion
-    * (measured in the 10× ScaleSmoke). Only built (and
+    * (measured by the 10× ScaleSmoke, round-2 notes). Only built (and
     * persisted — three consumers) when hasVerbatimDups says it matters.
     *
     * groupBy + join, NOT a window over the dup group: min() gets map-side
@@ -768,7 +768,7 @@ object Dedup {
     * pointer-doubles (label ← label(label)), so rounds needed =
     * O(log diameter) + 2, not diameter — the 10× verbatim-replicated
     * corpus that needed 14 neighbor-min rounds converges in ~10 with the
-    * jump (measured round 9; the jump composes
+    * jump (measured in the round-9 notes; the jump composes
     * already-found minima, so its gain depends on where the min id sits
     * in the chain). Rounds 1–2 stay plain: the common case (tiny cliques,
     * 2-round convergence) can never profit from the jump, and the extra
@@ -1012,7 +1012,7 @@ object Dedup {
     * near-dup component and whether it is the canonical survivor (minimum
     * doc_id of its component; docs in no cluster survive trivially). This
     * is the relation a 100 TB pipeline filters on before training — and
-    * the 10× ScaleSmoke shows the right ORDER at scale:
+    * the 10× ScaleSmoke (round-2 notes) shows the right ORDER at scale:
     * collapse verbatim copies with exactDedup first, then run the LSH
     * near-dup ladder on the collapsed corpus, then this.
     */

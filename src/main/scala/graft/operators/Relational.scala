@@ -228,8 +228,8 @@ object Relational {
     * conditional-MIN order statistics) was built and measured in round
     * 13: 2.5–2.8 s vs 1.5 s here, because l_extendedprice is
     * nearly-all-distinct at this SF (~450k values over 600k rows), so
-    * the grid shuffle + sort-window dominates — reverted (a recorded
-    * negative result).
+    * the grid shuffle + sort-window dominates — reverted; the negative
+    * result is recorded in the round-13 notes.
     */
   def priceQuantiles(spark: SparkSession, dir: String): DataFrame =
     // frequency-weighted percentile over the pre-aggregated

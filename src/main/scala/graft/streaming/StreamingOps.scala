@@ -568,8 +568,8 @@ object StreamingOps {
     * (md5, the q21 contract), keep exactly one survivor per fingerprint
     * STATEFULLY across micro-batches, and append survivors to a parquet
     * corpus directory via foreachBatch — the streaming twin of exactDedup +
-    * writeParquet, and the front door of the dedup ladder (collapse
-    * verbatim copies first).
+    * writeParquet, and the front door of the dedup ladder (the round-2
+    * notes' 10× ScaleSmoke ordering: collapse verbatim copies first).
     *
     * Survivor choice is DETERMINISTIC: within a micro-batch every row of a
     * fingerprint reaches one stateful group, and the MINIMUM doc_id wins —

@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's stdout contract: the must-survive suffix fits the
-  * driver's 2000-char archive window, the sweep order, the per-slot util
-  * arithmetic, and the floor table in BASELINE-notes.md that
+/** Pins the bench's stdout contract: the must-survive suffix and the
+  * sparse util line fit the driver's 2000-char archive window, the sweep
+  * order, and the floor table in BASELINE-notes.md that
   * dev/driftcheck.py reads.
   */
 class BenchEmissionSpec extends AnyFunSuite {
@@ -13,7 +13,7 @@ class BenchEmissionSpec extends AnyFunSuite {
     // The driver archives only the LAST 2000 chars of Bench stdout and
     // parses the final {"metric":...} line; truncation eats from the
     // HEAD, so the print order makes earlier lines (full util map, sweep
-    // stats) deliberately expendable.
+    // stats, sparse util ladder) deliberately expendable.
     // The MUST-SURVIVE suffix is the last three lines: the sparse cold
     // map (hard-capped at 16 entries since r17), the COMPLETE warm map
     // (driftcheck's input — rounds 1–5 and 8–9 lost it to overflow), and
@@ -34,6 +34,25 @@ class BenchEmissionSpec extends AnyFunSuite {
         "adding queries")
   }
 
+  test("the sparse util line survives the archive window when every warm slot is under 10 s") {
+    // The line just before the must-survive suffix: the top-16 warm
+    // slots' util, which driftcheck reads from driver archives. Archived
+    // driver warm slots peak at 3.55 s (BENCH_r20), so 3-digit
+    // centisecond values are the realistic ceiling; the cold map stays
+    // at its 16-entry worst case.
+    val keys = SparkEntry.queries.keys.toSeq.map(_.takeWhile(_ != '_').stripPrefix("q"))
+    // "KEY":999, per warm entry around {"bench_warm_pass_cs":{ … }}
+    val warmLine = 24 + keys.map(_.length + 6).sum
+    val metricLine = 310
+    val coldLine = 30 + 16 * 12
+    // {"bench_self_util_pct":{ … }} with 16 × "NNN":100,
+    val utilLine = 26 + 16 * 10
+    val total = utilLine + warmLine + metricLine + coldLine + 4
+    assert(total < 2000,
+      s"sparse util line + suffix $total chars >= 2000 at ${keys.size} " +
+        "queries — driftcheck's util labels would go silent on driver rounds")
+  }
+
   test("sweepOrder: LPT heavy-first when parallel, pure alphabetical when sequential") {
     val par = Bench.sweepOrder(8).map(_._1)
     val seqOrder = Bench.sweepOrder(1).map(_._1)
@@ -48,21 +67,6 @@ class BenchEmissionSpec extends AnyFunSuite {
       assert(at < par.indexWhere(_.startsWith("q01_")),
         s"$h must be enqueued before the light steps")
     }
-  }
-
-  test("utilPct: the JVM's own share of capacity") {
-    val sec = 1000000000L
-    // 2 s of process CPU over 1 s of wall on 4 processors = half the machine
-    assert(Bench.utilPct(0L, 2 * sec, sec, 4) === 50)
-    assert(Bench.utilPct(7L, 7L, sec, 4) === 0)
-  }
-
-  test("utilPct answers -1 for a missing CPU reading or an empty window") {
-    val sec = 1000000000L
-    // getProcessCpuTime answers -1 where the platform has no CPU clock
-    assert(Bench.utilPct(-1L, sec, sec, 4) === -1)
-    assert(Bench.utilPct(0L, -1L, sec, 4) === -1)
-    assert(Bench.utilPct(0L, sec, 0L, 4) === -1)
   }
 
   test("the repo's own BASELINE-notes parses and covers the suite") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the /proc parsing and percent arithmetic behind the bench's
-  * per-slot contention telemetry (bench_ext_busy_pct /
+  * per-slot self-utilization (bench_self_util_all_pct /
   * bench_self_util_pct). These are fixture-string tests — the live
   * /proc sampling itself is exercised by the one smoke test at the
   * bottom, which only asserts shape (telemetry must degrade to None/-1,
@@ -12,19 +12,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class HostStatSpec extends AnyFunSuite {
 
   // a real-shaped aggregate cpu line:
-  //            user    nice system  idle   iowait irq softirq steal
+  //            user    nice system  idle   iowait irq softirq steal guest
   val cpuLine = "cpu  100     2     30     800     8     0     4     6 1 1"
 
-  test("parseCpuLine: busy excludes idle+iowait, includes steal") {
-    // busy = 100+2+30+0+4+6 = 142; total = 142+800+8 = 950
-    assert(HostStat.parseCpuLine(cpuLine) === Some((142L, 950L)))
+  test("parseCpuLine: total counts idle, iowait and steal, not guest") {
+    // 100+2+30+800+8+0+4+6 = 950; guest/guest_nice are inside user/nice
+    assert(HostStat.parseCpuLine(cpuLine) === Some(950L))
   }
 
   test("parseCpuLine: kernels without steal/iowait columns parse defensively") {
-    // only user nice system idle — busy would index past the array
-    assert(HostStat.parseCpuLine("cpu 10 0 5 100") === None)
-    // with iowait+irq+softirq but no steal: busy = 10+0+5+0+2 = 17
-    assert(HostStat.parseCpuLine("cpu 10 0 5 100 3 0 2") === Some((17L, 120L)))
+    // only user nice system idle
+    assert(HostStat.parseCpuLine("cpu 10 0 5 100") === Some(115L))
+    // with iowait+irq+softirq but no steal
+    assert(HostStat.parseCpuLine("cpu 10 0 5 100 3 0 2") === Some(120L))
+    // fewer than the four base columns is not a cpu line
+    assert(HostStat.parseCpuLine("cpu 10 0 5") === None)
   }
 
   test("parseCpuLine: garbage yields None, never a throw") {
@@ -46,29 +48,19 @@ class HostStatSpec extends AnyFunSuite {
     assert(HostStat.parseSelfJiffies("no parens at all") === None)
   }
 
-  test("extBusyPct: external = busy delta minus self delta, over capacity") {
-    val a = Some((1000L, 10000L, 400L))
-    // +600 busy, +1000 total capacity, +200 self → external 400/1000 = 40%
-    val b = Some((1600L, 11000L, 600L))
-    assert(HostStat.extBusyPct(a, b) === 40)
-    // self accounts for ALL the busy delta → 0%, and a self delta larger
-    // than the busy delta (thread accounting skew) clamps at 0, not negative
-    assert(HostStat.extBusyPct(a, Some((1600L, 11000L, 1100L))) === 0)
-  }
-
   test("selfUtilPct: the JVM's own share of capacity") {
-    val a = Some((1000L, 10000L, 400L))
-    val b = Some((1600L, 11000L, 600L))
+    val a = Some((10000L, 400L))
+    val b = Some((11000L, 600L))
     assert(HostStat.selfUtilPct(a, b) === 20) // 200/1000
+    assert(HostStat.selfUtilPct(a, Some((11000L, 400L))) === 0)
   }
 
   test("percent functions answer -1 for missing samples or sub-jiffy windows") {
-    val s = Some((1L, 1L, 1L))
-    assert(HostStat.extBusyPct(None, s) === -1)
-    assert(HostStat.extBusyPct(s, None) === -1)
-    assert(HostStat.extBusyPct(s, s) === -1) // no jiffy elapsed
+    val s = Some((1L, 1L))
+    assert(HostStat.selfUtilPct(None, s) === -1)
+    assert(HostStat.selfUtilPct(s, None) === -1)
     assert(HostStat.selfUtilPct(None, None) === -1)
-    assert(HostStat.selfUtilPct(s, s) === -1)
+    assert(HostStat.selfUtilPct(s, s) === -1) // no jiffy elapsed
   }
 
   test("live sample: well-formed on Linux, and monotone across a busy spin") {
@@ -81,13 +73,11 @@ class HostStatSpec extends AnyFunSuite {
     Thread.sleep(30) // let total jiffies tick even at coarse HZ
     val b = HostStat.sample()
     (a, b) match {
-      case (Some((b0, t0j, s0)), Some((b1, t1j, s1))) =>
-        assert(b0 <= t0j && b1 <= t1j, "busy can never exceed total")
-        assert(t1j > t0j && b1 >= b0 && s1 >= s0, "jiffies are monotone")
+      case (Some((t0j, s0)), Some((t1j, s1))) =>
+        assert(s0 <= t0j && s1 <= t1j, "self can never exceed total")
+        assert(t1j > t0j && s1 >= s0, "jiffies are monotone")
         val util = HostStat.selfUtilPct(a, b)
         assert(util >= 0 && util <= 100)
-        val ext = HostStat.extBusyPct(a, b)
-        assert(ext >= 0 && ext <= 100)
       case _ => fail("second sample failed after first succeeded")
     }
   }
