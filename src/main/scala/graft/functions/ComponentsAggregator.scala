@@ -41,6 +41,15 @@ object ComponentsAggregator {
     */
   val AlarmEdgeCount: Int = 5000000
 
+  /** The sizing warning for one group of `edges` buffered edges: None at
+    * or below [[AlarmEdgeCount]], else a message naming the count.
+    */
+  def edgeAlarm(edges: Int): Option[String] =
+    if (edges <= AlarmEdgeCount) None
+    else Some(s"[graft] ComponentsAggregator: one group buffered $edges " +
+      s"edges (> $AlarmEdgeCount) — check the key-containment sizing " +
+      "(SPARK_GRAFT_LSH_BITS / fast-path gate)")
+
   case class Edge(a: Long, b: Long)
 
   class MinLabelComponents
@@ -55,10 +64,7 @@ object ComponentsAggregator {
       // still concentrates a huge edge list, surface it as a named
       // warning on the executor log BEFORE it becomes an opaque OOM, so
       // an undersized bits setting is diagnosable.
-      if (edges.size > AlarmEdgeCount)
-        System.err.println(s"[graft] ComponentsAggregator: one group " +
-          s"buffered ${edges.size} edges (> $AlarmEdgeCount) — check the " +
-          "key-containment sizing (SPARK_GRAFT_LSH_BITS / fast-path gate)")
+      edgeAlarm(edges.size).foreach(w => System.err.println(w))
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

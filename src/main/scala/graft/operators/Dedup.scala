@@ -125,8 +125,13 @@ object Dedup {
   private[graft] def fingerprints(spark: SparkSession, dir: String): DataFrame =
     fpCache(spark, dir) {
       Tables.documents(spark, dir)
-        .select(col("doc_id"), md5(col("text")).as("fp"))
+        .select(col("doc_id"), fingerprintOf(col("text")).as("fp"))
     }
+
+  /** q21's content fingerprint of a text column — also the key of the
+    * streaming exact-dedup landing (StreamingOps.dedupedIngest).
+    */
+  private[graft] def fingerprintOf(text: Column): Column = md5(text)
 
   /** Exact dedup by content hash: fingerprint, copies per group, rank of
     * this doc within its group (rank 1 = canonical survivor).

@@ -28,11 +28,17 @@ object Events {
 
   val SessionGapUs: Long = 30L * 60 * 1000 * 1000 // 30 min
 
-  /** Hourly tumbling-window counts/sums per event type (Structured
-    * Streaming runs the same `window()` aggregate — see streaming.StreamingOps).
-    */
+  /** Hourly tumbling-window counts/sums per event type (q35). */
   def hourlyByType(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
+    hourlyByType(Tables.events(spark, dir)).orderBy("hour_start", "event_type")
+
+  /** UNSORTED q35 kernel over any events frame. A stream runs it as-is
+    * once the frame carries a watermark on `ts` (StreamingSpec feeds it
+    * `withWatermark("ts", "2 hours")`), which bounds the per-(window,
+    * type) state; no streaming twin exists.
+    */
+  def hourlyByType(events: DataFrame): DataFrame =
+    events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -40,7 +46,6 @@ object Events {
       .select(
         date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour_start"),
         col("event_type"), col("n_events"), col("sum_value"))
-      .orderBy("hour_start", "event_type")
 
   /** Gap-based sessionization (30-min inactivity): lag → new-session flag →
     * running sum = session index → per-session aggregate.

@@ -113,9 +113,15 @@ object Packing {
     * sorts; token arrays themselves never move.
     */
   private[graft] def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    TextAnalysis.rawTokens(spark, dir)
-      .select(col("doc_id"),
-        coalesce(size(col("toks")), lit(0)).cast("long").as("n_toks"))
+    tokenCountsOf(TextAnalysis.rawTokens(spark, dir))
+
+  /** (doc_id, n_toks) of any (doc_id, toks) relation — the projection of
+    * [[tokenCounts]], also run per micro-batch by the streaming packing
+    * sinks.
+    */
+  private[graft] def tokenCountsOf(toksDf: DataFrame): DataFrame =
+    toksDf.select(col("doc_id"),
+      coalesce(size(col("toks")), lit(0)).cast("long").as("n_toks"))
 
   /** The window-geometry projection shared by the one-shot packing and
     * the incremental index: first/last window and span from an already-

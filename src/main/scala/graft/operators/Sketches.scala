@@ -108,10 +108,11 @@ object Sketches {
     * k references to md5(shingle) are common-subexpression-eliminated
     * inside whole-stage codegen, leaving one md5 + k cheap nibble
     * extractions per shingle. 4×24 = 96 bits of the 128 used, ranges
-    * disjoint, so positions stay pairwise independent. The Column form
-    * exists so the streaming twin (StreamingOps.bloomFlagStream) hashes
-    * lambda-bound array elements through THE SAME definition — batch and
-    * stream cannot drift apart.
+    * disjoint, so positions stay pairwise independent. A per-row gate
+    * (StreamingOps.bloomFlagMultiStream) reads the raw value instead and
+    * lets BitSetContains mask it to the filter's width: at BloomBits that
+    * mask IS this `% BloomBits`, so the union gate over a stream flags
+    * exactly what q102 flags.
     */
   private[graft] def bloomPositionOf(s: Column, i: Int): Column =
     bloomRawPositionOf(s, i) % BloomBits
@@ -161,7 +162,9 @@ object Sketches {
     * runtime bloom-join pruning ships its filter). The collect is bounded
     * by construction: ≤ BloomBits rows regardless of eval-corpus size.
     * Packing: bit p lives at hex char p >> 2 (0-based), bit p & 3 within
-    * the nibble — [[StreamingOps.bloomFlagStream]] tests the same layout.
+    * the nibble — [[hexBitWords]] decodes the same layout, so
+    * `StreamingOps.bloomFlagMultiStream(docs, Seq("eval" -> hex))` is the
+    * q102 gate over a stream.
     */
   def evalBitsHex(spark: SparkSession, dir: String): String =
     packBitsHex(bloomEvalBits(spark, dir).collect().map(_.getLong(0)))
@@ -190,7 +193,7 @@ object Sketches {
     * [[graft.plans.BitSetContains]] probes — bit p at hex char p >> 2 /
     * bit p & 3 on the wire, re-packed to word p >> 6 / bit p & 63 in
     * memory. ONE definition shared by the batch multi-benchmark gate and
-    * the streaming twins, so the packed layout cannot drift between
+    * the per-row streaming gate, so the packed layout cannot drift between
     * producers and consumers (SketchesSpec pins it as packBitsHex's exact
     * inverse). Why not a composable Column form: see BitSetContains's
     * scaladoc — the hex-substr probe cost 24.7 s warm and the
@@ -376,7 +379,7 @@ object Sketches {
     * against EVERY benchmark's bit-set in the same single train-side
     * pass, one row per (train doc, benchmark). Each benchmark's exact
     * overlap is ⊆ its flags (Bloom never false-negatives — SketchesSpec
-    * pins it per benchmark via q126), and the streaming twin
+    * pins it per benchmark via q126), and its per-row form
     * (StreamingOps.bloomFlagMultiStream) flags arriving docs against the
     * same serialized blobs bit-identically. Since r19 the filters are
     * sized per benchmark ([[sizedBloomBits]]), so a benchmark's flag
@@ -545,7 +548,7 @@ object Sketches {
   }
 
   /** The CmsDepth bucket columns of a `shingle` column — ONE definition
-    * shared by the batch grid and the streaming twin
+    * shared by the batch grid and its per-row streaming form
     * (StreamingOps.cmsCells), so the hash mapping cannot drift.
     */
   private[graft] def cmsBucketArray: Column =
@@ -563,7 +566,7 @@ object Sketches {
   private[graft] val cmsGridCache = Artifact.relation("Sketches.cmsGridCache", Artifact.Index)
 
   /** The d×w cell grid as a relation — q103's sketch state, also the
-    * batch side of the streaming twin's cell-for-cell parity test.
+    * batch side of StreamingOps.cmsCells' cell-for-cell parity test.
     * INDEX-ARTIFACT cache class (r21, VERDICT r20 item 1): precomputable
     * per-corpus sketch state exactly like the shingle-df relation it
     * derives from — a deployment builds the d×w grid once per corpus and

@@ -316,8 +316,15 @@ object TextAnalysis {
     */
   private[graft] def rawTokens(spark: SparkSession, dir: String): DataFrame =
     rawTokCache(spark, dir) {
-      withTokens(spark, dir).select("doc_id", "toks")
+      tokensOf(Tables.documents(spark, dir))
     }
+
+  /** (doc_id, toks) of any (doc_id, text) relation — the token projection
+    * of [[rawTokens]], also run per micro-batch by the streaming ingest
+    * sinks.
+    */
+  private[graft] def tokensOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextFns.tokenize(col("text")).as("toks"))
 
   private[graft] val bigramCache = Artifact.relation("TextAnalysis.bigramCache", Artifact.Index)
 
@@ -671,26 +678,36 @@ object TextAnalysis {
   /** UNSORTED Gopher-flag relation — building-block form for pipeline
     * compositions (trainCorpus); q75 sorts at its edge.
     */
-  private def gopherRaw(spark: SparkSession, dir: String): DataFrame = {
-    val stopList = TokenPipeline.StopWords
-    def flag(c: org.apache.spark.sql.Column) = when(c, 1L).otherwise(0L)
+  private def gopherRaw(spark: SparkSession, dir: String): DataFrame =
     // rawTokens, not withTokens (r21): only `toks` is read — share the
     // cached ordered-token artifact instead of re-tokenizing per call
-    rawTokens(spark, dir)
-      .select(col("doc_id"),
+    gopherFlags(rawTokens(spark, dir))
+
+  /** The five Gopher rules over a `toks` token-array column — THE one
+    * definition, used by q75 and by the streaming quality gate
+    * (StreamingOps.qualityGatedIngest). Replaces `toks` with `n_tokens`,
+    * the five 1/0 flags and `keep`; every other input column passes
+    * through. Per-row and stateless, so it runs unchanged over a stream.
+    */
+  private[graft] def gopherFlags(toksDf: DataFrame): DataFrame = {
+    val stopList = TokenPipeline.StopWords
+    def flag(c: org.apache.spark.sql.Column) = when(c, 1L).otherwise(0L)
+    val rest = toksDf.columns.filter(_ != "toks").map(col).toSeq
+    toksDf
+      .select(rest ++ Seq(
         size(col("toks")).cast("long").as("n_tokens"),
         aggregate(col("toks"), lit(0L), (acc, t) => acc + length(t)).as("sum_len"),
         size(filter(col("toks"), t => t.isin(stopList: _*))).cast("long").as("n_stop"),
         size(filter(col("toks"), t => t.rlike("[a-z]"))).cast("long").as("n_alpha"),
-        TextFns.shingleArray(col("toks"), 2).as("bg"))
-      .select(col("doc_id"), col("n_tokens"),
+        TextFns.shingleArray(col("toks"), 2).as("bg")): _*)
+      .select(rest ++ Seq(col("n_tokens"),
         flag(col("n_tokens") >= 20 && col("n_tokens") <= 100000).as("wc_ok"),
         flag(lit(3) * col("n_tokens") <= col("sum_len") &&
           col("sum_len") <= lit(10) * col("n_tokens")).as("mwl_ok"),
         flag(col("n_stop") >= 2).as("stop_ok"),
         flag(lit(5) * col("n_alpha") >= lit(4) * col("n_tokens")).as("alpha_ok"),
         flag(lit(10) * (size(col("bg")) - size(array_distinct(col("bg")))) <=
-          size(col("bg"))).as("rep_ok"))
+          size(col("bg"))).as("rep_ok")): _*)
       .withColumn("keep",
         col("wc_ok") * col("mwl_ok") * col("stop_ok") * col("alpha_ok") * col("rep_ok"))
   }
@@ -736,9 +753,14 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  /** Per-(doc, bucket) hashed-bigram counts — the feature relation the
-    * DSIR learner aggregates. Bucket = first two md5 nibbles (0..255).
+  /** The DSIR feature bucket of a bigram: the first two md5 nibbles
+    * (0..255). Shared by the feature relation below and the streaming
+    * per-row scorer (StreamingOps.dsirScore).
     */
+  private[graft] def dsirBucketOf(bigram: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    conv(substring(md5(bigram), 1, 2), 16, 10).cast("long")
+
   private[graft] val dsirCache = Artifact.relation("TextAnalysis.dsirCache", Artifact.Index)
 
   /** Per-doc hashed-bigram bucket counts (doc_id, bucket, n) — the DSIR
@@ -754,8 +776,7 @@ object TextAnalysis {
     dsirCache(spark, dir) {
       rawTokens(spark, dir)
         .select(col("doc_id"), explode(TextFns.shingleArray(col("toks"), 2)).as("b"))
-        .select(col("doc_id"),
-          expr("cast(conv(substring(md5(b), 1, 2), 16, 10) as bigint)").as("bucket"))
+        .select(col("doc_id"), dsirBucketOf(col("b")).as("bucket"))
         .groupBy("doc_id", "bucket").agg(count(lit(1)).as("n"))
     }
 
@@ -764,7 +785,8 @@ object TextAnalysis {
   /** The learned 256-row DSIR weight table (bucket → quantized
     * log-likelihood ratio) — the artifact a 100 TB deployment would
     * learn once on a sample and ship as a broadcast/literal map; the
-    * streaming scorer (StreamingOps.dsirScore) consumes it collected.
+    * per-row streaming scorer (StreamingOps.dsirScore) consumes it
+    * collected and buckets through the same dsirBucketOf.
     * Cached per (session, dir) as an INDEX ARTIFACT (the tf-idf weight
     * precedent — learned per-bucket scores a deployment persists, not a
     * detection result): its 8-job learn lineage costs ~2 s/evaluation in
@@ -1269,12 +1291,6 @@ object TextAnalysis {
   def piiRedaction(spark: SparkSession, dir: String): DataFrame =
     piiScrub(Tables.documents(spark, dir)).orderBy("doc_id")
 
-  /** The scrub projection on a free-standing (doc_id, text, source)
-    * relation — THE single definition of q110's semantics, shared by the
-    * dir-backed batch query above and the streaming scrub twin, so the
-    * two can never drift apart. Stateless (no aggregate, no window):
-    * streaming-safe as-is.
-    */
   /** The redaction itself on ANY text column — email → IP → phone, the
     * fixed order q110 and its oracle share. Free-standing so the q110
     * query (which scrubs the injected-fixture text) and Pipeline
@@ -1305,6 +1321,12 @@ object TextAnalysis {
       + size(regexp_extract_all(afterIp, lit(PhoneRe), lit(0)))).cast("long")
   }
 
+  /** The scrub projection on a free-standing (doc_id, text, source)
+    * relation — THE single definition of q110's semantics. The dir-backed
+    * query above runs it over the corpus, and a stream runs it unchanged
+    * (StreamingSpec: bit-identical over a file stream). Stateless (no
+    * aggregate, no window), so no streaming twin exists.
+    */
   private[graft] def piiScrub(docs: DataFrame): DataFrame = {
     val ptxt = piiInjected(col("doc_id"), col("text"), col("source"))
     val red = piiRedactCol(ptxt)
@@ -1320,8 +1342,7 @@ object TextAnalysis {
   }
 
   /** The injected-PII text column — free-standing (doc_id, text, source)
-    * form shared by the batch query above and the streaming scrub twin,
-    * so the two can never drift apart.
+    * form of piiScrub's fixture injection.
     */
   private[graft] def piiInjected(docId: org.apache.spark.sql.Column,
       text: org.apache.spark.sql.Column,

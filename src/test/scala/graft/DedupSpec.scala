@@ -774,4 +774,12 @@ class DedupSpec extends AnyFunSuite {
     assert(!Dedup.unionFindFits(Long.MaxValue / 2, noCount))
     assert(!Dedup.unionFindFits(Long.MaxValue, noCount))
   }
+
+  test("edgeAlarm: silent at 5,000,000 buffered edges, names the count past it") {
+    import graft.functions.ComponentsAggregator.{AlarmEdgeCount, edgeAlarm}
+    assert(AlarmEdgeCount === 5000000)
+    assert(edgeAlarm(5000000) === None)
+    val warning = edgeAlarm(5000001)
+    assert(warning.exists(_.contains("buffered 5000001 edges")), warning)
+  }
 }

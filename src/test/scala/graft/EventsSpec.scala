@@ -99,6 +99,31 @@ class EventsSpec extends AnyFunSuite {
       (1L, 1L, 1.50), (2L, 2L, 3.75), (3L, 3L, 6.75), (4L, 1L, 4.00)))
   }
 
+  test("sessions (q36): a gap of exactly SessionGapUs stays in-session, one µs more splits") {
+    val g = Events.SessionGapUs
+    val dir = java.nio.file.Files.createTempDirectory("graft_sessions").toString
+    // two users interleaved in time; ts written as nanos (whole µs)
+    Seq(
+      (1L, 0L, 1L, 1.00),
+      (2L, 1L, 2L, 10.00),
+      (3L, g, 1L, 2.00),             // exactly g after event 1: same session
+      (4L, g + 2, 2L, 20.00),        // g + 1 after event 2: splits
+      (6L, 2 * g + 1, 1L, 0.25),     // ts tie with event 5, written first;
+      (5L, 2 * g + 1, 1L, 3.00),     //   g + 1 after event 3: splits
+      (7L, 2 * g + 2, 2L, 30.00))    // exactly g after event 4: same session
+      .map { case (e, us, u, v) => (e, us * 1000L, u, v) }
+      .toDF("event_id", "ts", "user_id", "value")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val got = Events.sessions(spark, dir)
+      .as[(Long, Long, Long, Long, Long, Long, Double)].collect().toSeq
+    // (user_id, session_id, n_events, start_us, end_us, duration_us, sum_value)
+    assert(got === Seq(
+      (1L, 1L, 2L, 0L, g, g, 3.00),
+      (1L, 2L, 2L, 2 * g + 1, 2 * g + 1, 0L, 3.25),
+      (2L, 1L, 1L, 1L, 1L, 0L, 10.00),
+      (2L, 2L, 2L, g + 2, 2 * g + 2, g, 50.00)))
+  }
+
   test("valueMedian: exact middle for odd n, averaged middles for even n") {
     val dir = java.nio.file.Files.createTempDirectory("graft_median").toString
     Seq(

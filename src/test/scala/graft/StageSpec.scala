@@ -16,33 +16,6 @@ class StageSpec extends AnyFunSuite {
 
   private def cacheEntries: Int = org.apache.spark.sql.CacheProbe.entries(spark)
 
-  /** `src` without its comments; string literals are kept whole. */
-  private def stripComments(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    def at(p: String) = src.startsWith(p, i)
-    while (i < src.length) {
-      if (at("//")) { while (i < src.length && src(i) != '\n') i += 1 }
-      else if (at("/*")) {
-        var depth = 0
-        while (i < src.length && (depth > 0 || at("/*"))) {
-          if (at("/*")) { depth += 1; i += 2 }
-          else if (at("*/")) { depth -= 1; i += 2 }
-          else i += 1
-        }
-      } else if (at("\"\"\"")) {
-        val end = src.indexOf("\"\"\"", i + 3)
-        out ++= src.substring(i, end + 3); i = end + 3
-      } else if (at("\"")) {
-        var j = i + 1
-        while (src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
-        out ++= src.substring(i, j + 1); i = j + 1
-      } else if (at("'\"'")) { out ++= "'\"'"; i += 3 }
-      else { out += src(i); i += 1 }
-    }
-    out.result()
-  }
-
   test("no persist, checkpoint or unpersist call in src/main outside Stage.scala") {
     val Staging = """(?<!Stage\.)\b(localCheckpoint|persist\(|unpersist\(|StorageLevel|unpersistCheckpointRdds)""".r
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
@@ -50,7 +23,7 @@ class StageSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val hits = for {
       f <- scalaFiles(new java.io.File("src/main/scala"))
-      src = stripComments(new String(Files.readAllBytes(f.toPath), "UTF-8"))
+      src = TestSpark.stripComments(new String(Files.readAllBytes(f.toPath), "UTF-8"))
       (line, n) <- src.linesIterator.zipWithIndex
       m <- Staging.findFirstIn(line)
     } yield (f.getName, s"${f.getPath}:${n + 1}: $m")

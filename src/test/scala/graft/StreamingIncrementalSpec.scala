@@ -900,7 +900,7 @@ class StreamingIncrementalSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(trainDir)
     stageTrain()
     // phase 1: the gate runs with the two-benchmark blobs
-    val got1 = StreamingOps.runToMemory(spark,
+    val got1 = TestSpark.runToMemory(
       StreamingOps.bloomFlagMultiStream(
         spark.readStream.schema(docSchema).parquet(trainDir), bits1),
       "mbloom_suite1", mode = "append")
@@ -934,7 +934,7 @@ class StreamingIncrementalSpec extends AnyFunSuite {
       "existing benchmarks' blobs must be byte-identical across the change")
     // the restarted gate re-screens the train corpus with the new blobs
     stageTrain() // same rows (benchC is eval-only), restaged for the restart
-    val got2 = StreamingOps.runToMemory(spark,
+    val got2 = TestSpark.runToMemory(
       StreamingOps.bloomFlagMultiStream(
         spark.readStream.schema(docSchema).parquet(trainDir), bits2),
       "mbloom_suite2", mode = "append")

@@ -1,18 +1,44 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Events
+import graft.TestSpark.runToMemory
+import graft.operators.{Events, Sketches, TextAnalysis}
 import graft.streaming.StreamingOps
 
-/** The streaming twins must agree with the batch operators when fed the
-  * same (finite) input — parquet-backed streams drained synchronously.
+/** Streams agree with the batch operators when fed the same (finite)
+  * input — parquet-backed streams drained synchronously. Where a batch
+  * kernel runs unchanged over a stream, the test runs THAT kernel over the
+  * stream; the StreamingOps per-row forms are checked against their batch
+  * queries the same way.
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
   private val sf = TestSpark.Sf
+
+  /** The corpus's documents (or only its train split) staged in a temp
+    * dir and read back as a file stream.
+    */
+  private def documentsStream(trainOnly: Boolean = false): DataFrame = {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val staged =
+      if (!trainOnly) docs
+      else docs.join(TextAnalysis.hashSplit(spark, sf)
+        .filter($"split" === "train").select("doc_id"), Seq("doc_id"), "left_semi")
+    val dir = java.nio.file.Files.createTempDirectory("docs_stream")
+      .resolve("docs").toString
+    staged.write.parquet(dir)
+    spark.readStream.schema(docs.schema).parquet(dir)
+  }
+
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).count() === 0)
+    assert(want.exceptAll(got).count() === 0)
+  }
 
   test("streaming hourly counts equal batch hourly counts") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -36,141 +62,75 @@ class StreamingSpec extends AnyFunSuite {
       case TimestampNTZType => stream0.withColumn("ts", $"ts".cast(TimestampType))
       case _ => stream0
     }
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.hourlyByType(stream), "hourly_test")
-      .select("hour_start", "event_type", "n_events")
-    val want = Events.hourlyByType(spark, sf)
-      .select("hour_start", "event_type", "n_events")
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    // q35's own kernel over the watermarked stream: all four columns,
+    // sum_value included
+    val got = runToMemory(
+      Events.hourlyByType(stream.withWatermark("ts", "2 hours")), "hourly_test")
+    assertSameRows(got, Events.hourlyByType(spark, sf))
   }
 
   test("streaming DSIR scorer is bit-identical to batch q82 on the same corpus") {
-    import org.apache.spark.sql.types._
     // learn the weight table in batch, ship it as a literal map — the
     // deployment shape the operator documents
-    val weights = graft.operators.TextAnalysis.dsirWeightTable(spark, sf)
+    val weights = TextAnalysis.dsirWeightTable(spark, sf)
       .as[(Long, Double)].collect().toMap
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir.toString)
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.dsirScore(stream, weights), "dsir_test", mode = "append")
-    val want = graft.operators.TextAnalysis.dsirWeights(spark, sf)
-    // EXACT equality, not tolerance: same quantized weights, same
-    // bucket-ascending fold, same double ops on both paths
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    val got = runToMemory(StreamingOps.dsirScore(documentsStream(), weights),
+      "dsir_test", mode = "append")
+    // EXACT equality, not tolerance: same quantized weights, same integer
+    // sum, same final division on both paths
+    assertSameRows(got, TextAnalysis.dsirWeights(spark, sf))
   }
 
   test("streaming PII scrub is bit-identical to batch q110 on the same corpus") {
-    import org.apache.spark.sql.types._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val dir = java.nio.file.Files.createTempDirectory("docs_pii_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir.toString)
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.piiScrubStream(stream), "pii_test", mode = "append")
-    val want = graft.operators.TextAnalysis.piiRedaction(spark, sf)
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    val got = runToMemory(TextAnalysis.piiScrub(documentsStream()), "pii_test",
+      mode = "append")
+    assertSameRows(got, TextAnalysis.piiRedaction(spark, sf))
   }
 
   test("streaming CMS grid equals the batch q103 cells, cell for cell") {
-    import org.apache.spark.sql.types._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val dir = java.nio.file.Files.createTempDirectory("cms_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/documents.parquet"),
-      dir.resolve("documents.parquet"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir.toString)
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.cmsCells(stream), "cms_test", mode = "complete")
-    val want = graft.operators.Sketches.cmsCells(spark, sf)
+    val got = runToMemory(StreamingOps.cmsCells(documentsStream()), "cms_test",
+      mode = "complete")
     // EXACT cell-for-cell equality: same shingle set (array_distinct per
     // doc == the batch relation's distinct (doc, shingle)), same shared
     // bucket hashes, integer counts
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    assertSameRows(got, Sketches.cmsCells(spark, sf))
   }
 
   test("streaming bloom flags equal batch q102 doc-for-doc on the train split") {
-    import org.apache.spark.sql.types._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    // stage exactly the batch operator's universe: the train split (the
-    // stream twin flags whatever arrives; q102 is scoped to train docs)
-    val trainIds = graft.operators.TextAnalysis.hashSplit(spark, sf)
-      .filter($"split" === "train").select("doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("bloom_stream")
-    spark.read.parquet(s"$sf/documents.parquet")
-      .join(trainIds, Seq("doc_id"), "left_semi")
-      .write.parquet(dir.resolve("train").toString)
-    // the deployment sequence: serialize the filter once in batch...
-    val bits = graft.operators.Sketches.evalBitsHex(spark, sf)
-    // ...then flag the arriving stream per-row, stateless append mode
-    val stream = spark.readStream.schema(docSchema)
-      .parquet(dir.resolve("train").toString)
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.bloomFlagStream(stream, bits), "bloom_flag_test",
-      mode = "append")
-    val want = graft.operators.Sketches.bloomDecontamination(spark, sf)
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    // the deployment sequence: serialize the filter once in batch, then
+    // flag the arriving stream per-row, stateless append mode. Staged is
+    // exactly the batch operator's universe: the train split. The one-
+    // filter gate masks the raw positions to the blob's 2^18 bits, which
+    // is q102's `% BloomBits`
+    val bits = Sketches.evalBitsHex(spark, sf)
+    val got = runToMemory(
+      StreamingOps.bloomFlagMultiStream(documentsStream(trainOnly = true),
+        Seq("eval" -> bits)).drop("benchmark"),
+      "bloom_flag_test", mode = "append")
+    assertSameRows(got, Sketches.bloomDecontamination(spark, sf))
   }
 
   test("multi-benchmark streaming bloom flags equal batch q125 row-for-row") {
-    import org.apache.spark.sql.types._
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val trainIds = graft.operators.TextAnalysis.hashSplit(spark, sf)
-      .filter($"split" === "train").select("doc_id")
-    val dir = java.nio.file.Files.createTempDirectory("mbloom_stream")
-    spark.read.parquet(s"$sf/documents.parquet")
-      .join(trainIds, Seq("doc_id"), "left_semi")
-      .write.parquet(dir.resolve("train").toString)
     // serialize every benchmark's filter once in batch, ship as literals
-    val benchBits = graft.operators.Sketches.benchBitsHex(spark, sf)
+    val benchBits = Sketches.benchBitsHex(spark, sf)
     assert(benchBits.nonEmpty)
-    val stream = spark.readStream.schema(docSchema)
-      .parquet(dir.resolve("train").toString)
-    val got = StreamingOps.runToMemory(spark,
-      StreamingOps.bloomFlagMultiStream(stream, benchBits), "mbloom_test",
-      mode = "append")
-    val want = graft.operators.Sketches.multiBenchDecontamination(spark, sf)
-    assert(got.count() === want.count())
-    assert(got.exceptAll(want).count() === 0)
-    assert(want.exceptAll(got).count() === 0)
+    val got = runToMemory(
+      StreamingOps.bloomFlagMultiStream(documentsStream(trainOnly = true), benchBits),
+      "mbloom_test", mode = "append")
+    assertSameRows(got, Sketches.multiBenchDecontamination(spark, sf))
   }
 
-  test("gopherKeep admits exactly the q75 keep-set (batch-checked on the corpus)") {
-    val kept = StreamingOps.gopherKeep(
-      Tables.documents(spark, sf).select("doc_id", "text"))
-      .select("doc_id").as[Long].collect().toSet
-    val want = graft.operators.TextAnalysis.gopherRules(spark, sf)
+  test("streamed Gopher gate admits exactly the q75 keep-set") {
+    // q75's rule kernel over a file stream, as qualityGatedIngest runs it
+    val kept = runToMemory(
+      TextAnalysis.gopherFlags(documentsStream().select($"doc_id",
+        graft.functions.TextFns.tokenize($"text").as("toks")))
+        .filter($"keep" === 1L).select("doc_id"),
+      "gopher_test", mode = "append")
+      .as[Long].collect().toSet
+    val want = TextAnalysis.gopherRules(spark, sf)
       .filter(col("keep") === 1L).select("doc_id").as[Long].collect().toSet
+    assert(kept.nonEmpty)
     assert(kept === want)
   }
 
@@ -185,7 +145,7 @@ class StreamingSpec extends AnyFunSuite {
     val deduped = spark.readStream.schema(schema).parquet(dir.toString + "/in")
       .withColumn("fp", md5($"text"))
       .dropDuplicates("fp")
-    val got = StreamingOps.runToMemory(spark, deduped, "dedup_test", mode = "append")
+    val got = runToMemory(deduped, "dedup_test", mode = "append")
     assert(got.count() === docs.select(md5($"text")).distinct().count())
   }
 
@@ -200,15 +160,20 @@ class StreamingSpec extends AnyFunSuite {
     assert(normed.exceptAll(viaHof).count() === 0)
   }
 
-  test("stateful sessionize (batch mode) matches window-function sessions") {
-    val evs = Tables.events(spark, sf)
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"value")
-      .as[StreamingOps.Ev]
-    val got = StreamingOps.sessionize(evs, Events.SessionGapUs)
-    val want = Events.sessions(spark, sf)
-    assert(got.count() === want.count())
-    val g = got.select($"user_id", $"session_id", $"n_events", $"start_us", $"end_us")
-    val w = want.select($"user_id", $"session_id", $"n_events", $"start_us", $"end_us")
-    assert(g.exceptAll(w).count() === 0)
+  test("StreamingOps defines no hash or regex of its own") {
+    // every hash, bucket and regex a stream evaluates comes from the
+    // batch objects; comments are stripped, string literals kept (an
+    // expr("md5(...)") string counts)
+    val f = new java.io.File("src/main/scala/graft/streaming/StreamingOps.scala")
+    assert(f.isFile, s"scan found no file at ${f.getPath}")
+    val src = TestSpark.stripComments(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    // the stripper must have kept the code, or the scan has gone blind
+    assert(src.contains("object StreamingOps"))
+    val hits = src.linesIterator.zipWithIndex.collect {
+      case (line, n) if Seq("md5(", "conv(", "regexp_").exists(line.contains) =>
+        s"${f.getPath}:${n + 1}: ${line.trim}"
+    }.toList
+    assert(hits === Nil)
   }
 }
