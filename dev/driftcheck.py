@@ -8,7 +8,8 @@ Usage: python3 dev/driftcheck.py BENCH_r13.json [--ratio 2.0]
 
 Reading rules (BASELINE-notes, protocol v2): driver-warm / floor <= ~2x is
 host contention; a query consistently above the ratio is a real regression
-to root-cause with QProbe. When the bench carries calibration probes
+to root-cause with the 3-pass probe (`sbt -batch "runMain graft.Passes
+<query...>"`). When the bench carries calibration probes
 ("calib_cs", round 13+: a fixed synthetic workload timed before the first
 pass and after every pass), the host multiplier is MEASURED — each ratio is
 also shown normalized by calib instead of inferred circularly from the
@@ -239,7 +240,7 @@ def main():
         above = (rn if rn is not None else r) > ratio or w < 0
         # util vs the committed quiet range (r17): proportionally-low util
         # = fewer cycles, not more work — adjudicated as starvation by
-        # measurement. WORK/AMBIGUOUS labels stay flagged for QProbe.
+        # measurement. WORK/AMBIGUOUS labels stay flagged for the probe.
         uverdict = util_verdict(utils.get(q), quiet.get(q)) if above else None
         if above and w >= 0 and uverdict == "STARVED":
             starved.append((q, r, utils[q], quiet[q][0]))
@@ -344,7 +345,8 @@ def main():
     if flagged:
         basis = "calib-normalized" if cmult else "raw"
         print(f"{len(flagged)} quer{'y' if len(flagged) == 1 else 'ies'} above "
-              f"{ratio}x floor ({basis}) — QProbe what remains: "
+              f"{ratio}x floor ({basis}) — probe what remains with "
+              "`runMain graft.Passes <query...>`: "
               + ", ".join("q" + q for q, *_ in flagged))
     else:
         print(f"no query above {ratio}x its floor — no drift to adjudicate")

@@ -1,10 +1,13 @@
 package graft
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.start(cpus)
+    implicit val ec: ExecutionContext = ExecutionContext.global
     // HOST-SPEED CALIBRATION PROBE (round 13): a fixed synthetic workload —
     // pure CPU over all cores, no I/O, no caches, no shuffle — timed before
     // the first pass and after every pass, emitted as "calib_cs" in the
@@ -54,9 +57,6 @@ object Bench {
     // undifferentiated total (VERDICT r12 item 3)
     val waveDurations = scala.collection.mutable.ArrayBuffer.empty[Double]
     def wave(steps: Seq[() => Long]): Unit = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
       val t0 = System.nanoTime()
       // the Await itself must honor the same invariant as warm(): a HUNG
       // warmup step (timeout) may not abort the bench before the JSON
@@ -71,15 +71,14 @@ object Bench {
       ()
     }
     // The sweep (round 15) is GENERIC: it executes EVERY queries entry
-    // once through the exact bench protocol (noop sink, timed passes'
-    // name order), replacing rounds 10–14's per-plan pre-fill waves.
-    // Those converged locally every round and then the driver host paid
-    // first-touch in DIFFERENT slots each time (r13: 7 entries; r14: 14
-    // entries in NEW slots, ~36 s — VERDICT r14 item 2: "the per-plan
-    // prefill whack-a-mole doesn't converge on a contended host"). The
-    // sweep compiles every plan the timed passes will run, by
-    // construction — there is no slot it can miss. Emitted as the last
-    // "warmup_waves_cs" entry; clearResultMemos below evicts
+    // once through `Passes.step` (noop sink), replacing rounds 10–14's
+    // per-plan pre-fill waves. Those converged locally every round and
+    // then the driver host paid first-touch in DIFFERENT slots each time
+    // (r13: 7 entries; r14: 14 entries in NEW slots, ~36 s — VERDICT r14
+    // item 2: "the per-plan prefill whack-a-mole doesn't converge on a
+    // contended host"). The sweep compiles every plan the timed passes
+    // will run, by construction — there is no slot it can miss. Emitted
+    // as the last "warmup_waves_cs" entry; clearResultMemos below evicts
     // every detection result the sweep computed, so the timed cold pass
     // still re-pays each query's full per-query work, minus only
     // JIT/codegen/first-touch — which is exactly what warmup_sec is for.
@@ -107,18 +106,12 @@ object Bench {
     // Residual cold-pass exposure — AQE picking different join physicals
     // at the tiny scale and codegen'ing a variant — is bounded and
     // visible: cold_sparse plus the index_fills_post_warmup count below.
-    // Falls back to the target dir when the tiny dir is absent.
+    // Falls back to the target dir when the tiny dir is absent: no RESULT
+    // memo the sweep fills survives the eviction below, and INDEX fills
+    // are single-flight, so the sweep overlaps the fill in either case.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
-    // canonical-path compare: a trailing-slash or symlink spelling of the
-    // target dir must select the SEQUENTIAL same-dir arm, whose name order
-    // lands each shared-memo fill on the consumer the timed passes charge
-    def canon(p: String) =
-      try new java.io.File(p).getCanonicalPath catch { case _: Throwable => p }
-    val sweepDir =
-      if (new java.io.File(warmDir).isDirectory && canon(warmDir) != canon(sfDir))
-        warmDir
-      else sfDir
+    val sweepDir = if (new java.io.File(warmDir).isDirectory) warmDir else sfDir
     // START-OF-RUN PROBE (r20): one discarded calibrate() pays the probe's
     // JIT, the second is the measurement (~1 s inside warmup_sec). Emitted
     // as warmup_probe_cs so it and calib[0] bracket the warmup window for
@@ -134,63 +127,46 @@ object Bench {
     val sweepWidth = 8
     val sweepStats = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     @volatile var sweepSecs = 0.0
-    def runSweep(): Unit = {
+    // Round 18 (VERDICT r17 item 5): the sweep OVERLAPS the INDEX fill
+    // instead of following it — every graft cache keys on (session, dir),
+    // so the sweep's sf0.001 keys (and its /tmp index paths, which carry
+    // the dir hash) are disjoint from the target dir's. Warmup wall
+    // becomes max(fill, sweep) + calib, not their sum (r17: 87 s raw =
+    // ~20 s waves + ~66 s sweep; overlapped ≈ the sweep leg alone).
+    val sweep = Future {
       val w3 = System.nanoTime()
       val sweepDeadline = w3 + 30L * 60 * 1000 * 1000 * 1000
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration._
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      // the sweep itself: a WORK-STEALING pool of 8 workers over the
-      // alphabetical query list (r19, verdict r18 item 6) — the r18 form
-      // ran grouped(8) barriers, and the handful of multi-second steps
-      // (q115/q116's stored-index builds at the tiny dir) each stalled
-      // their whole group: measured 59 s wall for ~16 s of critical path.
-      // A queue keeps every worker busy until the list drains; a hung
-      // step now blocks ONE worker (the deadline check stops the rest of
-      // the queue, and the outer 35-min Await still guards a wedged
-      // runtime before the JSON line). Sequential when sweeping the
-      // target dir (fallback): one worker preserves the alphabetical
-      // shared-memo landing the timed passes charge.
-      val sweepPar = if (sweepDir != sfDir) sweepWidth else 1
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[
-        (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]()
-      // longest-steps-first in the PARALLEL arm (r19): the stored-index /
-      // artifact builders are the sweep's multi-second steps even at the
-      // tiny dir (they wipe + rebuild on-disk state by design — measured
-      // top-8 every round: q112/q114/q115/q116/q121/q124 + the ANN and
-      // BPE rungs); enqueued first, the pool never ends on one straggler
-      // (LPT: makespan -> max(sum/8, longest step)). Ordering is FREE
-      // here — memo landing only matters in the sequential same-dir
-      // fallback, which keeps pure alphabetical order via sweepPar=1 and
-      // an unsorted-by-weight queue.
-      Bench.sweepOrder(sweepPar).foreach(queue.add)
-      val workers = (1 to sweepPar).map { _ =>
+      // a WORK-STEALING pool of 8 workers over the query list (r19,
+      // verdict r18 item 6) — the r18 form ran grouped(8) barriers, and
+      // the handful of multi-second steps (q115/q116's stored-index
+      // builds at the tiny dir) each stalled their whole group: measured
+      // 59 s wall for ~16 s of critical path. A queue keeps every worker
+      // busy until the list drains; a hung step now blocks ONE worker
+      // (the deadline check stops the rest of the queue, and the outer
+      // 35-min Await still guards a wedged runtime before the JSON line).
+      val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      Bench.sweepOrder.foreach(queue.add)
+      val workers = (1 to sweepWidth).map { _ =>
         Future {
-          var step = queue.poll()
-          while (step != null) {
+          var name = queue.poll()
+          while (name != null) {
             if (System.nanoTime() >= sweepDeadline) {
               // blown deadline: skip (and count) — the timed passes will
               // surface whatever the sweep left unfilled, and a nonzero
               // warmup_failures marks the round as warmup-degraded
               warmupFailed.incrementAndGet()
-              System.err.println(
-                s"[bench] warmup sweep skipped ${step._1}: deadline")
+              System.err.println(s"[bench] warmup sweep skipped $name: deadline")
             } else {
-              val (name, fn) = step
-              val t0 = System.nanoTime()
-              warm {
-                fn(spark, sweepDir).write.mode("overwrite").format("noop")
-                  .save(); 0L
-              }
-              val secs = (System.nanoTime() - t0) / 1e9
-              sweepStats.synchronized { sweepStats += (name -> secs) }
+              val t = Passes.step(spark, sweepDir, name, "bench warmup")
+              if (t.secs < 0) warmupFailed.incrementAndGet()
+              sweepStats.synchronized { sweepStats += (name -> t.secs) }
             }
-            step = queue.poll()
+            name = queue.poll()
           }
         }
       }
       // bound the workers to the sweep deadline plus a grace period for
-      // in-flight steps, so the whole runSweep worst case stays under the
+      // in-flight steps, so the whole sweep's worst case stays under the
       // outer 35-min wedge guard
       val workerBudget =
         ((sweepDeadline - System.nanoTime()).max(0L).nanos + 3.minutes)
@@ -204,33 +180,14 @@ object Bench {
       }
       sweepSecs = (System.nanoTime() - w3) / 1e9
     }
-    // Round 18 (VERDICT r17 item 5): the tiny-dir sweep OVERLAPS the INDEX
-    // fill instead of following it — every graft cache keys on (session,
-    // dir), so the sweep's sf0.001 keys (and its /tmp index paths, which
-    // carry the dir hash) are disjoint from the target dir's. Warmup wall
-    // becomes max(fill, sweep) + calib, not their sum (r17: 87 s raw =
-    // ~20 s waves + ~66 s sweep; overlapped ≈ the sweep leg alone). The
-    // same-dir fallback arm runs after the fill, sequentially.
-    val sweepFuture: Option[scala.concurrent.Future[Unit]] =
-      if (sweepDir != sfDir) {
-        import scala.concurrent.{ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Some(Future(runSweep()))
-      } else None
     wave(Bench.indexFills(spark, sfDir))
-    sweepFuture match {
-      case Some(f) =>
-        // the sweep bounds itself (workers bounded by the 30-min deadline
-        // + 3-min grace); this outer margin only guards a wedged runtime,
-        // honoring the same may-not-abort-before-the-JSON-line invariant
-        import scala.concurrent.Await
-        import scala.concurrent.duration._
-        try Await.result(f, 35.minutes)
-        catch { case e: java.util.concurrent.TimeoutException =>
-          warmupFailed.incrementAndGet()
-          System.err.println(s"[bench] overlapped sweep wedged: ${e.getMessage}")
-        }
-      case None => runSweep()
+    // the sweep bounds itself (workers bounded by the 30-min deadline
+    // + 3-min grace); this outer margin only guards a wedged runtime,
+    // honoring the same may-not-abort-before-the-JSON-line invariant
+    try Await.result(sweep, 35.minutes)
+    catch { case e: java.util.concurrent.TimeoutException =>
+      warmupFailed.incrementAndGet()
+      System.err.println(s"[bench] overlapped sweep wedged: ${e.getMessage}")
     }
     // the sweep's own wall stays the last warmup_waves_cs entry — under the
     // overlap the entries do not sum to warmup_sec (they attribute, the
@@ -260,78 +217,30 @@ object Bench {
     // as "index_fills_post_warmup" (0 = Bench.indexFills is complete);
     // names go to stderr for the adjudication trail.
     val idxKeys0 = Caches.indexKeys(spark, sfDir)
-    // deterministic name order; a failed query reports -1 (not its wall
-    // time) so breakage can never masquerade as a speedup; failure count is
-    // surfaced in the JSON.
-    // PROTOCOL v2 (round 12): each query materializes EVERY output column
-    // through the noop sink instead of count(). A count() terminal lets
-    // Catalyst prune the final projection — and sometimes the whole join
-    // tree — so projection-heavy queries were priced at a fraction of
-    // their real cost (q82 measured 0.3 s counted vs ~2.5 s materialized;
-    // q102 0.24 vs 2.47; q79 0.16 vs 1.81 — the round-12 audit notes).
-    // The noop sink consumes full rows with no I/O and no type
-    // restrictions, pricing the query a consumer actually pays for. The
-    // declared denominator and the driver's measurement both run this
-    // same protocol, so the gate comparison stays apples-to-apples.
-    // Returns (per-query seconds, per-query self-utilization %). The
-    // jiffy samples (graft.HostStat) wrap the SAME window the timer
-    // wraps, so each util entry measures exactly that timed slot.
-    def onePass(): (Seq[(String, Double)], Seq[(String, Int)]) = {
-      val rs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val j0 = HostStat.sample()
-        val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          true
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
-        val j1 = HostStat.sample()
-        (name, if (ok) secs else -1.0, HostStat.selfUtilPct(j0, j1))
-      }
-      (rs.map(r => r._1 -> r._2), rs.map(r => r._1 -> r._3))
-    }
     // STEADY-STATE protocol: run the whole suite `passes` times in ONE
-    // session and report the LAST pass as the headline numbers. A single
-    // cold pass conflates per-query work with JIT/codegen compilation and
+    // session (`Passes.pass`, deterministic name order, noop sink) and
+    // report the LAST pass as the headline numbers. A single cold pass
+    // conflates per-query work with JIT/codegen compilation and
     // first-touch cache fills, which made untouched queries drift up to
     // ~3× between rounds; the warm pass is reproducible run-to-run. The
-    // cold pass is kept in "queries_cold" so the warm-vs-cold gap stays
-    // observable.
+    // cold pass is kept in "bench_cold_sparse_ds" so the warm-vs-cold gap
+    // stays observable. The declared denominator and the driver's
+    // measurement both run this same protocol, so the gate comparison
+    // stays apples-to-apples.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     // Locale-pinned so the decimal separator is always '.'
     def s3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // PASS PROLOGUE (round 13): one untimed sacrificial noop write before
-    // each pass's timed loop, so session-wide pass-start work — GC after
-    // the memo eviction above, the first noop commit, post-eviction
-    // planner state — stops landing in whatever query sorts first.
-    // BENCH_r12 charged q01 (a 6-row hash aggregate, floor 0.79 s) 14.7 s
-    // in its first slot (VERDICT item 2: the round-1 "q01 absorbed ~7 s"
-    // failure mode reappearing INSIDE the timed passes). Deliberately
-    // memo-free (a plain scan + tiny agg, no graft caches): real per-query
-    // detection work must stay in the timed slots.
-    def prologue(): Unit =
-      try Tables.load(spark, sfDir, "nation").groupBy("n_regionkey").count()
-        .write.mode("overwrite").format("noop").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] prologue failed: ${e.getMessage}") }
+    val names = SparkEntry.queries.keys.toSeq.sorted
     calibs += calibrate() // pre-pass-1 host-speed sample
-    val all = (1 to passes).map { i =>
-      // later passes re-do real per-query work (cluster labels are a
-      // memoized RESULT, not an index) but keep index-like caches warm
-      if (i > 1) Caches.clearResultMemos(spark)
-      prologue()
-      val r = onePass()
+    val all = (1 to passes).map { _ =>
+      val r = Passes.pass(spark, sfDir, names, "bench")
       calibs += calibrate() // post-pass-i host-speed sample
       r
     }
-    val cold = all.head._1
-    val results = all.last._1
-    val warmUtil = all.last._2
+    val cold = all.head.map(t => t.name -> t.secs)
+    val results = all.last.map(t => t.name -> t.secs)
+    val warmUtil = all.last.map(t => t.name -> t.utilPct)
     val cachedFinal = storageMB
     val idxFills = Caches.indexKeys(spark, sfDir).diff(idxKeys0)
     if (idxFills.nonEmpty) System.err.println(
@@ -484,22 +393,15 @@ object Bench {
         "region", "documents", "embeddings").map(t => () => Tables.load(spark, dir, t).count())
   }
 
-  /** The sweep's execution order: longest-steps-first in the parallel
-    * arm (r19 LPT — the stored-index / artifact builders are the sweep's
-    * multi-second steps even at the tiny dir, enqueued first so the pool
-    * never ends on one straggler; makespan → max(sum/W, longest step)),
-    * pure alphabetical in the sequential same-dir fallback (ordering IS
-    * the shared-memo landing protection there).
+  /** The sweep's execution order: longest steps first (r19 LPT — the
+    * stored-index / artifact builders are the sweep's multi-second steps
+    * even at the tiny dir, enqueued first so the pool never ends on one
+    * straggler; makespan → max(sum/W, longest step)), then name order.
     */
-  private[graft] def sweepOrder(par: Int): Seq[
-      (String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = {
+  private[graft] def sweepOrder: Seq[String] = {
     val heavyFirst = Set("q112", "q114", "q115", "q116", "q121", "q124",
       "q105", "q118", "q125", "q126", "q128", "q73", "q79", "q81", "q83",
       "q84")
-    val order = SparkEntry.queries.toSeq.sortBy(_._1)
-    if (par > 1)
-      order.sortBy { case (n, _) =>
-        (!heavyFirst.contains(n.split("_").head), n) }
-    else order
+    SparkEntry.queries.keys.toSeq.sortBy(n => (!heavyFirst.contains(n.split("_").head), n))
   }
 }

@@ -10,14 +10,171 @@ import org.apache.spark.sql.functions._
   * joins, Jaccard verification, and label propagation are stressed at
   * their skew point (big buckets), not just at 10× rows.
   *
-  * Usage: runMain graft.ScaleSmoke [outDir] [copies]
+  * Usage: runMain graft.ScaleSmoke [outDir] [copies] [leg...]
   */
 object ScaleSmoke {
+  /** The timed legs: the heaviest queries, each counted against
+    * `expectRows` where replication makes the row count derivable.
+    */
+  private val Heavy = Seq("q52_dup_clusters", "q22_minhash_signatures",
+    "q26_ngram_jaccard", "q25_simhash_groups", "q36_sessions",
+    "q23_minhash_neardups", "q27_embedding_neardups", "q53_simhash_hamming",
+    "q57_simhash64_hamming", "q54_dedup_survivors",
+    "q58_doc_repetition", "q59_split_contamination",
+    // round 5: cross-corpus near-dup (the 1e6 id offset preserves parity,
+    // so each mixed-parity near-dup pair collides 10×10 ways across the
+    // split; same-parity verbatim clusters stay on one side), centroid
+    // outliers (~5k-value sorted folds per (label,pos)), vocab growth
+    "q62_cross_corpus", "q64_label_outliers", "q66_vocab_growth",
+    "q70_collocations",
+    // round 8: shard packing (per-source prefix-sum windows over 10×
+    // rows), epoch mix (explode over the 10× doc set), BPE merge loop
+    // (3 full-corpus window passes), SemDeDup (components over 10×
+    // embedding edges — verbatim copies make every cluster 10× wider)
+    "q71_pack_shards", "q72_epoch_mix", "q73_bpe_merges",
+    "q74_semdedup_survivors",
+    // round 8b: duplicated-span coverage (per-shingle df over the 10×
+    // inverted index — verbatim copies push every shingle's df to ≥10),
+    // minhash calibration (band-collision candidates × signature join
+    // at 10× bucket width), quantized ANN (8 queries × 10× corpus scan)
+    "q76_dup_span_coverage", "q78_minhash_calibration",
+    "q77_knn_quantized",
+    // round 8c: the end-to-end corpus verdict (survivors + gopher +
+    // train→eval contamination, all over the 10× duplication skew),
+    // DSIR weights (bigram-bucket aggregates over the 10× stream),
+    // one Lloyd step (10× assignment through the min_by partial agg),
+    // token PageRank (two join+agg rounds over the 10× edge counts)
+    "q81_train_corpus", "q82_dsir_weights", "q83_kmeans_step",
+    "q84_token_pagerank",
+    // round 8d: the per-source report (aggregate over the 10× verdict),
+    // boilerplate prefixes (10× corpus pass + grouped window — verbatim
+    // copies drive every prefix's count to ≥10), dim stats (64 sorted
+    // folds over 10× vectors), length quantiles (per-source ranking
+    // window over 10× docs)
+    "q86_corpus_report", "q87_boilerplate_prefixes", "q88_dim_stats",
+    "q89_length_quantiles",
+    // round 8e: positional span runs over the 10× verified-pair set —
+    // the worst-case quadratic the verbatim duplication can build
+    "q90_shared_spans",
+    // round 8f: first-seen attribution (vocab-sized min-aggregate under
+    // 10× duplication), per-doc entropy folds, and the source matrix
+    // over the 10× pair population
+    "q91_doc_novelty", "q92_token_entropy", "q93_source_dup_matrix",
+    // byte-grain explode over the 10× corpus — the widest row blow-up
+    // in the suite (one row per payload byte)
+    "q94_payload_energy",
+    // triangle enumeration over the 10× pair population (the dense-clique
+    // worst case verbatim replication builds), and per-user gap medians
+    // over 10× users
+    "q95_dup_graph_stats", "q96_interarrival_median",
+    // round 8g: prototype selection (10× assignment through the bounded
+    // min-k partial agg) and the kNN vote (8 queries × 10× corpus scan)
+    "q97_cluster_sample", "q98_knn_classify",
+    // corpus-LM cross-entropy: vocab join + two per-doc folds over 10×
+    "q99_cross_entropy",
+    // round 9: conversion-latency cohort medians — one user-keyed window
+    // pass + a per-(day) percentile over 10× users
+    "q100_time_to_convert",
+    // round 12: sketch + PQ rungs. Bloom decontamination streams the
+    // replicated train side against the eval bit-set broadcast (the
+    // bit-set is replication-INVARIANT — verbatim copies add no new
+    // shingles, so the broadcast side stays byte-identical while the
+    // probed side grows); CMS cells absorb 10× df mass into the same
+    // 4×8192 grid; HLL registers must come out BIT-IDENTICAL to 1×
+    // (register = max over distinct hashes — replication adds none);
+    // PQ encodes 10× vectors through the broadcast codebook join
+    "q102_bloom_decontamination", "q103_cms_heavy_hitters",
+    "q104_hll_registers", "q105_knn_pq",
+    // round 12b: chunking rungs. q106 is pure map-side, so rows scale
+    // exactly linearly (chunk count is a function of each doc's text);
+    // q107 is the inverse stress — verbatim replication makes EVERY
+    // distinct chunk a duplicate group, so the report saturates at the
+    // base corpus's distinct-chunk-hash count and the aggregate eats
+    // copies× occurrences into a fixed-size output
+    "q106_doc_chunks", "q107_chunk_dedup",
+    // round 12c: histogram quantiles (the ≤256-cell-per-source grid
+    // absorbs copies× docs into the same fixed report) and the DSIR
+    // Gumbel draw (TakeOrdered over copies× keyed docs, 200 rows out)
+    "q108_histogram_quantiles", "q109_dsir_select",
+    // round 12d (this session's operators). q110 is pure map-side regex —
+    // linear by construction. q111 is the purge's worst case: verbatim
+    // replication makes EVERY window of copies 2..N a duplicate of copy
+    // 1's, so the drop lists cover almost the whole corpus (the
+    // drop-nearly-everything regime) while n_kept saturates at the base
+    // distinct-window count. q112 rides the same widened propagation as
+    // q52, then argmaxes over clusters that are copies× wider — and
+    // every former singleton becomes a cluster of its own copies
+    "q110_pii_redaction", "q111_chunk_purge", "q112_cluster_keepers",
+    // q113 under replication: the 1e6 id offset is even, so parity is
+    // preserved — the dump side is 2,500 odd docs × copies, every copy
+    // of an odd doc a within-dump dup family, every even-side window a
+    // corpus kill; kept saturates at the base dump's corpus-new set
+    "q113_cross_corpus_purge",
+    // round 14: recall calibration re-runs all four kNN rungs over the
+    // copies× vector base (the query set stays the 8 original vec_ids,
+    // so the output grain — 3 methods × 8 queries + 3 means — is
+    // replication-invariant while every rung's scan side grows)
+    "q115_ann_recall",
+    // round 15: the operating-point sweep scores all 15 (bits, radius)
+    // configs over the copies× scored-pair relation — same fixed grid
+    // grain at any replication; the auto-pick ranks that table per
+    // recall target (4 fixed rows)
+    "q117_ann_sweep", "q118_ann_autopick",
+    // round 16: the FP audit replays q102's replicated train side plus
+    // the exact-overlap broadcast semi-join; like q102 its eval-derived
+    // broadcast sides are replication-invariant while the probed side
+    // grows, and its row count tracks q102's exactly
+    "q119_bloom_fp_audit",
+    // round 16b: context packing's two-job prefix sum sorts copies×
+    // count rows (16 bytes each); one placement row out per document
+    "q120_context_packing",
+    // round 17: the incremental packing index replays bootstrap + two
+    // appends over the replicated corpus; output is the 3-row per-batch
+    // summary at any replication (batch cut = thirds of the doc_id
+    // range, and every rung populates all three ranges)
+    "q121_packing_index",
+    // round 17b: the window-segment map explodes copies× placement rows
+    // into Σ n_windows segments; row count is NOT derivable from copies
+    // alone (window alignment shifts per copy because total tokens mod
+    // capacity ≠ 0), so this leg checks execution, not an expectRows pin
+    "q122_window_segments",
+    // round 18: the same map from the STORED placement artifact —
+    // bootstraps the on-disk index once (session-cached), then the
+    // derivation is a map-side explode of the committed 48-byte/doc rows
+    "q123_window_segments_stored",
+    // round 18b: the packed-shard materializer moves the copies× token
+    // stream exactly once (slice map-side, one capacity-bounded
+    // groupBy(win), partitioned write) then digests the written
+    // artifact; the heaviest I/O leg in the suite by design — the
+    // output IS the training artifact
+    "q124_packed_shards",
+    // round 18c: multi-benchmark bloom — the per-benchmark bit-sets are
+    // replication-INVARIANT (verbatim copies add no eval shingles or
+    // sources) while the flagged train side grows copies×; one row per
+    // (train doc, benchmark)
+    "q125_multibench_bloom",
+    // round 18d: the per-benchmark FP audit replays q125's train side
+    // plus the exact-overlap broadcast join; same grain as q125
+    "q126_multibench_fp_audit",
+    // round 18d: format sniffing is pure map-side — one row per doc
+    // (the planted arm is doc_id mod |PlantTable|, so offset copies
+    // shift arms — the output stays one row per doc regardless)
+    "q127_format_sniff",
+    // round 19: the bloom sizing report — benchmark-grain aggregates of
+    // the memoized q125 flag relation; the benchmark universe and each
+    // benchmark's ladder rung are replication-INVARIANT (verbatim
+    // copies add no eval shingles), only the summed train counts grow
+    "q128_bloom_sizing")
+
+  /** The index rungs below the timed legs, run by their query names. */
+  private val Rungs = Seq("q114_chunk_index_buckets",
+    "q116_bucketed_index_summary", "q121_packing_index")
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1x")
     val copies = if (args.length > 1) args(1).toInt else 10
-    // extra args (dev loop only) restrict the run to the named queries
-    val only = args.drop(2).toSet
+    // extra args (dev loop only) restrict the run to the named legs
+    val only = Passes.resolve(args.drop(2).toSeq, Heavy ++ Rungs).toSet
     val src = "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Sessions.start(cpus)
@@ -57,156 +214,6 @@ object ScaleSmoke {
     operators.Dedup.minhashSignatures(spark, out).count()
     println(f"[scale] warmup (hub/shingles/sigs) ${(System.nanoTime() - w0) / 1e9}%8.2f s")
 
-    val heavy = Seq("q52_dup_clusters", "q22_minhash_signatures",
-      "q26_ngram_jaccard", "q25_simhash_groups", "q36_sessions",
-      "q23_minhash_neardups", "q27_embedding_neardups", "q53_simhash_hamming",
-      "q57_simhash64_hamming", "q54_dedup_survivors",
-      "q58_doc_repetition", "q59_split_contamination",
-      // round 5: cross-corpus near-dup (the 1e6 id offset preserves parity,
-      // so each mixed-parity near-dup pair collides 10×10 ways across the
-      // split; same-parity verbatim clusters stay on one side), centroid
-      // outliers (~5k-value sorted folds per (label,pos)), vocab growth
-      "q62_cross_corpus", "q64_label_outliers", "q66_vocab_growth",
-      "q70_collocations",
-      // round 8: shard packing (per-source prefix-sum windows over 10×
-      // rows), epoch mix (explode over the 10× doc set), BPE merge loop
-      // (3 full-corpus window passes), SemDeDup (components over 10×
-      // embedding edges — verbatim copies make every cluster 10× wider)
-      "q71_pack_shards", "q72_epoch_mix", "q73_bpe_merges",
-      "q74_semdedup_survivors",
-      // round 8b: duplicated-span coverage (per-shingle df over the 10×
-      // inverted index — verbatim copies push every shingle's df to ≥10),
-      // minhash calibration (band-collision candidates × signature join
-      // at 10× bucket width), quantized ANN (8 queries × 10× corpus scan)
-      "q76_dup_span_coverage", "q78_minhash_calibration",
-      "q77_knn_quantized",
-      // round 8c: the end-to-end corpus verdict (survivors + gopher +
-      // train→eval contamination, all over the 10× duplication skew),
-      // DSIR weights (bigram-bucket aggregates over the 10× stream),
-      // one Lloyd step (10× assignment through the min_by partial agg),
-      // token PageRank (two join+agg rounds over the 10× edge counts)
-      "q81_train_corpus", "q82_dsir_weights", "q83_kmeans_step",
-      "q84_token_pagerank",
-      // round 8d: the per-source report (aggregate over the 10× verdict),
-      // boilerplate prefixes (10× corpus pass + grouped window — verbatim
-      // copies drive every prefix's count to ≥10), dim stats (64 sorted
-      // folds over 10× vectors), length quantiles (per-source ranking
-      // window over 10× docs)
-      "q86_corpus_report", "q87_boilerplate_prefixes", "q88_dim_stats",
-      "q89_length_quantiles",
-      // round 8e: positional span runs over the 10× verified-pair set —
-      // the worst-case quadratic the verbatim duplication can build
-      "q90_shared_spans",
-      // round 8f: first-seen attribution (vocab-sized min-aggregate under
-      // 10× duplication), per-doc entropy folds, and the source matrix
-      // over the 10× pair population
-      "q91_doc_novelty", "q92_token_entropy", "q93_source_dup_matrix",
-      // byte-grain explode over the 10× corpus — the widest row blow-up
-      // in the suite (one row per payload byte)
-      "q94_payload_energy",
-      // triangle enumeration over the 10× pair population (the dense-clique
-      // worst case verbatim replication builds), and per-user gap medians
-      // over 10× users
-      "q95_dup_graph_stats", "q96_interarrival_median",
-      // round 8g: prototype selection (10× assignment through the bounded
-      // min-k partial agg) and the kNN vote (8 queries × 10× corpus scan)
-      "q97_cluster_sample", "q98_knn_classify",
-      // corpus-LM cross-entropy: vocab join + two per-doc folds over 10×
-      "q99_cross_entropy",
-      // round 9: conversion-latency cohort medians — one user-keyed window
-      // pass + a per-(day) percentile over 10× users
-      "q100_time_to_convert",
-      // round 12: sketch + PQ rungs. Bloom decontamination streams the
-      // replicated train side against the eval bit-set broadcast (the
-      // bit-set is replication-INVARIANT — verbatim copies add no new
-      // shingles, so the broadcast side stays byte-identical while the
-      // probed side grows); CMS cells absorb 10× df mass into the same
-      // 4×8192 grid; HLL registers must come out BIT-IDENTICAL to 1×
-      // (register = max over distinct hashes — replication adds none);
-      // PQ encodes 10× vectors through the broadcast codebook join
-      "q102_bloom_decontamination", "q103_cms_heavy_hitters",
-      "q104_hll_registers", "q105_knn_pq",
-      // round 12b: chunking rungs. q106 is pure map-side, so rows scale
-      // exactly linearly (chunk count is a function of each doc's text);
-      // q107 is the inverse stress — verbatim replication makes EVERY
-      // distinct chunk a duplicate group, so the report saturates at the
-      // base corpus's distinct-chunk-hash count and the aggregate eats
-      // copies× occurrences into a fixed-size output
-      "q106_doc_chunks", "q107_chunk_dedup",
-      // round 12c: histogram quantiles (the ≤256-cell-per-source grid
-      // absorbs copies× docs into the same fixed report) and the DSIR
-      // Gumbel draw (TakeOrdered over copies× keyed docs, 200 rows out)
-      "q108_histogram_quantiles", "q109_dsir_select",
-      // round 12d (this session's operators). q110 is pure map-side regex —
-      // linear by construction. q111 is the purge's worst case: verbatim
-      // replication makes EVERY window of copies 2..N a duplicate of copy
-      // 1's, so the drop lists cover almost the whole corpus (the
-      // drop-nearly-everything regime) while n_kept saturates at the base
-      // distinct-window count. q112 rides the same widened propagation as
-      // q52, then argmaxes over clusters that are copies× wider — and
-      // every former singleton becomes a cluster of its own copies
-      "q110_pii_redaction", "q111_chunk_purge", "q112_cluster_keepers",
-      // q113 under replication: the 1e6 id offset is even, so parity is
-      // preserved — the dump side is 2,500 odd docs × copies, every copy
-      // of an odd doc a within-dump dup family, every even-side window a
-      // corpus kill; kept saturates at the base dump's corpus-new set
-      "q113_cross_corpus_purge",
-      // round 14: recall calibration re-runs all four kNN rungs over the
-      // copies× vector base (the query set stays the 8 original vec_ids,
-      // so the output grain — 3 methods × 8 queries + 3 means — is
-      // replication-invariant while every rung's scan side grows)
-      "q115_ann_recall",
-      // round 15: the operating-point sweep scores all 15 (bits, radius)
-      // configs over the copies× scored-pair relation — same fixed grid
-      // grain at any replication; the auto-pick ranks that table per
-      // recall target (4 fixed rows)
-      "q117_ann_sweep", "q118_ann_autopick",
-      // round 16: the FP audit replays q102's replicated train side plus
-      // the exact-overlap broadcast semi-join; like q102 its eval-derived
-      // broadcast sides are replication-invariant while the probed side
-      // grows, and its row count tracks q102's exactly
-      "q119_bloom_fp_audit",
-      // round 16b: context packing's two-job prefix sum sorts copies×
-      // count rows (16 bytes each); one placement row out per document
-      "q120_context_packing",
-      // round 17: the incremental packing index replays bootstrap + two
-      // appends over the replicated corpus; output is the 3-row per-batch
-      // summary at any replication (batch cut = thirds of the doc_id
-      // range, and every rung populates all three ranges)
-      "q121_packing_index",
-      // round 17b: the window-segment map explodes copies× placement rows
-      // into Σ n_windows segments; row count is NOT derivable from copies
-      // alone (window alignment shifts per copy because total tokens mod
-      // capacity ≠ 0), so this leg checks execution, not an expectRows pin
-      "q122_window_segments",
-      // round 18: the same map from the STORED placement artifact —
-      // bootstraps the on-disk index once (session-cached), then the
-      // derivation is a map-side explode of the committed 48-byte/doc rows
-      "q123_window_segments_stored",
-      // round 18b: the packed-shard materializer moves the copies× token
-      // stream exactly once (slice map-side, one capacity-bounded
-      // groupBy(win), partitioned write) then digests the written
-      // artifact; the heaviest I/O leg in the suite by design — the
-      // output IS the training artifact
-      "q124_packed_shards",
-      // round 18c: multi-benchmark bloom — the per-benchmark bit-sets are
-      // replication-INVARIANT (verbatim copies add no eval shingles or
-      // sources) while the flagged train side grows copies×; one row per
-      // (train doc, benchmark)
-      "q125_multibench_bloom",
-      // round 18d: the per-benchmark FP audit replays q125's train side
-      // plus the exact-overlap broadcast join; same grain as q125
-      "q126_multibench_fp_audit",
-      // round 18d: format sniffing is pure map-side — one row per doc
-      // (the planted arm is doc_id mod |PlantTable|, so offset copies
-      // shift arms — the output stays one row per doc regardless)
-      "q127_format_sniff",
-      // round 19: the bloom sizing report — benchmark-grain aggregates of
-      // the memoized q125 flag relation; the benchmark universe and each
-      // benchmark's ladder rung are replication-INVARIANT (verbatim
-      // copies add no eval shingles), only the summed train counts grow
-      "q128_bloom_sizing")
-    val qs = SparkEntry.queries
     // Self-check where the row count is DERIVABLE from replication:
     // per-document / per-vector / per-user relations must have exactly
     // copies × the sf0.1 base cardinality (docs 5,000; vectors 2,000;
@@ -278,16 +285,16 @@ object ScaleSmoke {
         // all three thirds of the range are populated)
         "q121_packing_index" -> 3L)
     var bad = 0
-    heavy.filter(n => only.isEmpty || only(n)).foreach { name =>
-      val t0 = System.nanoTime()
-      val r = try {
-        val c = qs(name)(spark, out).count()
-        expectRows.get(name) match {
-          case Some(e) if e != c => bad += 1; s"rows=$c MISMATCH expected=$e"
-          case _ => s"rows=$c"
-        }
-      } catch { case e: Throwable => bad += 1; s"FAILED: ${e.getMessage.take(200)}" }
-      println(f"[scale] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  $r")
+    val rows = scala.collection.mutable.Map.empty[String, Long]
+    val counted: Passes.Sink = (name, df) => rows(name) = df.count()
+    Heavy.filter(n => only.isEmpty || only(n)).foreach { name =>
+      val t = Passes.step(spark, out, name, "scale", counted)
+      val r = (rows.get(name), expectRows.get(name)) match {
+        case (None, _) => bad += 1; "FAILED (see stderr)"
+        case (Some(c), Some(e)) if e != c => bad += 1; s"rows=$c MISMATCH expected=$e"
+        case (Some(c), _) => s"rows=$c"
+      }
+      println(f"[scale] $name%-24s ${t.secs}%8.2f s  $r")
     }
     require(bad == 0, s"$bad scale-smoke failures/row mismatches (see above)")
 

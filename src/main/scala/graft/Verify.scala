@@ -1,25 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).toSet)
+    val Array(sfDir, outDir) = args.take(2)
+    // extra args (dev loop only; the driver passes exactly two) restrict
+    // the dump to the named queries — oracle_sql.json still carries all
+    val only = Passes.resolve(args.drop(2).toSeq).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.start(cpus)
     new java.io.File(outDir).mkdirs()
-    // extra args (dev loop only; the driver passes exactly two) restrict
-    // the dump to the named queries — oracle_sql.json still carries all
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val parquet: Passes.Sink = (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    SparkEntry.queries.keys.filter(only.isEmpty || only(_))
+      .foreach(Passes.step(spark, sfDir, _, "verify", parquet))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -18,14 +18,10 @@ object ExplainDump {
       "usage: runMain graft.dev.ExplainDump <outDir> <suffix> <query> [query...]")
     val outDir = args(0)
     val suffix = args(1)
-    val names = args.drop(2).toSeq
+    // every name is checked BEFORE the session starts, so a misspelt one
+    // leaves no session up and no partial dump behind
+    val names = graft.Passes.resolve(args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // validate every name BEFORE starting the session (advice r21): an
-    // unknown name used to sys.error mid-loop with the session still up
-    // and partial dump files left behind
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}; " +
-      s"known: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val spark = graft.Sessions.start("4", logLevel = "ERROR")
     try {
       Files.createDirectories(Paths.get(outDir))

@@ -1149,6 +1149,16 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** q106/q107 chunking geometry — read by OracleSql so the DuckDB mirror
+    * can never desync from the Spark side.
+    */
+  val ChunkWidth = 64
+  val ChunkOverlap = 16
+  /** Packed-key base for the q107 keeper MIN; chunk_id < PackBase for any
+    * real document (chunks per doc ≈ tokens / stride).
+    */
+  val ChunkPackBase = 1000000L
+
   /** Fixed-window document chunking with overlap (q106) — the
     * embedding/RAG prep step every retrieval corpus runs: each doc's
     * ordered token stream cut into `width`-token windows advancing by
@@ -1168,16 +1178,6 @@ object TextAnalysis {
     * corpus tokens, so 100 TB chunks exactly like 100 MB — per partition,
     * independently.
     */
-  /** q106/q107 chunking geometry — read by OracleSql so the DuckDB mirror
-    * can never desync from the Spark side.
-    */
-  val ChunkWidth = 64
-  val ChunkOverlap = 16
-  /** Packed-key base for the q107 keeper MIN; chunk_id < PackBase for any
-    * real document (chunks per doc ≈ tokens / stride).
-    */
-  val ChunkPackBase = 1000000L
-
   def docChunks(spark: SparkSession, dir: String,
       width: Int = ChunkWidth, overlap: Int = ChunkOverlap): DataFrame =
     chunksOf(rawTokens(spark, dir), width, overlap)
@@ -1206,17 +1206,6 @@ object TextAnalysis {
         md5(concat_ws(" ", col("chunk"))).as("chunk_hash"))
   }
 
-  /** Chunk-grain duplicate report (q107) — the CCNet paragraph-hash dedup
-    * shape: group the q106 chunks by content hash, keep groups seen more
-    * than once, and name each group's canonical keeper (the minimum
-    * (doc_id, chunk_id), packed into one 64-bit key so MIN is a plain
-    * numeric aggregate in both engines — no min_by tie ambiguity). This
-    * is sub-document dedup as a pipeline would ship it: at 100 TB the
-    * shuffle carries 16-byte hashes + two longs per chunk, never text,
-    * and the duplicate report is the filter a training run applies to
-    * drop repeated boilerplate paragraphs while keeping their first
-    * occurrence.
-    */
   /** DSIR selection (q109) — the resampling step that closes the q82
     * score→select loop: draw the k documents a targeted data-selection
     * run would keep, sampling WITHOUT replacement proportionally to
@@ -1246,6 +1235,17 @@ object TextAnalysis {
       .orderBy("rnk")
   }
 
+  /** Chunk-grain duplicate report (q107) — the CCNet paragraph-hash dedup
+    * shape: group the q106 chunks by content hash, keep groups seen more
+    * than once, and name each group's canonical keeper (the minimum
+    * (doc_id, chunk_id), packed into one 64-bit key so MIN is a plain
+    * numeric aggregate in both engines — no min_by tie ambiguity). This
+    * is sub-document dedup as a pipeline would ship it: at 100 TB the
+    * shuffle carries 16-byte hashes + two longs per chunk, never text,
+    * and the duplicate report is the filter a training run applies to
+    * drop repeated boilerplate paragraphs while keeping their first
+    * occurrence.
+    */
   def chunkDuplicates(spark: SparkSession, dir: String): DataFrame = {
     val PackBase = ChunkPackBase
     docChunks(spark, dir)

@@ -69,10 +69,7 @@ class ArtifactSpec extends AnyFunSuite {
 
   test("the registry holds every artifact declared in src/main, with its class") {
     val Decl = """"(\w+\.\w+)",\s*Artifact\.(Index|Result)""".r
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val declared = scalaFiles(new java.io.File("src/main/scala")).flatMap { f =>
+    val declared = TestSpark.mainSources.flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       Decl.findAllMatchIn(src).map(m => m.group(1) -> m.group(2))
     }

@@ -53,18 +53,16 @@ class BenchEmissionSpec extends AnyFunSuite {
         "queries — driftcheck's util labels would go silent on driver rounds")
   }
 
-  test("sweepOrder: LPT heavy-first when parallel, pure alphabetical when sequential") {
-    val par = Bench.sweepOrder(8).map(_._1)
-    val seqOrder = Bench.sweepOrder(1).map(_._1)
-    assert(seqOrder === SparkEntry.queries.keys.toSeq.sorted)
-    assert(par.toSet === seqOrder.toSet, "same steps, different order")
+  test("sweepOrder: LPT heavy-first over the suite's steps") {
+    val order = Bench.sweepOrder
+    assert(order.sorted === SparkEntry.queries.keys.toSeq.sorted, "same steps, different order")
     // the heavy prefix: every known multi-second builder sorts before any
     // non-heavy step (q01 is the first light query alphabetically)
     val heavy = Set("q112", "q114", "q115", "q116", "q121", "q124")
     heavy.foreach { h =>
-      val at = par.indexWhere(_.startsWith(h + "_"))
+      val at = order.indexWhere(_.startsWith(h + "_"))
       assert(at >= 0, s"$h missing from the sweep order")
-      assert(at < par.indexWhere(_.startsWith("q01_")),
+      assert(at < order.indexWhere(_.startsWith("q01_")),
         s"$h must be enqueued before the light steps")
     }
   }

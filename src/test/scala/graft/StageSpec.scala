@@ -18,11 +18,8 @@ class StageSpec extends AnyFunSuite {
 
   test("no persist, checkpoint or unpersist call in src/main outside Stage.scala") {
     val Staging = """(?<!Stage\.)\b(localCheckpoint|persist\(|unpersist\(|StorageLevel|unpersistCheckpointRdds)""".r
-    def scalaFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(scalaFiles)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     val hits = for {
-      f <- scalaFiles(new java.io.File("src/main/scala"))
+      f <- TestSpark.mainSources
       src = TestSpark.stripComments(new String(Files.readAllBytes(f.toPath), "UTF-8"))
       (line, n) <- src.linesIterator.zipWithIndex
       m <- Staging.findFirstIn(line)

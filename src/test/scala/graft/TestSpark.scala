@@ -20,6 +20,14 @@ object TestSpark {
     spark.table(name)
   }
 
+  /** Every .scala file under src/main/scala: the source scans' input. */
+  def mainSources: Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles.toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(new java.io.File("src/main/scala"))
+  }
+
   /** `src` without its comments; string literals are kept whole, and so
     * are the line breaks inside block comments, so line numbers hold.
     */
