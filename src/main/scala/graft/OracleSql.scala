@@ -2317,7 +2317,7 @@ object OracleSql {
     }.mkString("(", " + ", ")")
 
   /** The k Bloom bit positions of `x`, comma-joined — mirrors
-    * Sketches.bloomPositions.
+    * Sketches.bloomRawPositionOf folded to the union filter's BloomBits.
     */
   private def bloomPosSql(x: String): String =
     (0 until graft.operators.Sketches.BloomK)

@@ -84,9 +84,9 @@ object Plans {
       "q101_token_counts_filescale" ->
         "reference-scale membership: the 235,886-line dictionary file survives as a BroadcastExchange feeding the left-semi BroadcastHashJoin (and the 668-line stop list its left-anti twin) — a few MB of strings, never a shuffled join over the corpus",
       "q102_bloom_decontamination" ->
-        "bloom decontamination (round 16 shape): the CACHED eval bit-set artifact (≤2^18 rows by construction) feeds k=4 BroadcastHashJoins over the train side's k position COLUMNS — one train scan, no explode, no shingle-grained Exchange; the only shuffles are the doc-grain partial/final aggregate and the edge join back to the train-doc universe",
+        "bloom decontamination: q125's flag kernel over the ONE union filter — the k RAW positions projected once per train shingle, the all-k-hit flag a map-side graft_bitset_contains probe of the packed 2^18-bit eval literal (no join carries a bit position); ONE partial/final groupBy(doc_id), and the only other joins are the edges (train membership semi-join, the one-row benchmark cross join, the left join back to the train-doc universe)",
       "q119_bloom_fp_audit" ->
-        "bloom FP audit: q102's plan plus the exact overlap — the distinct eval shingle set survives as a BroadcastExchange feeding a left-semi BroadcastHashJoin over one more train-side scan; every eval-derived side is broadcast (benchmark-bounded), the train side is never shuffled against eval data",
+        "bloom FP audit: q126's audit kernel at the union grain — q102's memoized flag relation left-joined to the exact overlap, where the distinct eval shingle set (tagged as the one union benchmark) survives as a BroadcastExchange feeding a BroadcastHashJoin over one more train-side scan; every eval-derived side is broadcast (benchmark-bounded), the train side is never shuffled against eval data",
       "q103_cms_heavy_hitters" ->
         "CMS heavy hitters: the report set comes from a distributed TakeOrdered over the CACHED df index artifact (50 rows), the 4×8192 cell grid from one partial-aggregated groupBy over the same relation, broadcast back for the 50-row estimate join — estimates are table probes, not a universe-wide aggregate",
       "q105_knn_pq" ->
@@ -138,7 +138,8 @@ object Plans {
       val plan = df.queryExecution.executedPlan.toString
       sb.append(s"\n## $name\n\n$why\n\n```\n")
       // 90 lines reaches the build-side branches of the deeper two-join
-      // plans (q102's pos-keyed semi-join sits below its doc-grain joins)
+      // plans (q119's broadcast exact-overlap leg sits below its
+      // doc-grain joins)
       sb.append(plan.linesIterator.take(90).mkString("\n"))
       sb.append("\n```\n")
     }

@@ -76,9 +76,9 @@ object ScaleSmoke {
     // pass + a per-(day) percentile over 10× users
     "q100_time_to_convert",
     // round 12: sketch + PQ rungs. Bloom decontamination streams the
-    // replicated train side against the eval bit-set broadcast (the
-    // bit-set is replication-INVARIANT — verbatim copies add no new
-    // shingles, so the broadcast side stays byte-identical while the
+    // replicated train side through map-side probes of the packed eval
+    // filter (replication-INVARIANT — verbatim copies add no new
+    // shingles, so the shipped filter stays byte-identical while the
     // probed side grows); CMS cells absorb 10× df mass into the same
     // 4×8192 grid; HLL registers must come out BIT-IDENTICAL to 1×
     // (register = max over distinct hashes — replication adds none);
@@ -120,10 +120,11 @@ object ScaleSmoke {
     // grain at any replication; the auto-pick ranks that table per
     // recall target (4 fixed rows)
     "q117_ann_sweep", "q118_ann_autopick",
-    // round 16: the FP audit replays q102's replicated train side plus
-    // the exact-overlap broadcast semi-join; like q102 its eval-derived
-    // broadcast sides are replication-invariant while the probed side
-    // grows, and its row count tracks q102's exactly
+    // round 16: the FP audit reads q102's memoized flags plus the
+    // exact-overlap broadcast join over the replicated train side (q126's
+    // kernel at the union grain); its eval-derived sides are
+    // replication-invariant while the probed side grows, and its row
+    // count tracks q102's exactly
     "q119_bloom_fp_audit",
     // round 16b: context packing's two-job prefix sum sorts copies×
     // count rows (16 bytes each); one placement row out per document
@@ -170,6 +171,82 @@ object ScaleSmoke {
   private val Rungs = Seq("q114_chunk_index_buckets",
     "q116_bucketed_index_summary", "q121_packing_index")
 
+  /** Row counts DERIVABLE from replication at `copies` × sf0.1, the
+    * legs' self-check: per-document / per-vector / per-user relations
+    * must have exactly copies × the sf0.1 base cardinality (docs 5,000;
+    * vectors 2,000; event users 15,000) — a wrong count here means the
+    * operator lost or duplicated rows under replication, not that it got
+    * slow.
+    */
+  private[graft] def expectRows(copies: Int): Map[String, Long] = Map(
+    "q22_minhash_signatures" -> 5000L, "q54_dedup_survivors" -> 5000L,
+    "q58_doc_repetition" -> 5000L,
+    "q72_epoch_mix" -> 5000L, "q74_semdedup_survivors" -> 2000L,
+    "q76_dup_span_coverage" -> 5000L, "q81_train_corpus" -> 5000L,
+    "q82_dsir_weights" -> 5000L, "q91_doc_novelty" -> 5000L,
+    "q92_token_entropy" -> 5000L, "q94_payload_energy" -> 5000L,
+    "q99_cross_entropy" -> 5000L,
+    // bloom output = one row per TRAIN doc (content-hash split is
+    // text-keyed, so every copy of a doc lands in the same split:
+    // 3,973 train docs per sf0.1 copy)
+    "q102_bloom_decontamination" -> 3973L,
+    // same grain as q102: one row per train doc
+    "q119_bloom_fp_audit" -> 3973L,
+    // one row per (train doc, benchmark): 3,973 train docs × the 20
+    // eval sources per sf0.1 copy (both factors replication-stable —
+    // content-hash split and verbatim copies)
+    "q125_multibench_bloom" -> (3973L * 20L),
+    // q126 shares q125's exact grain
+    "q126_multibench_fp_audit" -> (3973L * 20L),
+    // one sniff row per document
+    "q127_format_sniff" -> 5000L,
+    // one chunk row per (doc, window): 6,923 per sf0.1 copy
+    "q106_doc_chunks" -> 6923L,
+    // one scrub / purge row per document
+    "q110_pii_redaction" -> 5000L, "q111_chunk_purge" -> 5000L,
+    // one placement row per document
+    "q120_context_packing" -> 5000L,
+    // one row per INCOMING (odd doc_id) document
+    "q113_cross_corpus_purge" -> 2500L
+  ).map { case (k, v) => k -> v * copies } ++
+    // replication-INVARIANT outputs: fixed-size sketch reports must not
+    // scale with copies at all (q103 top-50; q104 (sources+1)·64
+    // register rows — identical registers, since verbatim copies add no
+    // distinct shingles; q105 8 queries × top-5)
+    Map("q103_cms_heavy_hitters" -> 50L,
+      "q104_hll_registers" -> 1344L,
+      "q105_knn_pq" -> 40L,
+      // q115: 3 methods × 8 query points + 3 per-method mean rows —
+      // the query set is the 8 original vec_ids at any replication
+      "q115_ann_recall" -> 27L,
+      // q117: one row per SweepConfigs entry, whatever the corpus size;
+      // q118: one row per PickTargets entry (every target satisfiable —
+      // the exhaustive config's recall is 1.0 by construction)
+      "q117_ann_sweep" -> 15L, "q118_ann_autopick" -> 4L) ++
+    // for copies ≥ 2 every one of the base corpus's 6,824 distinct
+    // chunk hashes appears `copies` times, so the duplicate report is
+    // exactly the distinct-chunk relation — saturated, not scaling
+    (if (copies >= 2) Map("q107_chunk_dedup" -> 6824L) else Map.empty) ++
+    // q52 at copies ≥ 2: every doc has a verbatim copy, so every doc sits
+    // in a cluster (at 1 copy only the 477 near-dup-clustered docs do)
+    (if (copies >= 2) Map("q52_dup_clusters" -> 5000L * copies) else Map.empty) ++
+    // q112 at copies ≥ 2: verbatim copies weld each base component's
+    // copies together and turn every former singleton into a cluster of
+    // its own copies, so components = base components (233 at sf0.1)
+    // + base unclustered docs (5,000 − 477) — invariant in `copies`
+    (if (copies >= 2) Map("q112_cluster_keepers" -> 4756L) else Map.empty) ++
+    // q108: one row per source (20 at sf0.1) whatever the corpus size;
+    // q109: the draw is exactly k = 200 rows by construction
+    Map("q108_histogram_quantiles" -> 20L, "q109_dsir_select" -> 200L,
+      // q128: one sizing row per benchmark (the 20 eval sources),
+      // whatever the replication — the filters are sized by DISTINCT
+      // eval shingles, which verbatim copies never add to
+      "q128_bloom_sizing" -> 20L,
+      // q121: one summary row per batch — the three-way doc_id-range
+      // cut holds at every replication (copies sit at 1e6 offsets, so
+      // all three thirds of the range are populated)
+      "q121_packing_index" -> 3L)
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/sf1x")
     val copies = if (args.length > 1) args(1).toInt else 10
@@ -214,82 +291,13 @@ object ScaleSmoke {
     operators.Dedup.minhashSignatures(spark, out).count()
     println(f"[scale] warmup (hub/shingles/sigs) ${(System.nanoTime() - w0) / 1e9}%8.2f s")
 
-    // Self-check where the row count is DERIVABLE from replication:
-    // per-document / per-vector / per-user relations must have exactly
-    // copies × the sf0.1 base cardinality (docs 5,000; vectors 2,000;
-    // event users 15,000) — a wrong count here means the operator lost
-    // or duplicated rows under replication, not that it got slow.
-    val expectRows: Map[String, Long] = Map(
-      "q22_minhash_signatures" -> 5000L, "q54_dedup_survivors" -> 5000L,
-      "q52_dup_clusters" -> 5000L, "q58_doc_repetition" -> 5000L,
-      "q72_epoch_mix" -> 5000L, "q74_semdedup_survivors" -> 2000L,
-      "q76_dup_span_coverage" -> 5000L, "q81_train_corpus" -> 5000L,
-      "q82_dsir_weights" -> 5000L, "q91_doc_novelty" -> 5000L,
-      "q92_token_entropy" -> 5000L, "q94_payload_energy" -> 5000L,
-      "q99_cross_entropy" -> 5000L,
-      // bloom output = one row per TRAIN doc (content-hash split is
-      // text-keyed, so every copy of a doc lands in the same split:
-      // 3,973 train docs per sf0.1 copy)
-      "q102_bloom_decontamination" -> 3973L,
-      // same grain as q102: one row per train doc
-      "q119_bloom_fp_audit" -> 3973L,
-      // one row per (train doc, benchmark): 3,973 train docs × the 20
-      // eval sources per sf0.1 copy (both factors replication-stable —
-      // content-hash split and verbatim copies)
-      "q125_multibench_bloom" -> (3973L * 20L),
-      // q126 shares q125's exact grain
-      "q126_multibench_fp_audit" -> (3973L * 20L),
-      // one sniff row per document
-      "q127_format_sniff" -> 5000L,
-      // one chunk row per (doc, window): 6,923 per sf0.1 copy
-      "q106_doc_chunks" -> 6923L,
-      // one scrub / purge row per document
-      "q110_pii_redaction" -> 5000L, "q111_chunk_purge" -> 5000L,
-      // one placement row per document
-      "q120_context_packing" -> 5000L,
-      // one row per INCOMING (odd doc_id) document
-      "q113_cross_corpus_purge" -> 2500L
-    ).map { case (k, v) => k -> v * copies } ++
-      // replication-INVARIANT outputs: fixed-size sketch reports must not
-      // scale with copies at all (q103 top-50; q104 (sources+1)·64
-      // register rows — identical registers, since verbatim copies add no
-      // distinct shingles; q105 8 queries × top-5)
-      Map("q103_cms_heavy_hitters" -> 50L,
-        "q104_hll_registers" -> 1344L,
-        "q105_knn_pq" -> 40L,
-        // q115: 3 methods × 8 query points + 3 per-method mean rows —
-        // the query set is the 8 original vec_ids at any replication
-        "q115_ann_recall" -> 27L,
-        // q117: one row per SweepConfigs entry, whatever the corpus size;
-        // q118: one row per PickTargets entry (every target satisfiable —
-        // the exhaustive config's recall is 1.0 by construction)
-        "q117_ann_sweep" -> 15L, "q118_ann_autopick" -> 4L) ++
-      // for copies ≥ 2 every one of the base corpus's 6,824 distinct
-      // chunk hashes appears `copies` times, so the duplicate report is
-      // exactly the distinct-chunk relation — saturated, not scaling
-      (if (copies >= 2) Map("q107_chunk_dedup" -> 6824L) else Map.empty) ++
-      // q112 at copies ≥ 2: verbatim copies weld each base component's
-      // copies together and turn every former singleton into a cluster of
-      // its own copies, so components = base components (233 at sf0.1)
-      // + base unclustered docs (5,000 − 477) — invariant in `copies`
-      (if (copies >= 2) Map("q112_cluster_keepers" -> 4756L) else Map.empty) ++
-      // q108: one row per source (20 at sf0.1) whatever the corpus size;
-      // q109: the draw is exactly k = 200 rows by construction
-      Map("q108_histogram_quantiles" -> 20L, "q109_dsir_select" -> 200L,
-        // q128: one sizing row per benchmark (the 20 eval sources),
-        // whatever the replication — the filters are sized by DISTINCT
-        // eval shingles, which verbatim copies never add to
-        "q128_bloom_sizing" -> 20L,
-        // q121: one summary row per batch — the three-way doc_id-range
-        // cut holds at every replication (copies sit at 1e6 offsets, so
-        // all three thirds of the range are populated)
-        "q121_packing_index" -> 3L)
+    val expect = expectRows(copies)
     var bad = 0
     val rows = scala.collection.mutable.Map.empty[String, Long]
     val counted: Passes.Sink = (name, df) => rows(name) = df.count()
     Heavy.filter(n => only.isEmpty || only(n)).foreach { name =>
       val t = Passes.step(spark, out, name, "scale", counted)
-      val r = (rows.get(name), expectRows.get(name)) match {
+      val r = (rows.get(name), expect.get(name)) match {
         case (None, _) => bad += 1; "FAILED (see stderr)"
         case (Some(c), Some(e)) if e != c => bad += 1; s"rows=$c MISMATCH expected=$e"
         case (Some(c), _) => s"rows=$c"

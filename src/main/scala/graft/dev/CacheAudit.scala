@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Storage-footprint audit of every persisted relation the library keeps
   * per (session, dir) — the round-6 cache-budget check. Runs Bench's INDEX
-  * fill list one step at a time, then the three queries that fill result
-  * memos (q23 verified pairs, q52 cluster labels, q63 source overlap),
+  * fill list one step at a time, then five queries that fill result memos
+  * (q23 verified pairs, q52 cluster labels, q63 source overlap, and the
+  * Bloom flag memo of each gate: q102 union, q125 per-benchmark),
   * and prints each step's storage DELTA (new cached RDDs and their
   * memory/disk bytes), so each relation's cost is attributed, beside the
   * broadcasts each newly cached artifact's plan retains
@@ -48,6 +49,8 @@ object CacheAudit {
     step("pairs (via q23)")(Dedup.minhashNearDups(spark, sfDir).count())
     step("clusterLabels (via q52)")(Dedup.dupClusters(spark, sfDir).count())
     step("sourceOverlap (via q63)")(TextAnalysis.sourceOverlap(spark, sfDir).count())
+    step("flagMemo#eval (via q102)")(Sketches.bloomDecontamination(spark, sfDir).count())
+    step("flagMemo#bench (via q125)")(Sketches.multiBenchDecontamination(spark, sfDir).count())
     println(f"CACHEAUDIT TOTAL mem=${totalMem / 1024} KiB disk=${totalDisk / 1024} KiB " +
       s"broadcasts=$totalBroadcasts " +
       f"(storage pool ≈ ${spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 1024 / 1024} MiB)")

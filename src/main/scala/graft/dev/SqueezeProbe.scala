@@ -18,10 +18,16 @@ import org.apache.spark.sql.functions._
   *      (`SPARK_DRIVER_MEM=2g`) to constrict execution memory too.
   *   2. NORMAL: the stock Sessions config.
   *
-  * It prints per-query row counts and an order-independent value checksum
-  * (xor-fold of xxhash64 over the stringified row) for both sessions and a
-  * final SQUEEZE_OK / SQUEEZE_MISMATCH verdict. Survival = no OOM under
-  * (1); greenness = checksums equal across (1) and (2).
+  * Each query runs through `graft.Passes.step` with a checksum sink (no
+  * memo eviction between queries, so q52 reads what q15/q43 left cached).
+  * It prints per-query row counts, an order-independent value checksum
+  * (xor-fold of xxhash64 over the stringified row) and the step's wall
+  * seconds for both sessions, then a final SQUEEZE_OK / SQUEEZE_MISMATCH
+  * verdict. Survival = every step completes under (1) (a failed step
+  * prints rows=-1 and forces MISMATCH); greenness = checksums equal
+  * across (1) and (2).
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.dev.SqueezeProbe
   */
 object SqueezeProbe {
   private val Queries = Seq("q15_postings", "q43_top_terms", "q52_dup_clusters")
@@ -34,14 +40,20 @@ object SqueezeProbe {
     (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 
+  /** One `Passes.step` per query with a checksum sink; a query that threw
+    * (the step prints its `[squeeze <tag>]` line) has no checksum.
+    */
   private def runAll(spark: SparkSession, sfDir: String,
-      tag: String): Map[String, (Long, Long)] =
+      tag: String): Map[String, Option[(Long, Long)]] = {
+    val sums = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    val sink: graft.Passes.Sink = (name, df) => sums(name) = checksum(df)
     Queries.map { name =>
-      val t0 = System.nanoTime()
-      val (n, s) = checksum(graft.SparkEntry.queries(name)(spark, sfDir))
-      println(f"SQUEEZE $tag $name%-18s rows=$n%-8d sum=$s%-22d ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      name -> (n, s)
+      val t = graft.Passes.step(spark, sfDir, name, s"squeeze ${tag.trim}", sink)
+      val (n, s) = sums.getOrElse(name, (-1L, 0L))
+      println(f"SQUEEZE $tag $name%-18s rows=$n%-8d sum=$s%-22d ${t.secs}%.3f s")
+      name -> sums.get(name)
     }.toMap
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,7 +77,7 @@ object SqueezeProbe {
       s.stop()
       r
     }
-    val ok = Queries.forall(q => squeezed(q) == normal(q))
+    val ok = Queries.forall(q => squeezed(q).isDefined && squeezed(q) == normal(q))
     println(if (ok) "SQUEEZE_OK all checksums match" else "SQUEEZE_MISMATCH")
     if (!ok) sys.exit(1)
   }

@@ -238,6 +238,17 @@ object Dedup {
         .select("doc_id", "rep_id")
     }
 
+  /** `rel`'s rows of verbatim representatives when `collapse` (the
+    * representative-collapsed ladder), `rel` unchanged otherwise.
+    */
+  private def repsOnly(spark: SparkSession, dir: String, collapse: Boolean,
+      rel: DataFrame): DataFrame =
+    if (!collapse) rel
+    else rel.join(
+      verbatimReps(spark, dir)
+        .filter(col("doc_id") === col("rep_id")).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+
   /** Expand representative-level verified pairs back to all member pairs:
     * cross pairs inherit the reps' (inter, uni) verbatim; within-group
     * pairs are identical sets (inter = uni = shingle count; groups whose
@@ -538,13 +549,7 @@ object Dedup {
     */
   private def calibrationRows(spark: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
-    val all = minhashBands(spark, dir)
-    val bands =
-      if (!collapse) all
-      else all.join(
-        verbatimReps(spark, dir)
-          .filter(col("doc_id") === col("rep_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
+    val bands = repsOnly(spark, dir, collapse, minhashBands(spark, dir))
     // the same materialize-then-prune device as repNearDupPairsUncached
     // (r22, §3.2 + §5): checkpoint the pair relation once (the band
     // self-join is the expensive subtree), prune the shingle relation to
@@ -616,12 +621,7 @@ object Dedup {
       case Some(cap) => bandsOfSignatures(
         signaturesOfShingles(cappedShingles(spark, dir, cap)))
     }
-    val bands =
-      if (!collapse) all
-      else all.join(
-        verbatimReps(spark, dir)
-          .filter(col("doc_id") === col("rep_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
+    val bands = repsOnly(spark, dir, collapse, all)
     // MATERIALIZE the band-self-join candidate relation once (r22, VERDICT
     // r21 item 1; guide §3.2 + §5): the r21 semi-join pre-filter was
     // rejected only because `cands` was an unmaterialized subtree that the
@@ -665,12 +665,7 @@ object Dedup {
     val collapse = hasVerbatimDups(spark, dir)
     val all = maxShingleDf.fold(shingles(spark, dir))(
       cappedShingles(spark, dir, _))
-    val sh =
-      if (!collapse) all
-      else all.join(
-        verbatimReps(spark, dir)
-          .filter(col("doc_id") === col("rep_id")).select("doc_id"),
-        Seq("doc_id"), "left_semi")
+    val sh = repsOnly(spark, dir, collapse, all)
     val verified =
       if (maxShingleDf.isEmpty) {
         // Candidates and intersections fall out of the SAME posting-list

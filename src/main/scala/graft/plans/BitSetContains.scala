@@ -7,8 +7,9 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Membership of a LONG bit position in a fixed bit-set carried by the
-  * expression itself — the Bloom-filter probe of the decontamination gates
-  * (q102's streaming twin, q125's per-benchmark flags).
+  * expression itself — the Bloom-filter probe of every decontamination
+  * gate (q102's union filter, q125's per-benchmark filters, and their
+  * streaming form), reached only through `Sketches.bloomHit`.
   *
   * Why a custom Catalyst Expression (SURVEY §7.3 escape hatch): the
   * serialized filter must ride the PLAN, not a join. Two composable forms
@@ -45,7 +46,7 @@ case class BitSetContains(child: Expression, bits: Array[Long], tag: String)
   // power-of-two so the position folds in with one AND — callers pass
   // positions in a space the set's size divides (the 24-bit raw md5
   // value, or a coarser power-of-two reduction of it) and the mask IS
-  // the mod, exactly the bloomPositionOf arithmetic
+  // the mod, `raw mod m` for every filter width
   require(bits.length > 0 && (bits.length & (bits.length - 1)) == 0,
     s"bit-set must be a positive power-of-two word count, got ${bits.length}")
 

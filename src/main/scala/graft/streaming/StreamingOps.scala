@@ -117,12 +117,13 @@ object StreamingOps {
     * hex length) or `Seq(name -> Sketches.evalBitsHex(...))` for the q102
     * union gate; the blobs are built once in batch and shipped as plan
     * literals. Each doc's DISTINCT 5-gram shingles (array_distinct == the
-    * batch relation's distinct (doc, shingle)) are hashed ONCE through the
-    * shared raw position definition (Sketches.bloomRawPositionOf), and
-    * each benchmark contributes only its own bit tests. No shuffle, no
-    * watermark, no state: re-benchmarking rebuilds blobs, never re-reads
-    * the train stream. BIT-IDENTICAL to batch q125, and to q102 with the
-    * eval blob (StreamingSpec pins both row-for-row).
+    * batch relation's distinct (doc, shingle)) are tested through the
+    * batch gates' one all-k-hit predicate (Sketches.bloomHit over
+    * Sketches.bloomRawPositionOf), each benchmark contributing only its
+    * own bit tests. No shuffle, no watermark, no state: re-benchmarking
+    * rebuilds blobs, never re-reads the train stream. BIT-IDENTICAL to
+    * batch q125, and to q102 with the eval blob (StreamingSpec pins both
+    * row-for-row).
     */
   def bloomFlagMultiStream(docs: DataFrame,
       benchBits: Seq[(String, String)]): DataFrame = {
@@ -133,17 +134,12 @@ object StreamingOps {
       .select(col("doc_id").cast("long").as("doc_id"), sh.as("_sh"))
       .select(col("doc_id"), size(col("_sh")).cast("long").as("n_shingles"),
         explode(array(benchBits.map { case (b, hex) =>
-          // hexBitWords derives (and validates) each blob's width from
-          // its length — the per-benchmark filters are sized individually
-          // (r19), and BitSetContains masks the shared RAW positions down
-          // to each filter's own rung, the same fold the batch gate uses
-          val bits = Sketches.hexBitWords(hex)
+          // the batch gates' own all-k-hit predicate: each blob's width
+          // is its length, and the shared RAW positions fold to it
           struct(lit(b).as("benchmark"),
-            size(filter(col("_sh"), s =>
-              (0 until Sketches.BloomK)
-                .map(i => graft.plans.BitSetContains(
-                  Sketches.bloomRawPositionOf(s, i), bits, b))
-                .reduce(_ && _))).cast("long").as("n_flagged"))
+            size(filter(col("_sh"), s => Sketches.bloomHit(
+              i => Sketches.bloomRawPositionOf(s, i), b, hex)))
+              .cast("long").as("n_flagged"))
         }: _*)).as("bf"))
       .select(col("doc_id"), col("bf.benchmark"),
         col("n_shingles"), col("bf.n_flagged"))

@@ -73,7 +73,7 @@ class ArtifactSpec extends AnyFunSuite {
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       Decl.findAllMatchIn(src).map(m => m.group(1) -> m.group(2))
     }
-    assert(declared.size >= 36)
+    assert(declared.size >= 35)
     assert(Caches.registry.map(a => a.name -> a.kind.toString).sorted === declared.sorted)
   }
 

@@ -87,11 +87,14 @@ class SketchesSpec extends AnyFunSuite {
   }
 
   test("benchEvalBits retains no broadcast while cached") {
-    // the per-benchmark sizes ride as literal columns: a broadcast join in
-    // the cached plan would pin a hash relation for the artifact's lifetime
+    // the per-benchmark sizes ride as literal columns, and the union
+    // bit-set reads the cached eval-shingle relation: a broadcast join in
+    // a cached plan would pin a hash relation for the artifact's lifetime
     Sketches.benchEvalBits(spark, sf).count()
-    assert(Caches.retainedBroadcasts(spark, sf).toMap.get("Sketches.benchBitsCache")
-      === Some(0))
+    Sketches.bloomEvalBits(spark, sf).count()
+    val retained = Caches.retainedBroadcasts(spark, sf).toMap
+    assert(retained.get("Sketches.benchBitsCache") === Some(0))
+    assert(retained.get("Sketches.bitsCache") === Some(0))
   }
 
   test("sizedBloomBits: the power-of-two ladder with factor-16 headroom") {
@@ -208,18 +211,22 @@ class SketchesSpec extends AnyFunSuite {
   }
 
   test("q125's flags probe the filters map-side — no join carries a bit-set") {
-    val whole = Sketches.multiBenchDecontamination(spark, sf)
-      .queryExecution.optimizedPlan.toString
-    // the memoized relation embeds the executed AQE plan, which prints a
-    // Final AND an Initial copy — count joins in the FINAL section only
-    val plan = whole.split("== Initial Plan ==").head
-    // the probes fired as the native expression (not a fallback form)
-    assert(plan.contains("graft_bitset_contains"), s"probe missing:\n$plan")
-    // exactly the three EDGE joins (train membership semi-join, the
-    // doc × benchmark universe, the stack join) — every per-benchmark
-    // filter rides an expression, never a join relation
-    val joins = "Join".r.findAllIn(plan).size
-    assert(joins === 3, s"expected 3 edge joins, got $joins:\n$plan")
+    // both gates run the one flag kernel: q125 over every benchmark's
+    // filter, q102 over the single union filter
+    for ((q, df) <- Seq("q125" -> Sketches.multiBenchDecontamination(spark, sf),
+        "q102" -> Sketches.bloomDecontamination(spark, sf))) {
+      val whole = df.queryExecution.optimizedPlan.toString
+      // the memoized relation embeds the executed AQE plan, which prints a
+      // Final AND an Initial copy — count joins in the FINAL section only
+      val plan = whole.split("== Initial Plan ==").head
+      // the probes fired as the native expression (not a fallback form)
+      assert(plan.contains("graft_bitset_contains"), s"$q probe missing:\n$plan")
+      // exactly the three EDGE joins (train membership semi-join, the
+      // doc × benchmark universe, the stack join) — every filter rides an
+      // expression, never a join relation
+      val joins = "Join".r.findAllIn(plan).size
+      assert(joins === 3, s"$q: expected 3 edge joins, got $joins:\n$plan")
+    }
   }
 
   test("per-benchmark fp audit: exact ≤ flagged per benchmark, grain = q125") {
