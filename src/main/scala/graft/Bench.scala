@@ -370,6 +370,7 @@ object Bench {
       () => Similarity.vectorIndex(spark, dir).count(),
       () => TokenPipeline.tokenDictionary(spark, dir).count(),
       () => TokenPipeline.docAggregates(spark, dir).count(),
+      () => Hierarchy.pages(spark, dir).count(),
       () => TextAnalysis.hashSplit(spark, dir).count(),
       () => TextAnalysis.tfidfRaw(spark, dir).count(),
       () => TextAnalysis.rawTokens(spark, dir).count(),

@@ -14,8 +14,8 @@ object Caches {
     * the registry never depends on which operators have run.
     */
   def registry: Seq[Artifact[_]] = {
-    val _ = (Tables, operators.TokenPipeline, operators.Dedup, operators.Similarity,
-      operators.Sketches, operators.TextAnalysis, operators.Packing)
+    val _ = (Tables, operators.TokenPipeline, operators.Hierarchy, operators.Dedup,
+      operators.Similarity, operators.Sketches, operators.TextAnalysis, operators.Packing)
     Artifact.all
   }
 

@@ -8,8 +8,9 @@ import org.apache.spark.storage.StorageLevel
 /** The one place a relation is materialised and freed. Nothing else in the
   * engine persists, checkpoints or unpersists (StageSpec checks the sources).
   *
-  *  - [[keep]]: lazy MEMORY_AND_DISK persist, the form every
-  *    `Artifact.relation` fill takes.
+  *  - [[keep]]: lazy MEMORY_AND_DISK persist, the form an
+  *    `Artifact.relation` fill takes unless its build staged it with
+  *    [[now]] (the page cache: rows without a retained plan).
   *  - [[now]]: eager local checkpoint, for a relation read by several
   *    branches of one query or by the next round of a loop; it cuts lineage.
   *  - [[free]]: drop a relation's persist and the blocks of every
@@ -20,6 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *  - the artifact that holds it (its eviction runs [[free]] on the value,
   *    which reaches every checkpoint the build staged under it);
   *  - the loop that supersedes it (propagation rounds, BPE checkpoints);
+  *  - the build that staged it as scratch, once the build's own staged
+  *    result no longer reads it (the verified-pair memo's candidates);
   *  - the ContextCleaner, once the query frame that reads it is dropped.
   *
   * One mode, local checkpoint: staged blocks live in executor storage only.
@@ -63,7 +66,8 @@ object Stage {
       try body(df) finally df.unpersist()
     }
 
-  private def held(df: DataFrame): Boolean =
+  /** Does `df` hold its blocks: persisted, or staged by [[now]]? */
+  private[graft] def held(df: DataFrame): Boolean =
     df.storageLevel != StorageLevel.NONE || staged(df.queryExecution.analyzed)
 
   private def staged(p: LogicalPlan): Boolean = p match {

@@ -650,9 +650,12 @@ object Dedup {
       .distinct()
     val shP = Stage.now(shingles(spark, dir)
       .join(candDocs, Seq("doc_id"), "left_semi"))
-    // the memo holds both checkpoints: evicting it frees them (Stage.free
-    // reaches every checkpoint under the memo's plan)
-    jaccardVerify(spark, dir, cands, shingleSet = Some(shP))
+    // stage the verified pairs themselves, so both scratch checkpoints are
+    // freed at fill time; the memo holds only the pairs' own blocks
+    val pairs = Stage.now(jaccardVerify(spark, dir, cands, shingleSet = Some(shP)))
+    Stage.free(cands)
+    Stage.free(shP)
+    pairs
   }
 
   /** Exact n-gram Jaccard near-dups with candidates = pairs sharing ≥1
@@ -885,10 +888,12 @@ object Dedup {
     * above the union-find bound. `vertsD` is the distinct seed (doc_id,
     * component_id = doc_id) of `nVerts` rows. Each round's labels are
     * staged with `Stage.now` and the round they supersede is freed, so on
-    * return only the final round's blocks remain.
+    * return only the final round's blocks remain. `maxRounds` bounds the
+    * rounds (component diameter; near-dup clusters are tiny): a graph still
+    * changing after that many fails the call.
     */
   private[graft] def propagationLoop(vertsD: DataFrame, sym0: DataFrame,
-      nVerts: Long): DataFrame = {
+      nVerts: Long, maxRounds: Int = 50): DataFrame = {
     // localCheckpoint (eager) both materializes the round's labels AND
     // truncates lineage — without it each round's plan stacks on the last
     // and replanning cost compounds with the iteration count.
@@ -917,7 +922,6 @@ object Dedup {
     var labels = Stage.now(org.apache.spark.sql.GraftBridge.inSession(vertsD, sess))
     var converged = false
     var rounds = 0
-    val maxRounds = 50 // component diameter bound; near-dup clusters are tiny
     while (!converged && rounds < maxRounds) {
       // The jump is GATED to round 3+: near-dup components are
       // overwhelmingly tiny cliques that converge in 2 plain rounds, where
@@ -948,7 +952,8 @@ object Dedup {
       rounds += 1
     }
     // fail loudly rather than return non-minimal labels for a pathological
-    // long-chain component
+    // long-chain component, and leave no round's blocks behind
+    if (!converged) Stage.free(labels)
     require(converged, s"label propagation did not converge in $maxRounds rounds")
     // hand the converged labels back bound to the CALLER's session — the
     // loop session (and its conf) ends with this call; the checkpointed

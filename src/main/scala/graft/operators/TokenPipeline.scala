@@ -243,34 +243,24 @@ object TokenPipeline {
     * field of the `wikibooks` collection contract (main.go:47–62 bson tags)
     * that survives SURVEY §1.4's bug triage — stats, link counts, hierarchy,
     * child ids, norm, and the token multiset as a canonical sorted string.
+    * Stats, hierarchy and tokens each come from their INDEX artifact, so
+    * the plan scans `documents` once (docStatsRaw's doc list).
     * A user of the reference switching to this library materializes this
     * relation and writes it with Sources.writeParquet (or a Mongo connector
     * — sink choice is orthogonal, SURVEY §2 O20).
     */
   def wikibookRecords(spark: SparkSession, dir: String): DataFrame = {
-    val stats = docStatsRaw(spark, dir)
-    val links = Hierarchy.parentLinksRaw(spark, dir)
-    val children = Hierarchy.childAggFrom(links)
-      .select(col("parent_id").as("doc_id"), col("count_children"), col("child_ids"))
-    val extLinks = Tables.documents(spark, dir).select(
-      col("doc_id"),
-      graft.functions.TextFns.countSubstr(col("text"), "data").cast("long")
-        .as("count_external_links"))
     val tokens = docTokenCounts(spark, dir)
       .groupBy("doc_id")
       .agg(array_join(rendered(col("token"),
           concat(col("token"), lit(":"), col("qty").cast("string"))),
         ",").as("tokens"))
-    stats
-      .join(links.select("doc_id", "page_loc", "parent_id"), Seq("doc_id"))
-      .join(children, Seq("doc_id"), "left")
-      .join(extLinks, Seq("doc_id"))
+    docStatsRaw(spark, dir)
+      .join(Hierarchy.pages(spark, dir), Seq("doc_id"))
       .join(tokens, Seq("doc_id"), "left")
       .select(
-        col("doc_id"), col("page_loc"), col("parent_id"),
-        coalesce(col("count_children"), lit(0L)).as("count_children"),
-        coalesce(col("child_ids"), lit("")).as("child_ids"),
-        col("count_unique_words"), col("total_tokens"),
+        col("doc_id"), col("page_loc"), col("parent_id"), col("count_children"),
+        col("child_ids"), col("count_unique_words"), col("total_tokens"),
         col("count_external_links"), col("euclidian_norm"),
         coalesce(col("tokens"), lit("")).as("tokens"))
       .orderBy("doc_id")

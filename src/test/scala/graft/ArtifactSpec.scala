@@ -130,12 +130,12 @@ class ArtifactSpec extends AnyFunSuite {
         .filterNot(_.keys.exists(k => k == key || k.startsWith(key + "#")))
         .map(_.name)
       assert(unfilled === Nil)
-      // and every filled relation holds its blocks: the fill persisted it
+      // and every filled relation holds its blocks: the fill persisted it,
+      // or its build staged it with Stage.now
       val unkept = for {
         a <- Caches.registry if a.kind == Artifact.Index
         (k, df: org.apache.spark.sql.Dataset[_]) <- a.filled
-        if (k == key || k.startsWith(key + "#")) &&
-          df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+        if (k == key || k.startsWith(key + "#")) && !Stage.held(df.toDF())
       } yield a.name
       assert(unkept === Nil)
     } finally Caches.clear(s)

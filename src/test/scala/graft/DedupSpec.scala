@@ -668,6 +668,35 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("the verified-pair memo holds only its own staged blocks") {
+    // the fill stages the pairs and frees its two scratch checkpoints
+    // (candidates, pruned shingles); the INDEX bases are filled first
+    Dedup.minhashNearDups(spark, sf).count()
+    Caches.clearResultMemos(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Dedup.minhashNearDups(spark, sf).count()
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).size === 1)
+  }
+
+  test("propagationLoop's round cap: a 16-vertex chain passes at cap 6, throws at cap 5") {
+    // the chain converges in R = 6 rounds: the two plain rounds carry the
+    // minimum two hops, the pointer-jumping rounds 3–5 reach the far end,
+    // and round 6 changes no label (measured; the default cap is 50)
+    val r = 6
+    val e = (1L to 16L).sliding(2).map(s => (s(0), s(1))).toSeq.toDF("doc_a", "doc_b")
+    val sym = e.union(e.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val seed = (1L to 16L).toDF("doc_id").withColumn("component_id", col("doc_id"))
+    val labels = Dedup.propagationLoop(seed, sym, 16L, maxRounds = r)
+    try assert(labels.as[(Long, Long)].collect().toSet === (1L to 16L).map(v => (v, 1L)).toSet)
+    finally Stage.free(labels)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalArgumentException](
+      Dedup.propagationLoop(seed, sym, 16L, maxRounds = r - 1))
+    assert(err.getMessage.contains(s"did not converge in ${r - 1} rounds"), err.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.keySet -- before === Set.empty,
+      "a call that fails frees every round it staged")
+  }
+
   test("dupGraphStats/sharedSpans: collapse ≡ doc-level enumeration on verbatim copies") {
     // Same planted shape as the minhashNearDups collapse test: doc 0 near-
     // dups doc 1, docs 2..5 verbatim copies of 0 (K6 component), 6/7 a

@@ -108,8 +108,10 @@ class TokenPipelineSpec extends AnyFunSuite {
     TokenPipeline.docTokenCounts(spark, sf).count()
     TokenPipeline.tokenDictionary(spark, sf).count()
     TokenPipeline.docAggregates(spark, sf).count()
+    Hierarchy.pages(spark, sf).count()
     val held = Caches.retainedBroadcasts(spark, sf).toMap
-    Seq("TokenPipeline.cache", "TokenPipeline.dictCache", "TokenPipeline.statsCache")
+    Seq("TokenPipeline.cache", "TokenPipeline.dictCache", "TokenPipeline.statsCache",
+      "Hierarchy.pageCache")
       .foreach(n => assert(held.get(n) === Some(0), s"$n: ${held.get(n)} broadcasts"))
     // the helper does see pinned broadcasts: the DataFrame-list form,
     // persisted under a throwaway key, holds one per membership join
@@ -192,6 +194,33 @@ class TokenPipelineSpec extends AnyFunSuite {
       when($"doc_id" < 10, $"parent_id" =!= -1L)
         .otherwise($"parent_id" =!= ($"doc_id" / 10).cast("long"))).count()
     assert(bad === 0)
+  }
+
+  // The page cache's premise: paths are unique and each page has at most
+  // one parent row only if every document id is present and distinct, so
+  // q19 can read a page's children off its own row. Checked on both
+  // committed test scale factors.
+  for (dir <- Seq(sf, sf.replace("sf0.001", "sf0.01"))) {
+    test(s"documents.doc_id is non-null and unique at ${dir.split('/').last}") {
+      val r = Tables.documents(spark, dir).agg(
+        count(lit(1)).as("n"),
+        count(when($"doc_id".isNull, 1)).as("nulls"),
+        countDistinct($"doc_id").as("distinct")).as[(Long, Long, Long)].head()
+      assert(r._1 > 0, "documents is empty")
+      assert(r._2 === 0L, "documents.doc_id has NULLs")
+      assert(r._3 === r._1, "documents.doc_id has duplicates")
+    }
+  }
+
+  test("q18 and q19 read the page cache only; q48 scans documents once") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    def documentScans(query: String): Int =
+      SparkEntry.queries(query)(spark, sf).queryExecution.sparkPlan
+        .collectWithSubqueries { case s: FileSourceScanExec => s }
+        .count(_.relation.location.rootPaths.exists(_.getName == "documents.parquet"))
+    assert(documentScans("q18_doc_hierarchy") === 0)
+    assert(documentScans("q19_doc_children") === 0)
+    assert(documentScans("q48_wikibook_records") === 1)
   }
 
   test("etl renderings, tokenize and child ids compile without CodegenFallback") {
